@@ -34,6 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_miint_spark import storage
 from duckdb_miint_spark.functions import flags as FL
 from duckdb_miint_spark.functions.cigar import (
     alignment_query_coverage,
@@ -253,61 +254,23 @@ FROM ({ALN_SQL})
 """
 
 
-def _woltka_base(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The materialized woltka dedup base, or None (callers run the
-    collect_set dedup on the plain/bucketed aln per query)."""
-    from duckdb_miint_spark.storage import graft_fingerprint, serve_bucketed
-
+def _lineitem_view(spark: SparkSession, sf_dir: str) -> None:
     T(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return serve_bucketed(
-        spark,
-        "graft_b_woltka_base",
-        graft_fingerprint(sf_dir, WOLTKA_BASE_SQL, ["lineitem"]),
-    )
 
 
-def _aln_ranked(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The materialized phase-0 island reduction, or None (callers run
-    the full compress_intervals_islands pipeline on the plain aln)."""
-    from duckdb_miint_spark.storage import graft_fingerprint, serve_bucketed
+def _aln(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The SAM-shaped alignments relation, derived from ``lineitem``.
 
-    T(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return serve_bucketed(
-        spark,
-        "graft_b_aln_ranked",
-        graft_fingerprint(sf_dir, ALN_RANKED_SQL, ["lineitem"]),
-    )
-
-
-def _aln(spark: SparkSession, sf_dir: str, bucket: str | None = None) -> DataFrame:
-    """The SAM-shaped alignments relation.
-
-    ``bucket`` names an opt-in bucketed MATERIALIZATION of this derived
-    table (written by tools/bucketed_ab.py via storage.write_bucketed):
-    ``"read"`` = bucketed on read_id (feeds woltka's per-read dedup
-    aggregate — its one big exchange disappears; measured 2-5× at sf2 and
-    stable, now beating the DuckDB oracle). Served only when the session
-    has ``spark.graft.bucketedLayout=true`` AND the catalog table exists —
-    the default path stays the plain derivation, whose plan-shape tests
-    assert parquet pushdown on the raw lineitem scan. A ``"ref"``
-    (reference-key) materialization for the island-window consumers was
-    tried and reverted — measured sf2 NEGATIVE (see
-    compress_intervals_flat), kept out so it isn't retried."""
-    T(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    if bucket is not None:
-        from duckdb_miint_spark.storage import graft_fingerprint, serve_bucketed
-
-        # Fingerprint = source dir + the exact derivation SQL + the source
-        # file signature, so a snapshot written from another sf_dir, by an
-        # older ALN_SQL, or against a since-regenerated lineitem is never
-        # served (ADVICE r8/r9: the derived table drifts in three ways).
-        served = serve_bucketed(
-            spark,
-            f"graft_b_aln_{bucket}",
-            graft_fingerprint(sf_dir, ALN_SQL, ["lineitem"]),
-        )
-        if served is not None:
-            return served
+    Its read_id-bucketed materialization is the catalog graft
+    ``graft_b_aln_read`` (built by storage.build_graft_layout), which the
+    woltka consumers serve through storage.serve — their per-read dedup
+    aggregate loses its big exchange (measured 2-5× at sf2). Every other
+    consumer reads this plain derivation, whose plan-shape tests assert
+    parquet pushdown on the raw lineitem scan. A reference-key
+    materialization for the island-window consumers was tried and
+    reverted — measured sf2 NEGATIVE (see compress_intervals_flat), kept
+    out so it isn't retried."""
+    _lineitem_view(spark, sf_dir)
     return spark.sql(ALN_SQL)
 
 
@@ -417,7 +380,8 @@ def compress_intervals_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference was negative — decoding the fat table cost more than
     # deriving it. This materializes the ~60x-narrower reduced relation
     # instead, and skips the dedup aggregate entirely.)
-    ranked = _aln_ranked(spark, sf_dir)
+    _lineitem_view(spark, sf_dir)
+    ranked = storage.serve(spark, sf_dir, "graft_b_aln_ranked")
     if ranked is not None:
         return islands_from_reduced(ranked, ["reference"]).orderBy("reference", "start")
     aln = _aln(spark, sf_dir)
@@ -474,11 +438,14 @@ def q_woltka_ogu_per_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan → sort-free window COUNT → one aggregate) when current, else
     the read-bucketed aln (collect_set dedup, no exchange), else the
     plain derivation."""
-    base = _woltka_base(spark, sf_dir)
+    _lineitem_view(spark, sf_dir)
+    base = storage.serve(spark, sf_dir, "graft_b_woltka_base")
     if base is not None:
         out = woltka_ogu_per_sample_from_base(base, fixed_point=True)
     else:
-        aln = _aln(spark, sf_dir, bucket="read")
+        aln = storage.serve(spark, sf_dir, "graft_b_aln_read")
+        if aln is None:
+            aln = _aln(spark, sf_dir)
         out = woltka_ogu_per_sample(aln, "sample_id", "read_id", fixed_point=True)
     # no F.round here: the fixed-point fold already emits the exact
     # 6-dp value (re-rounding the double re-opened the half-boundary
@@ -516,11 +483,14 @@ ORDER BY feature_id
 def q_woltka_ogu(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Woltka OGU counts, sample-agnostic (miint_macros.hpp:80-100).
     Fixed-point fold in the gate — see q_woltka_ogu_per_sample."""
-    base = _woltka_base(spark, sf_dir)
+    _lineitem_view(spark, sf_dir)
+    base = storage.serve(spark, sf_dir, "graft_b_woltka_base")
     if base is not None:
         out = woltka_ogu_from_base(base, fixed_point=True)
     else:
-        aln = _aln(spark, sf_dir, bucket="read")
+        aln = storage.serve(spark, sf_dir, "graft_b_aln_read")
+        if aln is None:
+            aln = _aln(spark, sf_dir)
         out = woltka_ogu(aln, "read_id", fixed_point=True)
     return bounded_sort(
         out.select("feature_id", "value"), "feature_id"
@@ -566,7 +536,8 @@ def q_genome_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Graft path: same ranked-reduction serving as compress_intervals_flat
     # (the r8 full-aln reference-bucketed serving stays a recorded
     # negative; this serves the reduced relation instead).
-    ranked = _aln_ranked(spark, sf_dir)
+    _lineitem_view(spark, sf_dir)
+    ranked = storage.serve(spark, sf_dir, "graft_b_aln_ranked")
     islands = (
         islands_from_reduced(ranked, ["reference"]) if ranked is not None else None
     )

@@ -19,7 +19,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_miint_spark import storage
 from duckdb_miint_spark.pipeline.dedup import (
+    DEFAULT_NUM_PERM,
+    DEFAULT_SHINGLE,
     exact_dedup_groups,
     minhash_signatures,
     near_dup_pairs,
@@ -81,17 +84,6 @@ SELECT doc_id, md5(text) AS content_hash FROM documents
 """
 
 
-def _doc_hashes(spark: SparkSession, sf_dir: str):
-    """The materialized content-hash graft, or None."""
-    from duckdb_miint_spark.storage import graft_fingerprint, serve_bucketed
-
-    return serve_bucketed(
-        spark,
-        "graft_b_doc_hashes",
-        graft_fingerprint(sf_dir, DOC_HASHES_SQL, ["documents"]),
-    )
-
-
 @register(
     "dedup_exact_groups",
     oracle="""
@@ -111,7 +103,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (graft_b_doc_hashes, bucketed on content_hash), so the query never
     touches document text and the groupBy rides the bucket partitioning
     exchange-free."""
-    pre = _doc_hashes(spark, sf_dir)
+    pre = storage.serve(spark, sf_dir, "graft_b_doc_hashes")
     if pre is not None:
         return (
             pre.groupBy("content_hash")
@@ -174,7 +166,9 @@ def q_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     xxhash64 band stream. Same (b=16, r=1) band structure either way;
     the exact-Jaccard verify is identical, so the pair set is too."""
     docs = T(spark, sf_dir, "documents")
-    out = near_dup_pairs(docs, threshold=0.9, _bands=_lsh_index(spark, sf_dir))
+    out = near_dup_pairs(
+        docs, threshold=0.9, _bands=storage.serve(spark, sf_dir, "graft_b_lsh_index")
+    )
     return out.select("id1", "id2", F.round("jaccard", 6).alias("jaccard")).orderBy("id1", "id2")
 
 
@@ -232,7 +226,7 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Graft path: stats precomputed at layout build by the identical
     token_stats derivation (graft_b_doc_tokens — tokenize-at-ingest);
     the query is a scan + order of the stats table, no tokenization."""
-    pre = _doc_tokens(spark, sf_dir)
+    pre = storage.serve(spark, sf_dir, "graft_b_doc_tokens")
     if pre is not None:
         return pre.select(
             "doc_id", "n_ws_tokens", "n_re_tokens", "n_chars_tok", "avg_token_len"
@@ -882,7 +876,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact-Jaccard-verified pair graph, and both band sources are
     # (b=16, r=1) banded MinHash with the same cutoff).
     pairs = near_dup_pairs(
-        docs, threshold=0.9, _bands=_lsh_index(spark, sf_dir)
+        docs, threshold=0.9, _bands=storage.serve(spark, sf_dir, "graft_b_lsh_index")
     ).select("id1", "id2")
     return label_documents(docs, pairs).orderBy("doc_id")
 
@@ -1175,7 +1169,7 @@ def q_training_set_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same ingest-time band-index serving as lsh_near_dup_pairs /
     # dedup_components — the pair-set contract is identical.
     pairs = near_dup_pairs(
-        docs, threshold=0.9, _bands=_lsh_index(spark, sf_dir)
+        docs, threshold=0.9, _bands=storage.serve(spark, sf_dir, "graft_b_lsh_index")
     ).select("id1", "id2")
     canon = label_documents(docs, pairs).filter("is_canonical").select("doc_id")
     selected = (
@@ -1534,7 +1528,7 @@ def q_ann_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         emb.filter(F.col("vec_id") < 5),
         k=10,
-        corpus_codes=_embeddings_q8(spark, sf_dir),
+        corpus_codes=storage.serve(spark, sf_dir, "graft_b_embeddings_q8"),
     )
     return out.withColumn("rank", F.col("rank").cast("long")).orderBy("query_id", "rank")
 
@@ -1646,18 +1640,6 @@ FROM embeddings
 """
 
 
-def _embeddings_q8(spark: SparkSession, sf_dir: str):
-    """The materialized int8-code graft, or None (callers quantize on
-    the fly with the numpy kernel)."""
-    from duckdb_miint_spark.storage import graft_fingerprint, serve_bucketed
-
-    return serve_bucketed(
-        spark,
-        "graft_b_embeddings_q8",
-        graft_fingerprint(sf_dir, EMBEDDINGS_Q8_SQL, ["embeddings"]),
-    )
-
-
 # Tokenize-at-ingest: per-document token statistics computed ONCE at
 # layout build by the SAME pipeline.text.token_stats derivation the
 # plain path runs (a Python builder, not a SQL restatement — the
@@ -1681,17 +1663,6 @@ def _build_doc_tokens(spark: SparkSession, sf_dir: str):
     )
 
 
-def _doc_tokens(spark: SparkSession, sf_dir: str):
-    """The materialized per-document token-stats graft, or None."""
-    from duckdb_miint_spark.storage import graft_fingerprint, serve_bucketed
-
-    return serve_bucketed(
-        spark,
-        "graft_b_doc_tokens",
-        graft_fingerprint(sf_dir, DOC_TOKENS_IDENTITY, ["documents"]),
-    )
-
-
 # Materialized PQ layout: codebooks (the trained model, M·K rows) and
 # codes (M small ints per vector) written at layout-build time — the
 # FAISS-style production ANN artifact: search reads codes + model, never
@@ -1712,9 +1683,7 @@ _PQ_FIT_CACHE: dict[str, list] = {}
 
 
 def _pq_build_key(sf_dir: str) -> str:
-    from duckdb_miint_spark.storage import graft_fingerprint
-
-    return graft_fingerprint(sf_dir, PQ_CODEBOOKS_IDENTITY, ["embeddings"])
+    return storage.graft_fingerprint(sf_dir, PQ_CODEBOOKS_IDENTITY, ["embeddings"])
 
 
 def _build_pq_codebooks(spark: SparkSession, sf_dir: str):
@@ -1740,18 +1709,9 @@ def _pq_layout(spark: SparkSession, sf_dir: str):
     different model than the served codebooks would be silently wrong,
     so both tables must carry current fingerprints."""
     from duckdb_miint_spark.pipeline.pq import codebooks_from_df
-    from duckdb_miint_spark.storage import graft_fingerprint, serve_bucketed
 
-    books_df = serve_bucketed(
-        spark,
-        "graft_b_pq_codebooks",
-        graft_fingerprint(sf_dir, PQ_CODEBOOKS_IDENTITY, ["embeddings"]),
-    )
-    codes = serve_bucketed(
-        spark,
-        "graft_b_pq_codes",
-        graft_fingerprint(sf_dir, PQ_CODES_IDENTITY, ["embeddings"]),
-    )
+    books_df = storage.serve(spark, sf_dir, "graft_b_pq_codebooks")
+    codes = storage.serve(spark, sf_dir, "graft_b_pq_codes")
     if books_df is None or codes is None:
         return None, None
     return codebooks_from_df(books_df), codes
@@ -1920,7 +1880,9 @@ _INCR_REKEY = 1_000_000
 # per-bucket groupBy rides the layout exchange-free. Row-wise per doc,
 # so refresh appends just the new docs' signatures (the "banded index
 # the refresh path maintains"). Identity versions the builder.
-LSH_INDEX_IDENTITY = "lsh_index:num_perm=16,shingle=3;minhash_long-v1"
+LSH_INDEX_IDENTITY = (
+    f"lsh_index:num_perm={DEFAULT_NUM_PERM},shingle={DEFAULT_SHINGLE};minhash_long-v1"
+)
 
 
 def _build_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1928,17 +1890,6 @@ def _build_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_miint_spark.pipeline.dedup import minhash_long
 
     return minhash_long(spark.table("documents"))
-
-
-def _lsh_index(spark: SparkSession, sf_dir: str):
-    """The materialized banded-index graft, or None."""
-    from duckdb_miint_spark.storage import graft_fingerprint, serve_bucketed
-
-    return serve_bucketed(
-        spark,
-        "graft_b_lsh_index",
-        graft_fingerprint(sf_dir, LSH_INDEX_IDENTITY, ["documents"]),
-    )
 
 
 def _incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1983,7 +1934,7 @@ def q_dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_miint_spark.pipeline.dedup import incremental_exact
     from duckdb_miint_spark.storage import GRAIN_ROWS_PROP, _stored_prop
 
-    pre = _doc_hashes(spark, sf_dir)
+    pre = storage.serve(spark, sf_dir, "graft_b_doc_hashes")
     corpus_rows = None
     if pre is not None:
         corpus_hashes = pre.filter(F.col("doc_id") % 10 != 7)
@@ -2055,7 +2006,7 @@ def q_dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = T(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 10 != 7)
-    idx = _lsh_index(spark, sf_dir)
+    idx = storage.serve(spark, sf_dir, "graft_b_lsh_index")
     if idx is not None:
         idx = idx.filter(F.col("id") % 10 != 7)
     out = incremental_near_dup(

@@ -16,6 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from duckdb_miint_spark import storage
 from duckdb_miint_spark.registry import bounded_sort, register
 from duckdb_miint_spark.session import read_table
 
@@ -48,18 +49,6 @@ FROM orders JOIN customer ON o_custkey = c_custkey
 """
 
 
-def _orders_cnat(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The bucketed orders⋈customer graft, or None (callers fall back to
-    the plain two-table join)."""
-    from duckdb_miint_spark.storage import graft_fingerprint, serve_bucketed
-
-    return serve_bucketed(
-        spark,
-        "graft_b_orders_cnat",
-        graft_fingerprint(sf_dir, ORDERS_CNAT_SQL, ["orders", "customer"]),
-    )
-
-
 # Lineitem-grain denormalization: the star's FK chain lineitem→orders→
 # customer pre-joined onto the big fact, carrying exactly the order- and
 # customer-side attributes the star queries read. Both hops are N:1
@@ -81,17 +70,6 @@ JOIN customer ON o_custkey = c_custkey
 """
 
 
-def _lineitem_cnat(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The bucketed lineitem⋈orders⋈customer graft, or None."""
-    from duckdb_miint_spark.storage import graft_fingerprint, serve_bucketed
-
-    return serve_bucketed(
-        spark,
-        "graft_b_lineitem_cnat",
-        graft_fingerprint(sf_dir, LINEITEM_CNAT_SQL, ["lineitem", "orders", "customer"]),
-    )
-
-
 # Materialized JSON parse: events with props parsed ONCE at layout-build
 # time into the typed column the queries read. A production 100 TB events
 # table parses at ingest — per-query try_parse_json of the same 6M
@@ -102,17 +80,6 @@ SELECT event_id, user_id, ts, event_type, value,
        try_variant_get(try_parse_json(props), '$.k', 'bigint') AS k
 FROM events
 """
-
-
-def _events_parsed(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The materialized-parse events graft, or None."""
-    from duckdb_miint_spark.storage import graft_fingerprint, serve_bucketed
-
-    return serve_bucketed(
-        spark,
-        "graft_b_events_parsed",
-        graft_fingerprint(sf_dir, EVENTS_PARSED_SQL, ["events"]),
-    )
 
 
 # Ingest-time rollups (VERDICT r11 #1): the materialized-view analogue
@@ -180,50 +147,6 @@ GROUP BY word
 """
 
 
-def _events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The materialized (hour, event_type) rollup graft, or None."""
-    from duckdb_miint_spark.storage import graft_fingerprint, serve_bucketed
-
-    return serve_bucketed(
-        spark,
-        "graft_b_events_hourly",
-        graft_fingerprint(sf_dir, EVENTS_HOURLY_ROLLUP_SQL, ["events"]),
-    )
-
-
-def _orders_prio_cust(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The materialized (priority, custkey) grain graft, or None."""
-    from duckdb_miint_spark.storage import graft_fingerprint, serve_bucketed
-
-    return serve_bucketed(
-        spark,
-        "graft_b_orders_prio_cust",
-        graft_fingerprint(sf_dir, ORDERS_PRIO_CUST_SQL, ["orders"]),
-    )
-
-
-def _lineitem_pricing(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The materialized pricing-summary grain graft, or None."""
-    from duckdb_miint_spark.storage import graft_fingerprint, serve_bucketed
-
-    return serve_bucketed(
-        spark,
-        "graft_b_lineitem_pricing",
-        graft_fingerprint(sf_dir, LINEITEM_PRICING_SQL, ["lineitem"]),
-    )
-
-
-def _word_counts(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The materialized (word) frequency rollup graft, or None."""
-    from duckdb_miint_spark.storage import graft_fingerprint, serve_bucketed
-
-    return serve_bucketed(
-        spark,
-        "graft_b_word_counts",
-        graft_fingerprint(sf_dir, WORD_COUNTS_SQL, ["documents"]),
-    )
-
-
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.ts is parquet TIMESTAMP(MICROS) — native to Spark's reader.
 
@@ -270,7 +193,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-valued doubles, so the fold is exact in any order, and the
     re-merge also absorbs duplicate grain rows from incremental append
     refreshes (storage.refresh_graft_layout)."""
-    pre = _lineitem_pricing(spark, sf_dir)
+    pre = storage.serve(spark, sf_dir, "graft_b_lineitem_pricing")
     if pre is not None:
         g = pre.filter(F.col("l_shipdate") <= "1998-09-02 00:00:00")
         return (
@@ -343,7 +266,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = T(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1995-03-15 00:00:00")
     pc = cents("l_extendedprice")
     dc = cents("l_discount")
-    lic = _lineitem_cnat(spark, sf_dir)
+    lic = storage.serve(spark, sf_dir, "graft_b_lineitem_cnat")
     if lic is not None:
         joined = lic.filter(
             (F.col("l_shipdate") > "1995-03-15 00:00:00")
@@ -357,7 +280,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("revenue"), "l_orderkey")
             .limit(10)
         )
-    owc = _orders_cnat(spark, sf_dir)
+    owc = storage.serve(spark, sf_dir, "graft_b_orders_cnat")
     if owc is not None:
         orders = owc.filter(
             (F.col("o_orderdate") < "1995-03-15 00:00:00")
@@ -427,8 +350,8 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = T(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     pc = cents("l_extendedprice")
     dc = cents("l_discount")
-    lic = _lineitem_cnat(spark, sf_dir)
-    owc = None if lic is not None else _orders_cnat(spark, sf_dir)
+    lic = storage.serve(spark, sf_dir, "graft_b_lineitem_cnat")
+    owc = None if lic is not None else storage.serve(spark, sf_dir, "graft_b_orders_cnat")
     if lic is not None:
         # Best layout: the lineitem-grain denorm carries o_orderdate and
         # c_nationkey, so the fact joins NOTHING its own size — the date
@@ -526,7 +449,7 @@ def window_running_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     no window sort (r10 A/B at sf10: 2.0-3.7 s vs 4.7-5.4 s plain; the
     residual is the final total-order materialization of the 6M-row
     output)."""
-    evp = _events_parsed(spark, sf_dir)
+    evp = storage.serve(spark, sf_dir, "graft_b_events_parsed")
     ev = evp if evp is not None else read_events(spark, sf_dir)
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     return (
@@ -568,7 +491,7 @@ def distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     and only <=5 partial rows per partition reach the priority-level
     fold — the data-sized first aggregate, the query's whole cost
     (PERF.md r9-r11 decompositions), is paid at layout build."""
-    pre = _orders_prio_cust(spark, sf_dir)
+    pre = storage.serve(spark, sf_dir, "graft_b_orders_prio_cust")
     if pre is not None:
         # merge the grain: incremental refresh appends the new slice's
         # PARTIAL (priority, custkey) counts, so the same pair can occur
@@ -652,7 +575,7 @@ def explode_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     VOCABULARY-sized grain into a TakeOrdered(20). The re-merge groupBy
     rides the word-bucketed layout (no exchange) and also absorbs
     partial counts appended by incremental refresh."""
-    wc = _word_counts(spark, sf_dir)
+    wc = storage.serve(spark, sf_dir, "graft_b_word_counts")
     if wc is not None:
         return (
             wc.groupBy("word")
@@ -700,7 +623,7 @@ def json_event_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout-build time (the parse-at-ingest shape of a production events
     table), so the per-query cost collapses to a 2-column scan plus a
     tiny aggregate — no JSON parse in the query at all."""
-    evp = _events_parsed(spark, sf_dir)
+    evp = storage.serve(spark, sf_dir, "graft_b_events_parsed")
     if evp is not None:
         ev = evp
     else:
@@ -794,7 +717,7 @@ def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # map stage (per-row date_trunc + cents) was this query's whole cost
     # (PERF.md r9-r11); cents sums are order-free integers, so the
     # rollup is exact, not approximate.
-    rolled = _events_hourly_rollup(spark, sf_dir)
+    rolled = storage.serve(spark, sf_dir, "graft_b_events_hourly")
     if rolled is not None:
         # merge the grain (see distinct_counts): appended refresh slices
         # carry partial (h, event_type) rows; exchange-free re-aggregate.

@@ -260,15 +260,14 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tests assert parquet pushdown on the raw scans, and at cluster scale
     inputs are many-file / many-row-group so the repair is moot.
     """
-    # Opt-in bucketed layout: when spark.graft.bucketedLayout=true and a
-    # catalog table graft_b_<name> exists (written by
-    # storage.write_bucketed, e.g. via tools/bucketed_ab.py), serve that
-    # instead of the plain parquet file. Joins/aggregations on the bucket
-    # key then run with NO Exchange on the bucketed side — the
-    # 100×-scale layout recommendation for fact-to-fact joins
-    # (orders ⋈ lineitem); see PERF.md "bucketed-layout A/B".
-    from duckdb_miint_spark.storage import graft_fingerprint, serve_bucketed
-
+    # Opt-in bucketed layout: when spark.graft.bucketedLayout=true and
+    # the catalog graft graft_b_<name> (a plain copy re-bucketed on the
+    # join key, see storage.graft_catalog) is current, serve that instead
+    # of the plain parquet file. Joins/aggregations on the bucket key then
+    # run with NO Exchange on the bucketed side — the 100×-scale layout
+    # recommendation for fact-to-fact joins (orders ⋈ lineitem); see
+    # PERF.md "bucketed-layout A/B". Tables with no graft skip the check.
+    #
     # NEVER cache a bucketed table. The pin repair exists for
     # single-row-group files whose scan can't parallelize —
     # a bucketed table is n_buckets files and never has that
@@ -279,14 +278,13 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # (outputOrdering), reinserting per-task Sorts under every
     # SMJ. Measured at sf2: q3 on a cached bucketed lineitem
     # ran 11-17 s vs 0.8-1.5 s on the native bucketed scan.
-    # The fingerprint (abs sf_dir + source file mtime/size) guards against
-    # serving a snapshot written from a DIFFERENT source dir (ADVICE r8)
-    # or against source files since regenerated in place (ADVICE r9).
-    bucketed = serve_bucketed(
-        spark, f"graft_b_{name}", graft_fingerprint(sf_dir, name, [name])
-    )
-    if bucketed is not None:
-        return bucketed
+    from duckdb_miint_spark import storage
+
+    graft = f"graft_b_{name}"
+    if graft in storage.graft_catalog():
+        bucketed = storage.serve(spark, sf_dir, graft)
+        if bucketed is not None:
+            return bucketed
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.parquet(path)
     pin = _pin_bytes()

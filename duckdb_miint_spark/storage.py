@@ -23,8 +23,12 @@ vs the shuffled join.
 from __future__ import annotations
 
 import hashlib
+import os
 import re
+import shutil
+from contextlib import contextmanager
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 # Table property carrying the layout identity of a bucketed graft table.
@@ -53,11 +57,9 @@ PENDING_PROP = "graft.pending_append"
 GRAIN_ROWS_PROP = "graft.grain_rows"
 # Below this many rows a graft is served coalesce(1): a single-task
 # scan+aggregate over ~200k narrow rows runs in low tens of ms, under
-# the multi-stage dispatch floor it replaces.
+# the multi-stage dispatch floor it replaces. Grafts whose catalog entry
+# sets ``tiny_serve=False`` are always served parallel.
 TINY_GRAIN_ROWS = 200_000
-# Per-table opt-out of tiny-grain serving (Graft.tiny_serve=False),
-# persisted so the reader needs no catalog lookup.
-TINY_SERVE_PROP = "graft.tiny_serve"
 
 
 def layout_fingerprint(*parts: object) -> str:
@@ -88,8 +90,6 @@ def source_signature(sf_dir: str, tables: list[str] | tuple) -> str:
     directory-shaped tables). Changing ANY source file — including an
     in-place regeneration under the same path — changes the signature,
     and with it the graft fingerprint."""
-    import os
-
     parts: list[str] = []
     for t in sorted(tables):
         path = os.path.join(sf_dir, f"{t}.parquet")
@@ -110,8 +110,6 @@ def source_signature(sf_dir: str, tables: list[str] | tuple) -> str:
 def graft_fingerprint(sf_dir: str, identity: object, source_tables: list[str] | tuple) -> str:
     """The fingerprint every graft reader/writer uses: source dir +
     table-or-derivation identity + source file signature."""
-    import os
-
     return layout_fingerprint(
         os.path.abspath(sf_dir), identity, source_signature(sf_dir, source_tables)
     )
@@ -121,11 +119,13 @@ def serve_bucketed(spark: SparkSession, table: str, fingerprint: str) -> DataFra
     """The catalog table ``table`` iff the bucketed layout is opted in
     (``spark.graft.bucketedLayout=true``), the table exists, AND its
     stored ``graft.fingerprint`` equals ``fingerprint`` — else None
-    (callers fall back to the plain derivation). All catalog access is
-    best-effort: any failure means "not served"."""
+    (callers fall back to the plain derivation). A table that is missing,
+    or dropped between the existence check and the property read (the
+    drop/rename window of a compaction), is "not served"; any other
+    error propagates."""
+    if spark.conf.get("spark.graft.bucketedLayout", "false") != "true":
+        return None
     try:
-        if spark.conf.get("spark.graft.bucketedLayout", "false") != "true":
-            return None
         if not spark.catalog.tableExists(table):
             return None
         # one catalog round-trip for ALL properties (fingerprint + grain
@@ -138,36 +138,27 @@ def serve_bucketed(spark: SparkSession, table: str, fingerprint: str) -> DataFra
         if props.get(FINGERPRINT_PROP) != fingerprint:
             return None
         df = spark.table(table)
-        # tiny-grain fast path: plan dim-sized grains as ONE partition
-        # (SinglePartition satisfies every ClusteredDistribution, so the
-        # consumer's re-merge runs single-stage with zero exchanges and
-        # zero multi-task dispatch). Threshold env-tunable; the stored
-        # count keeps the decision honest as the grain grows.
-        import os
-
-        tiny = int(os.environ.get("SPARK_GRAFT_TINY_GRAIN", str(TINY_GRAIN_ROWS)))
-        rows_prop = props.get(GRAIN_ROWS_PROP)
-        if props.get(TINY_SERVE_PROP) == "false":
-            rows_prop = None
-        else:
-            # The CATALOG's tiny_serve flag also gates the fast path
-            # (ADVICE r13): a table materialized BEFORE its catalog
-            # entry opted out carries a stale "true" property and a
-            # still-valid fingerprint, so the stored property alone
-            # would keep coalesce(1)-serving a consumer the flag was
-            # turned off for (e.g. the pq_codes mapInPandas scorer).
-            g = graft_catalog().get(table)
-            if g is not None and not g.tiny_serve:
-                rows_prop = None
-        if tiny > 0 and rows_prop is not None:
-            try:
-                if 0 < int(rows_prop) <= tiny:
-                    return df.coalesce(1)
-            except ValueError:
-                pass
-        return df
-    except Exception:  # noqa: BLE001 — catalog access is best-effort
+    except AnalysisException:
         return None
+    # tiny-grain fast path: plan dim-sized grains as ONE partition
+    # (SinglePartition satisfies every ClusteredDistribution, so the
+    # consumer's re-merge runs single-stage with zero exchanges and zero
+    # multi-task dispatch). The stored count keeps the decision honest
+    # as the grain grows; the catalog's tiny_serve flag opts a graft out
+    # (e.g. the pq_codes mapInPandas scorer).
+    g = graft_catalog().get(table)
+    rows = props.get(GRAIN_ROWS_PROP) or ""
+    if (g is None or g.tiny_serve) and rows.isdigit() and 0 < int(rows) <= TINY_GRAIN_ROWS:
+        return df.coalesce(1)
+    return df
+
+
+def serve(spark: SparkSession, sf_dir: str, name: str) -> DataFrame | None:
+    """The catalog graft ``name`` when it is current for ``sf_dir``, else
+    None — the one way a consumer reads a graft. Identity and sources
+    come from :func:`graft_catalog`, so they are written down once."""
+    g = graft_catalog()[name]
+    return serve_bucketed(spark, name, graft_fingerprint(sf_dir, g.identity, g.sources))
 
 
 class Graft:
@@ -216,6 +207,14 @@ class Graft:
         # serializes the per-bucket file opens (measured 0.77x on
         # explode_word_counts at sf2)
         self.tiny_serve = tiny_serve
+
+    def derive(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        """This graft's rows over the registered source temp views."""
+        if self.sql is not None:
+            return spark.sql(self.sql)
+        if self.builder is not None:
+            return self.builder(spark, sf_dir)
+        return spark.table(self.sources[0])
 
 
 def graft_catalog() -> dict[str, Graft]:
@@ -418,6 +417,50 @@ def graft_catalog() -> dict[str, Graft]:
     }
 
 
+def _selected(tables: list[str] | None) -> dict[str, Graft]:
+    """{name: Graft} for the named catalog grafts, or all of them."""
+    catalog = graft_catalog()
+    return {name: catalog[name] for name in (catalog if tables is None else tables)}
+
+
+def _default_buckets(spark: SparkSession) -> int:
+    return (
+        int(os.environ.get("SPARK_GRAFT_BUCKETS", "0"))
+        or spark.sparkContext.defaultParallelism
+    )
+
+
+def _register_source(spark: SparkSession, sf_dir: str, table: str) -> None:
+    spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet")).createOrReplaceTempView(table)
+
+
+@contextmanager
+def _source_views(spark: SparkSession, sf_dir: str, grafts: dict[str, Graft]):
+    """Every source table of ``grafts`` registered as a temp view over
+    ``sf_dir`` for the duration of the block — what ``Graft.derive``
+    reads."""
+    tables = sorted({t for g in grafts.values() for t in g.sources})
+    for t in tables:
+        _register_source(spark, sf_dir, t)
+    try:
+        yield
+    finally:
+        for t in tables:
+            spark.catalog.dropTempView(t)
+
+
+def _rebuild(spark: SparkSession, sf_dir: str, name: str, g: Graft, n_buckets: int) -> str:
+    """Full re-derivation of one graft into a fresh bucketed table;
+    returns the fingerprint it was stamped with."""
+    df = g.derive(spark, sf_dir)
+    fp = graft_fingerprint(sf_dir, g.identity, g.sources)
+    write_bucketed(
+        df, name, n_buckets, g.bucket_cols, g.sort_cols,
+        fingerprint=fp, src_sig=source_signature(sf_dir, g.sources),
+    )
+    return fp
+
+
 def build_graft_layout(
     spark: SparkSession,
     sf_dir: str,
@@ -436,41 +479,13 @@ def build_graft_layout(
     dependency. ``n_buckets`` defaults to SPARK_GRAFT_BUCKETS or the
     session parallelism; all tables are written with the SAME bucket
     count so co-located joins between them need no exchange."""
-    import os
-
-    catalog = graft_catalog()
-    if n_buckets is None:
-        n_buckets = (
-            int(os.environ.get("SPARK_GRAFT_BUCKETS", "0"))
-            or spark.sparkContext.defaultParallelism
-        )
-    names = list(catalog) if tables is None else list(tables)
-    src_tables: set[str] = set()
-    for name in names:
-        src_tables.update(catalog[name].sources)
-    for t in sorted(src_tables):
-        spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).createOrReplaceTempView(t)
-    out: dict[str, str] = {}
-    try:
-        for name in names:
-            g = catalog[name]
-            if g.sql is not None:
-                df = spark.sql(g.sql)
-            elif g.builder is not None:
-                df = g.builder(spark, sf_dir)
-            else:
-                df = spark.table(g.sources[0])
-            fp = graft_fingerprint(sf_dir, g.identity, g.sources)
-            write_bucketed(
-                df, name, n_buckets, g.bucket_cols, g.sort_cols,
-                fingerprint=fp, src_sig=source_signature(sf_dir, g.sources),
-                tiny_serve=g.tiny_serve,
-            )
-            out[name] = fp
-    finally:
-        for t in sorted(src_tables):
-            spark.catalog.dropTempView(t)
-    return out
+    grafts = _selected(tables)
+    n_buckets = n_buckets if n_buckets is not None else _default_buckets(spark)
+    with _source_views(spark, sf_dir, grafts):
+        return {
+            name: _rebuild(spark, sf_dir, name, g, n_buckets)
+            for name, g in grafts.items()
+        }
 
 
 def _stored_prop(spark: SparkSession, table: str, prop: str) -> str | None:
@@ -517,8 +532,6 @@ def bucket_file_census(spark: SparkSession, table: str) -> dict[int, int]:
     location is missing. This is the compaction trigger metric: a table
     fresh from ``write_bucketed`` has exactly 1 file per bucket; every
     incremental append adds one more."""
-    import os
-
     loc = _table_location(spark, table)
     if not loc or not os.path.isdir(loc):
         return {}
@@ -565,7 +578,7 @@ def _compact_table(spark: SparkSession, table: str, g: Graft) -> str:
     # per bucket.
     write_bucketed(
         spark.read.parquet(loc), side, n_buckets, g.bucket_cols, g.sort_cols,
-        fingerprint=fp, src_sig=sig, tiny_serve=g.tiny_serve,
+        fingerprint=fp, src_sig=sig,
     )
     spark.sql(f"DROP TABLE IF EXISTS `{table}`")
     spark.sql(f"ALTER TABLE `{side}` RENAME TO `{table}`")
@@ -591,11 +604,8 @@ def compact_graft_layout(
     Returns {table: "compacted" | "current" | "absent"}. Callable
     standalone (maintenance window) and invoked automatically by
     ``refresh_graft_layout`` past its own threshold."""
-    catalog = graft_catalog()
-    names = list(catalog) if tables is None else list(tables)
     out: dict[str, str] = {}
-    for name in names:
-        g = catalog[name]
+    for name, g in _selected(tables).items():
         if not spark.catalog.tableExists(name):
             out[name] = "absent"
             continue
@@ -665,35 +675,16 @@ def refresh_graft_layout(
     the LSM-style amortization that keeps file counts bounded and the
     sorted-single-file scan fast path recoverable under continuous
     ingest. 0 disables auto-compaction."""
-    import os
-
-    catalog = graft_catalog()
-    if n_buckets is None:
-        n_buckets = (
-            int(os.environ.get("SPARK_GRAFT_BUCKETS", "0"))
-            or spark.sparkContext.defaultParallelism
-        )
+    grafts = _selected(tables)
+    n_buckets = n_buckets if n_buckets is not None else _default_buckets(spark)
     compact_files = (
         compact_threshold
         if compact_threshold is not None
         else int(os.environ.get("SPARK_GRAFT_COMPACT_FILES", "8"))
     )
-    names = list(catalog) if tables is None else list(tables)
-    src_tables: set[str] = set()
-    for name in names:
-        src_tables.update(catalog[name].sources)
-
-    def _register_full(t: str) -> None:
-        spark.read.parquet(
-            os.path.join(sf_dir, f"{t}.parquet")
-        ).createOrReplaceTempView(t)
-
-    for t in sorted(src_tables):
-        _register_full(t)
     out: dict[str, str] = {}
-    try:
-        for name in names:
-            g = catalog[name]
+    with _source_views(spark, sf_dir, grafts):
+        for name, g in grafts.items():
             fp = graft_fingerprint(sf_dir, g.identity, g.sources)
             if _stored_prop(spark, name, FINGERPRINT_PROP) == fp:
                 # fingerprint only advances AFTER an append commits, so a
@@ -731,12 +722,7 @@ def refresh_graft_layout(
                     # appendable builder grafts (row-wise derivations like
                     # tokenize-at-ingest) run their builder over the
                     # shadowed new-slice view, same as the SQL grafts
-                    if g.sql is not None:
-                        df = spark.sql(g.sql)
-                    elif g.builder is not None:
-                        df = g.builder(spark, sf_dir)
-                    else:
-                        df = spark.table(g.fact)
+                    df = g.derive(spark, sf_dir)
                     # write-ahead: mark the delta as in-flight BEFORE any
                     # row lands, so a crash anywhere below is detected
                     spark.sql(
@@ -752,7 +738,7 @@ def refresh_graft_layout(
                         .saveAsTable(name)
                     )
                 finally:
-                    _register_full(g.fact)
+                    _register_source(spark, sf_dir, g.fact)
                 try:
                     grain_rows = spark.table(name).count()  # metadata count
                 except Exception:  # noqa: BLE001
@@ -782,20 +768,8 @@ def refresh_graft_layout(
                 else:
                     out[name] = "appended"
                 continue
-            if g.sql is not None:
-                df = spark.sql(g.sql)
-            elif g.builder is not None:
-                df = g.builder(spark, sf_dir)
-            else:
-                df = spark.table(g.sources[0])
-            write_bucketed(
-                df, name, n_buckets, g.bucket_cols, g.sort_cols,
-                fingerprint=fp, src_sig=cur_sig, tiny_serve=g.tiny_serve,
-            )
+            _rebuild(spark, sf_dir, name, g, n_buckets)
             out[name] = "rebuilt"
-    finally:
-        for t in sorted(src_tables):
-            spark.catalog.dropTempView(t)
     return out
 
 
@@ -807,7 +781,6 @@ def write_bucketed(
     sort_cols: list[str] | tuple | None = None,
     fingerprint: str | None = None,
     src_sig: str | None = None,
-    tiny_serve: bool = True,
 ) -> None:
     """Write ``df`` as a bucketed (and optionally per-bucket sorted)
     catalog table. Joins/aggregations on ``bucket_cols`` against any
@@ -817,9 +790,6 @@ def write_bucketed(
     managed-table LOCATION left by a previous process (the in-memory
     catalog forgets the table at session exit but the warehouse files
     survive, and saveAsTable refuses to reuse the location)."""
-    import os
-    import shutil
-
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS `{table}`")
     warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
@@ -854,8 +824,6 @@ def write_bucketed(
         props.append(f"'{GRAIN_ROWS_PROP}'='{spark.table(table).count()}'")
     except Exception:  # noqa: BLE001 — the count is an optimization hint
         pass
-    if not tiny_serve:
-        props.append(f"'{TINY_SERVE_PROP}'='false'")
     if props:
         spark.sql(
             f"ALTER TABLE `{table}` SET TBLPROPERTIES ({', '.join(props)})"

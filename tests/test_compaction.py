@@ -380,15 +380,14 @@ def test_streaming_ingest_triggers_auto_compaction(graft_session, tmp_path):
     assert n_src == len(rows) + 200
 
 
-def test_tiny_grain_threshold_transition(spark, tmp_path):
+def test_tiny_grain_threshold_transition(spark, tmp_path, monkeypatch):
     """Tiny-grain serving follows the MEASURED count: under the
     threshold a graft serves coalesce(1) (single-partition plan); when
-    the recorded grain exceeds the env threshold the same table serves
-    the parallel bucketed plan again."""
-    import os as _os
-
+    the recorded grain exceeds the threshold the same table serves the
+    parallel bucketed plan again."""
+    from duckdb_miint_spark import storage
     from duckdb_miint_spark.registry import load_all
-    from duckdb_miint_spark.storage import build_graft_layout, graft_catalog
+    from duckdb_miint_spark.storage import build_graft_layout
 
     sf = "/root/testdata/sf0.001"
     spark.conf.set("spark.graft.bucketedLayout", "true")
@@ -401,11 +400,10 @@ def test_tiny_grain_threshold_transition(spark, tmp_path):
             plan = df._jdf.queryExecution().executedPlan().toString()
             return plan.count("Exchange hashpartitioning"), df
 
-        _os.environ["SPARK_GRAFT_TINY_GRAIN"] = "200000"
+        monkeypatch.setattr(storage, "TINY_GRAIN_ROWS", 200_000)
         ex_tiny, df_tiny = n_parts()
-        _os.environ["SPARK_GRAFT_TINY_GRAIN"] = "1"  # grain now "too big"
+        monkeypatch.setattr(storage, "TINY_GRAIN_ROWS", 1)  # grain now "too big"
         ex_par, df_par = n_parts()
-        del _os.environ["SPARK_GRAFT_TINY_GRAIN"]
         assert ex_tiny == 0, "tiny-grain plan should re-merge exchange-free"
         # answers identical either way
         assert sorted(map(tuple, df_tiny.collect())) == sorted(
@@ -413,26 +411,19 @@ def test_tiny_grain_threshold_transition(spark, tmp_path):
         )
     finally:
         spark.conf.set("spark.graft.bucketedLayout", "false")
-        _os.environ.pop("SPARK_GRAFT_TINY_GRAIN", None)
         for t in ["graft_b_events_hourly"]:
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_catalog_tiny_serve_overrides_stale_property(spark):
+def test_catalog_tiny_serve_overrides_stale_property(spark, monkeypatch):
     """A table materialized BEFORE its catalog entry opted out of
     tiny-grain serving carries a stale 'graft.tiny_serve=true' property
-    and a still-valid fingerprint; serve_bucketed must consult the
-    CATALOG flag too, so the opt-out applies without a rebuild (ADVICE
-    r13: pq_codes' mapInPandas consumer was still being fed a
+    and a still-valid fingerprint; serving must follow the CATALOG flag
+    (the only copy of it), so the opt-out applies without a rebuild
+    (ADVICE r13: pq_codes' mapInPandas consumer was still being fed a
     coalesce(1) plan from pre-opt-out warehouses)."""
-    import os as _os
-
-    from duckdb_miint_spark.queries_pipeline import PQ_CODES_IDENTITY
-    from duckdb_miint_spark.storage import (
-        build_graft_layout,
-        graft_fingerprint,
-        serve_bucketed,
-    )
+    from duckdb_miint_spark import storage
+    from duckdb_miint_spark.storage import build_graft_layout, serve
 
     sf = "/root/testdata/sf0.001"
     spark.conf.set("spark.graft.bucketedLayout", "true")
@@ -442,16 +433,11 @@ def test_catalog_tiny_serve_overrides_stale_property(spark):
         spark.sql(
             "ALTER TABLE graft_b_pq_codes SET TBLPROPERTIES('graft.tiny_serve'='true')"
         )
-        _os.environ["SPARK_GRAFT_TINY_GRAIN"] = "10000000"  # grain well under
-        served = serve_bucketed(
-            spark,
-            "graft_b_pq_codes",
-            graft_fingerprint(sf, PQ_CODES_IDENTITY, ["embeddings"]),
-        )
+        monkeypatch.setattr(storage, "TINY_GRAIN_ROWS", 10_000_000)  # grain well under
+        served = serve(spark, sf, "graft_b_pq_codes")
         assert served is not None
         plan = served._jdf.queryExecution().executedPlan().toString()
         assert "Coalesce" not in plan, plan
     finally:
         spark.conf.set("spark.graft.bucketedLayout", "false")
-        _os.environ.pop("SPARK_GRAFT_TINY_GRAIN", None)
         spark.sql("DROP TABLE IF EXISTS graft_b_pq_codes")

@@ -1,0 +1,101 @@
+"""The graft catalog (storage.graft_catalog) as the one source of truth
+for serving: every graft is served through ``storage.serve`` under the
+identity and source list its catalog entry declares, so moving any
+source file invalidates exactly the grafts that list it."""
+
+from __future__ import annotations
+
+import os
+import shutil
+
+import pytest
+
+SRC = "/root/testdata/sf0.001"
+
+
+@pytest.fixture()
+def layout_on(spark):
+    spark.conf.set("spark.graft.bucketedLayout", "true")
+    yield spark
+    spark.conf.set("spark.graft.bucketedLayout", "false")
+
+
+def _copy_sf(tmp_path) -> str:
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for f in os.listdir(SRC):
+        if f.endswith(".parquet"):
+            shutil.copy(os.path.join(SRC, f), sf / f)
+    return str(sf)
+
+
+def test_lsh_index_identity_derived_from_constants():
+    """The banded-index identity is built from the dedup defaults its
+    builder uses, and still spells the historical literal, so stored
+    fingerprints do not change."""
+    from duckdb_miint_spark.queries_pipeline import LSH_INDEX_IDENTITY
+
+    assert LSH_INDEX_IDENTITY == "lsh_index:num_perm=16,shingle=3;minhash_long-v1"
+
+
+def test_serve_propagates_unexpected_errors(layout_on, tmp_path, monkeypatch):
+    """Only a missing table (AnalysisException) means "not served"; any
+    other failure while serving is a real error and must surface
+    instead of silently falling back to the plain path."""
+    from pyspark.errors import AnalysisException
+
+    from duckdb_miint_spark import storage
+
+    spark = layout_on
+    sf = _copy_sf(tmp_path)
+    storage.build_graft_layout(spark, sf, 2, tables=["graft_b_orders"])
+    try:
+        assert storage.serve(spark, sf, "graft_b_orders") is not None
+
+        def dropped(_name):
+            raise AnalysisException(message="[TABLE_OR_VIEW_NOT_FOUND] dropped")
+
+        monkeypatch.setattr(spark, "table", dropped)
+        assert storage.serve(spark, sf, "graft_b_orders") is None
+
+        def broken(_name):
+            raise RuntimeError("boom")
+
+        monkeypatch.setattr(spark, "table", broken)
+        with pytest.raises(RuntimeError, match="boom"):
+            storage.serve(spark, sf, "graft_b_orders")
+    finally:
+        monkeypatch.undo()
+        spark.sql("DROP TABLE IF EXISTS graft_b_orders")
+
+
+def test_every_graft_goes_stale_with_each_of_its_sources(layout_on, tmp_path):
+    """Build the whole catalog once; then, per source table, move its
+    mtime: exactly the grafts whose catalog entry lists that source stop
+    being served, and they are served again once the mtime is restored."""
+    from duckdb_miint_spark import storage
+
+    spark = layout_on
+    sf = _copy_sf(tmp_path)
+    catalog = storage.graft_catalog()
+    storage.build_graft_layout(spark, sf, 4)
+    try:
+
+        def served() -> set[str]:
+            return {n for n in catalog if storage.serve(spark, sf, n) is not None}
+
+        assert served() == set(catalog)
+        sources = sorted({t for g in catalog.values() for t in g.sources})
+        assert {"lineitem", "orders", "customer"} <= set(sources)
+        for src in sources:
+            path = os.path.join(sf, f"{src}.parquet")
+            st = os.stat(path)
+            os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+            stale = {n for n, g in catalog.items() if src in g.sources}
+            assert stale, src
+            assert served() == set(catalog) - stale, src
+            os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+            assert served() == set(catalog), src
+    finally:
+        for n in catalog:
+            spark.sql(f"DROP TABLE IF EXISTS {n}")

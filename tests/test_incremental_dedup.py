@@ -73,8 +73,7 @@ def graft_session(spark):
 def test_incremental_dedup_lifecycle(graft_session, tmp_path):
     spark = graft_session
     from duckdb_miint_spark.pipeline.dedup import incremental_exact, incremental_near_dup
-    from duckdb_miint_spark.queries_pipeline import _doc_hashes, _lsh_index
-    from duckdb_miint_spark.storage import build_graft_layout
+    from duckdb_miint_spark.storage import build_graft_layout, serve
     from duckdb_miint_spark.streaming.ingest import stream_ingest_with_refresh
 
     sf = _make_docs_sf_dir(tmp_path)
@@ -89,7 +88,7 @@ def test_incremental_dedup_lifecycle(graft_session, tmp_path):
         spark, [(5_000_001, seed["text"]), (5_000_002, fresh_text)]
     )
 
-    corpus_hashes = _doc_hashes(spark, sf)
+    corpus_hashes = serve(spark, sf, "graft_b_doc_hashes")
     assert corpus_hashes is not None, "fingerprint graft not served"
     out = incremental_exact(b1, corpus_hashes)
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -131,7 +130,7 @@ def test_incremental_dedup_lifecycle(graft_session, tmp_path):
             (5_000_004, "another doc seen for the very first time right now"),
         ],
     )
-    corpus_hashes = _doc_hashes(spark, sf)
+    corpus_hashes = serve(spark, sf, "graft_b_doc_hashes")
     assert corpus_hashes is not None, "graft went stale after refresh"
     got = {
         r["batch_id"]: (r["is_dup"], r["canonical_id"])
@@ -144,7 +143,7 @@ def test_incremental_dedup_lifecycle(graft_session, tmp_path):
     # jaccard-1.0 near-dup of batch 1's doc; candidates come from the
     # index buckets (plan-asserted), text is read only for the verify
     corpus = spark.read.parquet(os.path.join(sf, "documents.parquet"))
-    idx = _lsh_index(spark, sf)
+    idx = serve(spark, sf, "graft_b_lsh_index")
     assert idx is not None, "banded index graft not served"
     near = incremental_near_dup(b2, corpus, corpus_index=idx, threshold=0.9)
     plan = near._jdf.queryExecution().executedPlan().toString()
@@ -188,9 +187,8 @@ def test_index_served_components_match_plain(graft_session, tmp_path):
     output contract pins only the exact-Jaccard-verified pair graph, so
     the band source must never show through."""
     spark = graft_session
-    from duckdb_miint_spark.queries_pipeline import _lsh_index
     from duckdb_miint_spark.registry import load_all
-    from duckdb_miint_spark.storage import build_graft_layout
+    from duckdb_miint_spark.storage import build_graft_layout, serve
 
     sf = _make_docs_sf_dir(tmp_path)
     reg = load_all()
@@ -202,7 +200,7 @@ def test_index_served_components_match_plain(graft_session, tmp_path):
     }
     build_graft_layout(spark, sf, 4, tables=["graft_b_lsh_index"])
     spark.conf.set("spark.graft.bucketedLayout", "true")
-    assert _lsh_index(spark, sf) is not None, "index must actually serve"
+    assert serve(spark, sf, "graft_b_lsh_index") is not None, "index must actually serve"
     for name, want in plain.items():
         got = sorted(tuple(r) for r in reg[name].spark_fn(spark, sf).collect())
         assert got == want, name

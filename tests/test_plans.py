@@ -245,43 +245,44 @@ def test_bucketed_table_stale_fingerprint_not_served(spark, tmp_path):
     """A graft table whose stored fingerprint doesn't match the reader's
     recomputed identity (different source dir / drifted derivation SQL)
     must NOT be served — read_table falls back to the plain parquet scan
-    instead of silently answering from the stale snapshot (ADVICE r8)."""
+    instead of silently answering from the stale snapshot (ADVICE r8).
+    Exercised on the catalog's plain-copy graft ``graft_b_orders``."""
     import os
     import shutil
 
     import pyspark.sql.functions as F
 
     from duckdb_miint_spark.session import read_table
-    from duckdb_miint_spark.storage import graft_fingerprint, serve_bucketed, write_bucketed
+    from duckdb_miint_spark.storage import graft_fingerprint, serve, write_bucketed
 
-    # a deliberately WRONG-content snapshot under the graft name for `nation`
+    n_orders = spark.read.parquet(os.path.join(SF, "orders.parquet")).count()
+    assert n_orders > 3
+    # a deliberately WRONG-content snapshot under the graft name for `orders`
     fake = spark.range(0, 3).select(
-        F.col("id").alias("n_nationkey"), F.lit("STALE").alias("n_name")
+        F.col("id").alias("o_orderkey"), F.lit("STALE").alias("o_orderstatus")
     )
     write_bucketed(
-        fake, "graft_b_nation", 2, ["n_nationkey"],
-        fingerprint=graft_fingerprint("/some/other/sfdir", "nation", []),
+        fake, "graft_b_orders", 2, ["o_orderkey"],
+        fingerprint=graft_fingerprint("/some/other/sfdir", "orders", []),
     )
     spark.conf.set("spark.graft.bucketedLayout", "true")
     try:
         # mismatched fingerprint: not served
-        assert serve_bucketed(
-            spark, "graft_b_nation", graft_fingerprint(SF, "nation", ["nation"])
-        ) is None
-        # read_table falls back to the real parquet (25 nations, not 3)
-        assert read_table(spark, SF, "nation").count() == 25
+        assert serve(spark, SF, "graft_b_orders") is None
+        # read_table falls back to the real parquet, not the 3-row fake
+        assert read_table(spark, SF, "orders").count() == n_orders
         # matching fingerprint IS served
         write_bucketed(
-            fake, "graft_b_nation", 2, ["n_nationkey"],
-            fingerprint=graft_fingerprint(SF, "nation", ["nation"]),
+            fake, "graft_b_orders", 2, ["o_orderkey"],
+            fingerprint=graft_fingerprint(SF, "orders", ["orders"]),
         )
-        assert read_table(spark, SF, "nation").count() == 3
+        assert read_table(spark, SF, "orders").count() == 3
         # a table written with NO fingerprint is never served either
-        write_bucketed(fake, "graft_b_nation", 2, ["n_nationkey"])
-        assert read_table(spark, SF, "nation").count() == 25
+        write_bucketed(fake, "graft_b_orders", 2, ["o_orderkey"])
+        assert read_table(spark, SF, "orders").count() == n_orders
     finally:
         spark.conf.set("spark.graft.bucketedLayout", "false")
-        spark.sql("DROP TABLE IF EXISTS graft_b_nation")
+        spark.sql("DROP TABLE IF EXISTS graft_b_orders")
 
     # IN-PLACE REGENERATION (ADVICE r9): the fingerprint folds source file
     # mtime+size, so regenerating the parquet under the SAME path
@@ -289,20 +290,20 @@ def test_bucketed_table_stale_fingerprint_not_served(spark, tmp_path):
     # testdata is read-only).
     tmp_sf = str(tmp_path / "sfcopy")
     os.makedirs(tmp_sf)
-    shutil.copy(os.path.join(SF, "nation.parquet"), os.path.join(tmp_sf, "nation.parquet"))
+    shutil.copy(os.path.join(SF, "orders.parquet"), os.path.join(tmp_sf, "orders.parquet"))
     write_bucketed(
-        fake, "graft_b_nation", 2, ["n_nationkey"],
-        fingerprint=graft_fingerprint(tmp_sf, "nation", ["nation"]),
+        fake, "graft_b_orders", 2, ["o_orderkey"],
+        fingerprint=graft_fingerprint(tmp_sf, "orders", ["orders"]),
     )
     spark.conf.set("spark.graft.bucketedLayout", "true")
     try:
-        assert read_table(spark, tmp_sf, "nation").count() == 3  # served
+        assert read_table(spark, tmp_sf, "orders").count() == 3  # served
         # "regenerate" the source in place: same path, different mtime
-        os.utime(os.path.join(tmp_sf, "nation.parquet"), (1_600_000_000, 1_600_000_000))
-        assert read_table(spark, tmp_sf, "nation").count() == 25  # stale → plain
+        os.utime(os.path.join(tmp_sf, "orders.parquet"), (1_600_000_000, 1_600_000_000))
+        assert read_table(spark, tmp_sf, "orders").count() == n_orders  # stale → plain
     finally:
         spark.conf.set("spark.graft.bucketedLayout", "false")
-        spark.sql("DROP TABLE IF EXISTS graft_b_nation")
+        spark.sql("DROP TABLE IF EXISTS graft_b_orders")
 
 
 def test_islands_dedup_precedes_first_exchange(spark):

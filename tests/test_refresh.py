@@ -133,9 +133,9 @@ def test_append_refresh_lifecycle(graft_session, tmp_path):
     got = sorted(tuple(r) for r in reg["events_hourly"].spark_fn(spark, sf).collect())
     assert got == _events_hourly_plain(spark, sf)
     # the parse graft serves every row of the grown source
-    from duckdb_miint_spark.queries_relational import _events_parsed
+    from duckdb_miint_spark.storage import serve
 
-    served = _events_parsed(spark, sf)
+    served = serve(spark, sf, "graft_b_events_parsed")
     assert served is not None, "events_parsed not served after refresh"
     n_src = spark.read.parquet(os.path.join(sf, "events.parquet")).count()
     assert served.count() == n_src
@@ -216,9 +216,9 @@ def test_streaming_ingest_with_refresh(graft_session, tmp_path):
     assert got == _events_hourly_plain(spark, sf)
     n_src = spark.read.parquet(os.path.join(sf, "events.parquet")).count()
     assert n_src == len(rows) + 200
-    from duckdb_miint_spark.queries_relational import _events_parsed
+    from duckdb_miint_spark.storage import serve
 
-    served = _events_parsed(spark, sf)
+    served = serve(spark, sf, "graft_b_events_parsed")
     assert served is not None and served.count() == n_src
 
 

@@ -44,16 +44,16 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from duckdb_miint_spark.queries_pipeline import _doc_hashes, _incremental_batch
+    from duckdb_miint_spark.queries_pipeline import _incremental_batch
     from duckdb_miint_spark.session import dir_parquet_bytes, get_spark, size_session_for_input
-    from duckdb_miint_spark.storage import build_graft_layout
+    from duckdb_miint_spark.storage import build_graft_layout, serve
 
     spark = get_spark()
     size_session_for_input(spark, dir_parquet_bytes(sf_dir))
     build_graft_layout(spark, sf_dir, tables=["graft_b_doc_hashes"])
     spark.conf.set("spark.graft.bucketedLayout", "true")
 
-    pre = _doc_hashes(spark, sf_dir)
+    pre = serve(spark, sf_dir, "graft_b_doc_hashes")
     assert pre is not None, "graft_b_doc_hashes not served"
     corpus = pre.filter(F.col("doc_id") % 10 != 7)
 

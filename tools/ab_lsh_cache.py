@@ -135,12 +135,11 @@ def main() -> None:
     if os.environ.get("AB_LSH_INDEX", "0") not in ("0", "false"):
         # r14 index-served candidates: bands from graft_b_lsh_index
         # (bucketed on (band, v) — no re-sign, no bucket exchange)
-        from duckdb_miint_spark.queries_pipeline import _lsh_index
-        from duckdb_miint_spark.storage import build_graft_layout
+        from duckdb_miint_spark.storage import build_graft_layout, serve
 
         build_graft_layout(spark, args.sf, tables=["graft_b_lsh_index"])
         spark.conf.set("spark.graft.bucketedLayout", "true")
-        idx = _lsh_index(spark, args.sf)
+        idx = serve(spark, args.sf, "graft_b_lsh_index")
         assert idx is not None, "lsh index graft not served"
         variants["index(nocache)"] = lambda: near_dup_pairs(docs, _bands=idx)
     ref = sorted(map(tuple, near_dup_pairs(docs, threshold=0.9).collect()))

@@ -91,17 +91,16 @@ def main() -> None:
 
     # The graft catalog is session-scoped: build the lsh index table in
     # THIS session (same one-time materialization the bench performs),
-    # then opt in so _lsh_index serves it.
+    # then opt in so storage.serve returns it.
     bands = None
     try:
-        from duckdb_miint_spark.queries_pipeline import _lsh_index
-        from duckdb_miint_spark.storage import build_graft_layout
+        from duckdb_miint_spark.storage import build_graft_layout, serve
 
         t0 = time.perf_counter()
         build_graft_layout(spark, args.sf, tables=["graft_b_lsh_index"])
         spark.conf.set("spark.graft.bucketedLayout", "true")
         print(f"# lsh index built in {time.perf_counter() - t0:.1f}s")
-        bands = _lsh_index(spark, args.sf)
+        bands = serve(spark, args.sf, "graft_b_lsh_index")
     except Exception as e:  # pragma: no cover - diagnostics only
         print(f"# no lsh index: {e}")
     print(f"# index served: {bands is not None}")

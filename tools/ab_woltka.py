@@ -55,13 +55,13 @@ def main() -> None:
         woltka_ogu_per_sample,
         woltka_ogu_per_sample_from_base,
     )
-    from duckdb_miint_spark.queries_domain import _aln, _woltka_base
+    from duckdb_miint_spark.queries_domain import _aln
     from duckdb_miint_spark.session import (
         dir_parquet_bytes,
         get_spark,
         size_session_for_input,
     )
-    from duckdb_miint_spark.storage import build_graft_layout
+    from duckdb_miint_spark.storage import build_graft_layout, serve
 
     if not os.path.exists(args.sf):
         from tools.make_scaled_sf import ensure_scaled
@@ -75,11 +75,13 @@ def main() -> None:
     spark.conf.set("spark.graft.bucketedLayout", "true")
 
     def cur_f():
-        aln = _aln(spark, args.sf, bucket="read")
+        aln = serve(spark, args.sf, "graft_b_aln_read")
+        if aln is None:
+            aln = _aln(spark, args.sf)
         return woltka_ogu_per_sample(aln, "sample_id", "read_id", fixed_point=True)
 
     def new_f():
-        base = _woltka_base(spark, args.sf)
+        base = serve(spark, args.sf, "graft_b_woltka_base")
         assert base is not None, "woltka base graft not served"
         return woltka_ogu_per_sample_from_base(base, fixed_point=True)
 

@@ -7,9 +7,9 @@ remove. This tool measures exactly that trade:
 
 - Phase A (plain): the registered queries on the raw parquet dir — both
   join sides shuffle on o_orderkey/l_orderkey.
-- Phase B (bucketed): lineitem + orders written once via
-  ``storage.write_bucketed`` (same bucket count, bucketed AND sorted on
-  the order key), then the SAME query code re-run with
+- Phase B (bucketed): the graft catalog written once via
+  ``storage.build_graft_layout`` (lineitem + orders bucketed AND sorted
+  on the order key, same bucket count), then the SAME query code re-run with
   ``spark.graft.bucketedLayout=true`` — ``session.read_table`` serves the
   bucketed catalog tables, and the join plans with no Exchange (and no
   Sort) on either bucketed side.
