@@ -5,7 +5,7 @@ operator registers a (Spark builder, DuckDB oracle SQL) pair there.
 
 The driver supplies its own SparkSession, possibly created from a cwd
 where this repo is not importable by executor Python workers — and
-Python DataSources / pandas UDFs deserialize by module reference on the
+Arrow scans / pandas UDFs deserialize by module reference on the
 workers. ``_ensure_shipped`` therefore zips the package once and
 ``addPyFile``s it to any session before running a query (a no-op for
 sessions that can already import it).

@@ -380,7 +380,6 @@ def compress_intervals_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference was negative — decoding the fat table cost more than
     # deriving it. This materializes the ~60x-narrower reduced relation
     # instead, and skips the dedup aggregate entirely.)
-    _lineitem_view(spark, sf_dir)
     ranked = storage.serve(spark, sf_dir, "graft_b_aln_ranked")
     if ranked is not None:
         return islands_from_reduced(ranked, ["reference"]).orderBy("reference", "start")
@@ -438,7 +437,6 @@ def q_woltka_ogu_per_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan → sort-free window COUNT → one aggregate) when current, else
     the read-bucketed aln (collect_set dedup, no exchange), else the
     plain derivation."""
-    _lineitem_view(spark, sf_dir)
     base = storage.serve(spark, sf_dir, "graft_b_woltka_base")
     if base is not None:
         out = woltka_ogu_per_sample_from_base(base, fixed_point=True)
@@ -483,7 +481,6 @@ ORDER BY feature_id
 def q_woltka_ogu(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Woltka OGU counts, sample-agnostic (miint_macros.hpp:80-100).
     Fixed-point fold in the gate — see q_woltka_ogu_per_sample."""
-    _lineitem_view(spark, sf_dir)
     base = storage.serve(spark, sf_dir, "graft_b_woltka_base")
     if base is not None:
         out = woltka_ogu_from_base(base, fixed_point=True)
@@ -536,12 +533,11 @@ def q_genome_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Graft path: same ranked-reduction serving as compress_intervals_flat
     # (the r8 full-aln reference-bucketed serving stays a recorded
     # negative; this serves the reduced relation instead).
-    _lineitem_view(spark, sf_dir)
     ranked = storage.serve(spark, sf_dir, "graft_b_aln_ranked")
     islands = (
         islands_from_reduced(ranked, ["reference"]) if ranked is not None else None
     )
-    aln = _aln(spark, sf_dir)
+    aln = _aln(spark, sf_dir) if islands is None else None
     _part_view(spark, sf_dir)
     sg = spark.sql(CONTIG_MAP_SQL)
     tl = spark.sql(GENOME_LEN_SQL)

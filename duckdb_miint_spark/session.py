@@ -75,7 +75,7 @@ def get_spark(
     # executor heaps; override with SPARK_GRAFT_BROADCAST.
     broadcast_threshold = os.environ.get("SPARK_GRAFT_BROADCAST", "64MB")
     # Executor Python workers must be able to import this package no matter
-    # the caller's cwd: Python DataSources and pandas UDFs deserialize by
+    # the caller's cwd: mapInArrow scans and pandas UDFs deserialize by
     # module reference. PYTHONPATH is read by the launched python workers
     # (local mode) and spark.executorEnv covers cluster executors.
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

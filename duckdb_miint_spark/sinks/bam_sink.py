@@ -14,22 +14,32 @@ Two write modes (``distributed=`` on :func:`copy_bam`):
 
 - single-writer (default): rows stream through the driver into one BGZF
   stream — the reference's shape (copy_sam.cpp:285-301).
-- distributed: BGZF members are CONCATENABLE by construction, so each
-  partition encodes+compresses its own member run (the CPU cost — DEFLATE
-  dominates BAM writing) and the driver only concatenates header run +
-  partition runs + the EOF member, streaming partition-by-partition via
-  ``toLocalIterator`` (never holding the file in memory). Record order is
+- distributed: BGZF members are CONCATENABLE by construction, so in one
+  Spark job each task encodes+compresses its partition's member run (the
+  CPU cost — DEFLATE dominates BAM writing) into a part file in a
+  temporary directory next to ``path``, named by partition and task
+  attempt, and returns ``(partition, file)``. The driver then writes
+  header run + the reported part files in partition order + the EOF
+  member (pure sequential I/O, never holding the file in memory) and
+  removes the temporary directory, whether the write succeeded or not.
+  Only the files of successful attempts are read, so a retried or
+  speculative attempt's leftovers are never concatenated. Record order is
   partition order then row order — identical to what the single writer
   sees — so read-back equality holds row-for-row even though block
-  boundaries differ. At 100 TB this is the only viable shape: the driver
-  does pure sequential I/O at disk speed while 1000 executors compress.
+  boundaries differ. Part files need a ``path`` directory that every
+  executor can write, as the FASTQ sink's part files do.
 """
 
 from __future__ import annotations
 
+import contextlib
+import os
+import shutil
 import struct
+import tempfile
 import zlib
 
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 
 from duckdb_miint_spark.sinks.fastx_sink import CopyError
@@ -194,46 +204,44 @@ def copy_bam(
 
     level = compression_level
     block_size = 60000  # same uncompressed block target as BgzfWriter
-    chunk_bytes = 4 << 20  # compressed bytes per yielded chunk row
+    parts_dir = tempfile.mkdtemp(
+        prefix=f".{os.path.basename(path)}.parts-",
+        dir=os.path.dirname(os.path.abspath(path)),
+    )
 
-    def _encode_partition(rows):
+    def _write_partition(part, rows):
+        ctx = TaskContext.get()
+        fname = os.path.join(parts_dir, f"part-{part:05d}-{ctx.taskAttemptId()}")
         buf = bytearray()
-        out = bytearray()
-        for row in rows:
-            buf += _encode_record(row.asDict(), ref_ids)
-            while len(buf) >= block_size:
-                out += bgzf_compress_block(bytes(buf[:block_size]), level)
-                del buf[:block_size]
-                if len(out) >= chunk_bytes:
-                    yield bytes(out)
-                    out = bytearray()
-        if buf:
-            out += bgzf_compress_block(bytes(buf), level)
-        if out:
-            yield bytes(out)
+        with open(fname, "wb") as fh:
+            for row in rows:
+                buf += _encode_record(row.asDict(), ref_ids)
+                while len(buf) >= block_size:
+                    fh.write(bgzf_compress_block(bytes(buf[:block_size]), level))
+                    del buf[:block_size]
+            if buf:
+                fh.write(bgzf_compress_block(bytes(buf), level))
+        yield part, fname
 
-    from pyspark import StorageLevel
-
-    # DISK_ONLY persist + count: ONE parallel job compresses every
-    # partition at full cluster width into executor-local storage (the
-    # shuffle-file discipline — compressed bytes, never deserialized
-    # rows). A bare toLocalIterator would instead trigger each
-    # partition's job on demand, one at a time — measured on a
-    # 5.9M-row/75 MB write at 16 partitions: single-writer 91.9 s,
-    # on-demand distributed 64.5 s, persist-then-stream 6.2-9.4 s.
-    chunks = df.rdd.mapPartitions(_encode_partition).persist(StorageLevel.DISK_ONLY)
     try:
-        chunks.count()
-        with open(path, "wb") as fh:
-            w = BgzfWriter(fh, level=compression_level)
-            w.write(bytes(payload))
-            w.flush()  # header member run closed; partition runs follow
-            # streams partition-by-partition in partition order — the
-            # driver holds at most one chunk, and record order equals
-            # the single-writer's df order.
-            for chunk in chunks.toLocalIterator():
-                fh.write(chunk)
-            fh.write(BGZF_EOF)
+        # df.rdd runs df's own physical plan — the one toLocalIterator
+        # runs for the single writer — so both writers see one record
+        # sequence even where a plan is not deterministic across
+        # re-planning (a range repartition samples its bounds per plan)
+        written = dict(df.rdd.mapPartitionsWithIndex(_write_partition).collect())
+        try:
+            with open(path, "wb") as fh:
+                w = BgzfWriter(fh, level=compression_level)
+                w.write(bytes(payload))
+                w.flush()  # header member run closed; partition runs follow
+                for part in sorted(written):
+                    with open(written[part], "rb") as src:
+                        shutil.copyfileobj(src, fh, 1 << 20)
+                fh.write(BGZF_EOF)
+        except BaseException:
+            with contextlib.suppress(OSError):
+                os.remove(path)
+            raise
     finally:
-        chunks.unpersist()
+        shutil.rmtree(parts_dir, ignore_errors=True)
     return True

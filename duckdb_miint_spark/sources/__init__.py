@@ -1,8 +1,11 @@
 """Table-function sources (SURVEY.md §2.2.1) as Spark-native readers.
 
-Each reader mirrors a reference table function's schema and semantics:
+Each reader mirrors a reference table function's schema and semantics.
+The binary and sequence-file readers (fastx, sam/bam, sff, biom) plan
+their splits on the driver and scan them in one ``mapInArrow``
+(``arrow_batch.split_scan``):
 
-- ``read_fastx``          — FASTA/FASTQ (+gzip, paired-end, glob) DataSource
+- ``read_fastx``          — FASTA/FASTQ (+gzip, paired-end, glob) reader
 - ``read_alignments``     — SAM/BAM reader (pure-Python, no htslib)
 - ``read_sequences_sam``  — sequence view of SAM/BAM in the fastx schema
 - ``read_sequences_sff``  — 454 SFF binary reader

@@ -1,19 +1,30 @@
-"""Arrow batching for the Python DataSource readers.
+"""Arrow batching and the split scan shared by the file readers.
 
-A Python DataSource ``read()`` may yield plain tuples (pickled row-at-a-time
-— a per-row Python→JVM cost that dominates at FASTQ/SAM scale) or
-``pyarrow.RecordBatch`` objects, which transfer one Arrow buffer per batch.
-All the bundled readers (fastx / sam / sff) parse row-by-row in Python
-either way; batching moves the handoff from O(rows) pickled tuples to
-O(rows / batch_size) Arrow buffers, which is where the scan time goes once
-the parser itself is warm.
+Every file reader (fastx / sam / sff / biom) validates its input and plans
+its splits on the driver, once, then returns :func:`split_scan`: one
+``mapInArrow`` over a one-row-per-split "slot" relation, whose Python
+function runs the reader's per-split generator. The readers parse
+row-by-row in Python; :func:`batched` hands the rows to the JVM as one
+Arrow buffer per batch instead of a pickled tuple per row, which is where
+the scan time goes once the parser itself is warm.
+
+The slot relation is a JVM ``LogicalRDD`` over ``range(0, n, 1, n)``:
+partition *i* holds the single row *i*, so split *i* is read by partition
+*i* and row order (and each file's 1-based ``sequence_index``) follows
+split order. Binding and planning it starts no Python process. Its size
+estimate is unknown (``spark.sql.defaultSizeInBytes``), like a file scan's
+before statistics, so a reader's output is never auto-broadcast. A
+``spark.range(n)`` slot relation would instead report a few bytes per
+split, and a join with any small table would broadcast the whole read.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator, Sequence
+from typing import Any
 
 import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -73,3 +84,24 @@ def batched(rows: Iterator[tuple], schema: StructType, batch_rows: int = DEFAULT
             [pa.array(c, type=aschema.field(i).type) for i, c in enumerate(cols)],
             schema=aschema,
         )
+
+
+def split_scan(
+    spark: SparkSession,
+    splits: Sequence[Any],
+    read_split: Callable[[Any], Iterator[pa.RecordBatch]],
+    schema: StructType,
+) -> DataFrame:
+    """``read_split(splits[i])`` for every split, as one DataFrame with
+    one partition per split, in split order (module docstring)."""
+    n = len(splits)
+    jspark = spark._jsparkSession
+    ids = jspark.range(0, n, 1, n).toDF()
+    slots = DataFrame(jspark.createDataFrame(ids.javaRDD(), ids.schema()), spark)
+
+    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                yield from read_split(splits[i])
+
+    return slots.mapInArrow(scan, schema)

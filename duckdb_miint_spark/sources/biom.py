@@ -18,8 +18,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+from duckdb_miint_spark.sources.arrow_batch import split_scan
 
 BIOM_EPSILON = 1e-10
 
@@ -159,46 +160,6 @@ def _biom_record_batches(path: str, include_filepath: bool):
         yield pa.RecordBatch.from_arrays(cols, names=names)
 
 
-class BiomPartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
-
-
-class BiomReader(DataSourceReader):
-    def __init__(self, files: list[str], include_filepath: bool):
-        self.files = files
-        self.include_filepath = include_filepath
-
-    def partitions(self):
-        return [BiomPartition(p) for p in self.files]
-
-    def read(self, partition: BiomPartition):
-        yield from _biom_record_batches(partition.path, self.include_filepath)
-
-
-class BiomDataSource(DataSource):
-    """``spark.read.format("biom")`` — options: files (json list),
-    include_filepath."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "biom"
-
-    def schema(self) -> StructType:
-        fields = list(BIOM_SCHEMA.fields)
-        if self.options.get("include_filepath", "false") != "true":
-            fields = fields[:-1]
-        return StructType(fields)
-
-    def reader(self, schema: StructType) -> BiomReader:
-        import json
-
-        return BiomReader(
-            json.loads(self.options["files"]),
-            self.options.get("include_filepath", "false") == "true",
-        )
-
-
 def read_biom(
     spark: SparkSession, filename: str | list[str], include_filepath: bool = False
 ) -> DataFrame:
@@ -207,8 +168,6 @@ def read_biom(
     (HDF5 is not splittable; files are the parallel unit, as in the
     reference), Arrow-batched with a vectorized CSC→COO — validated at
     the reference's 13M-nonzero scale (tests/test_biom_ncbi.py)."""
-    import json
-
     files = [filename] if isinstance(filename, str) else list(filename)
     if not files:
         raise BiomError("at least one file path must be provided")
@@ -216,10 +175,10 @@ def read_biom(
         if not os.path.exists(p):
             raise BiomError(f"File not found: {p}")
         _open_validated(p)  # bind-time structure validation (metadata only)
-    spark.dataSource.register(BiomDataSource)
-    return (
-        spark.read.format("biom")
-        .option("files", json.dumps(files))
-        .option("include_filepath", "true" if include_filepath else "false")
-        .load()
+    fields = BIOM_SCHEMA.fields if include_filepath else BIOM_SCHEMA.fields[:-1]
+    return split_scan(
+        spark,
+        files,
+        lambda path: _biom_record_batches(path, include_filepath),
+        StructType(fields),
     )

@@ -37,14 +37,13 @@ from __future__ import annotations
 import glob as globmod
 import gzip
 import io
-import json
 import os
 import struct
 import warnings
 from collections.abc import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -55,6 +54,7 @@ from pyspark.sql.types import (
 )
 
 from duckdb_miint_spark.functions.cigar import cigar_reference_span
+from duckdb_miint_spark.sources.arrow_batch import batched, split_scan
 
 INT_TAGS = ("AS", "XS", "YS", "XN", "XM", "XO", "XG", "NM")
 STR_TAGS = ("YT", "MD", "SA")
@@ -890,7 +890,7 @@ def plan_bam_splits(path: str, target_bytes: int) -> list[tuple[int, int]]:
     return [(a, b) for a, b in zip(bounds, bounds[1:]) if a < b]
 
 
-# --- planning + DataSource ---------------------------------------------------
+# --- scan planning (driver) ---------------------------------------------------
 
 
 def resolve_sam_files(filename: str | list[str]) -> list[str]:
@@ -943,117 +943,53 @@ def plan_sam_scan(
     return plans
 
 
-class SamPartition(InputPartition):
-    def __init__(
-        self,
-        path: str,
-        bam: bool,
-        known_refs: list[str],
-        start: int = 0,
-        end: int | None = None,
-    ):
-        self.path = path
-        self.bam = bam
-        self.known_refs = known_refs
-        self.start = start
-        self.end = end
-
-
-class SamReader(DataSourceReader):
-    def __init__(
-        self,
-        plans,
-        include_seq_qual: bool,
-        include_filepath: bool,
-        max_split_bytes: int | None = None,
-    ):
-        self.plans = plans
-        self.include_seq_qual = include_seq_qual
-        self.include_filepath = include_filepath
-        self.max_split_bytes = max_split_bytes
-
-    def partitions(self):
-        parts = []
-        for p, b, k in self.plans:
-            splittable = b or not _is_gzip_file(p)  # BAM splits; plain gzip can't
-            if (
-                self.max_split_bytes is not None
-                and splittable
-                and os.path.getsize(p) > self.max_split_bytes
-            ):
-                ranges = (
-                    plan_bam_splits(p, self.max_split_bytes)
-                    if b
-                    else plan_sam_splits(p, self.max_split_bytes)
-                )
-                parts += [SamPartition(p, b, k, s, e) for s, e in ranges]
-            else:
-                parts.append(SamPartition(p, b, k))
-        return parts
-
-    def read(self, partition: SamPartition):
-        from duckdb_miint_spark.sources.arrow_batch import batched
-
-        fp = partition.path if self.include_filepath else None
-        if partition.bam and partition.end is not None:
-            rows = read_bam_range(
-                partition.path,
-                partition.start,
-                partition.end,
-                self.include_seq_qual,
-                fp,
-            )
-        elif partition.bam:
-            rows = read_bam(partition.path, self.include_seq_qual, fp)
-        elif partition.end is not None:
-            rows = read_sam_text_range(
-                partition.path,
-                partition.start,
-                partition.end,
-                set(partition.known_refs),
-                self.include_seq_qual,
-                fp,
-            )
-        else:
-            rows = read_sam_text(
-                partition.path, set(partition.known_refs), self.include_seq_qual, fp
-            )
-        # Arrow-batched handoff (buffer per batch, not pickled row tuples)
-        yield from batched(
-            rows, alignments_schema(self.include_seq_qual, self.include_filepath)
-        )
-
-
 def _is_gzip_file(path: str) -> bool:
     with open(path, "rb") as f:
         return f.read(2) == b"\x1f\x8b"
 
 
-class SamDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return "sam_alignments"
+def plan_alignment_splits(
+    plans: list[tuple[str, bool, list[str]]], max_split_bytes: int | None
+) -> list[tuple[str, bool, list[str], int, int | None]]:
+    """(path, is_bam, known_refs, start, end) per split: one whole-file
+    split (``end`` None) per file, or byte ranges for files larger than
+    ``max_split_bytes`` (BAM and plain SAM split; plain-gzip SAM can't)."""
+    splits = []
+    for p, b, k in plans:
+        splittable = b or not _is_gzip_file(p)
+        if (
+            max_split_bytes is not None
+            and splittable
+            and os.path.getsize(p) > max_split_bytes
+        ):
+            ranges = (
+                plan_bam_splits(p, max_split_bytes)
+                if b
+                else plan_sam_splits(p, max_split_bytes)
+            )
+            splits += [(p, b, k, s, e) for s, e in ranges]
+        else:
+            splits.append((p, b, k, 0, None))
+    return splits
 
-    def schema(self) -> StructType:
-        return alignments_schema(
-            self.options.get("include_seq_qual", "false") == "true",
-            self.options.get("include_filepath", "false") == "true",
-        )
 
-    def reader(self, schema: StructType) -> SamReader:
-        opts = self.options
-        files = json.loads(opts["files"])
-        ref_lengths = json.loads(opts.get("reference_lengths", "null"))
-        if ref_lengths is not None:
-            ref_lengths = [tuple(r) for r in ref_lengths]
-        plans = plan_sam_scan(files, ref_lengths)
-        msb = opts.get("max_split_bytes")
-        return SamReader(
-            plans,
-            opts.get("include_seq_qual", "false") == "true",
-            opts.get("include_filepath", "false") == "true",
-            int(msb) if msb else None,
-        )
+def read_sam_split(
+    split: tuple[str, bool, list[str], int, int | None],
+    include_seq_qual: bool,
+    include_filepath: bool,
+) -> Iterator[pa.RecordBatch]:
+    """Arrow batches for one split planned by :func:`plan_alignment_splits`."""
+    path, bam, known_refs, start, end = split
+    fp = path if include_filepath else None
+    if bam and end is not None:
+        rows = read_bam_range(path, start, end, include_seq_qual, fp)
+    elif bam:
+        rows = read_bam(path, include_seq_qual, fp)
+    elif end is not None:
+        rows = read_sam_text_range(path, start, end, set(known_refs), include_seq_qual, fp)
+    else:
+        rows = read_sam_text(path, set(known_refs), include_seq_qual, fp)
+    yield from batched(rows, alignments_schema(include_seq_qual, include_filepath))
 
 
 def read_alignments(
@@ -1099,18 +1035,13 @@ def read_alignments(
     files = resolve_sam_files(filename)
     if isinstance(reference_lengths, DataFrame):
         reference_lengths = [(r[0], int(r[1])) for r in reference_lengths.collect()]
-    plan_sam_scan(files, reference_lengths)  # eager bind-time validation
-    spark.dataSource.register(SamDataSource)
-    reader = (
-        spark.read.format("sam_alignments")
-        .option("files", json.dumps(files))
-        .option("reference_lengths", json.dumps(reference_lengths))
-        .option("include_seq_qual", "true" if include_seq_qual else "false")
-        .option("include_filepath", "true" if include_filepath else "false")
+    plans = plan_sam_scan(files, reference_lengths)  # bind-time validation
+    return split_scan(
+        spark,
+        plan_alignment_splits(plans, max_split_bytes),
+        lambda split: read_sam_split(split, include_seq_qual, include_filepath),
+        alignments_schema(include_seq_qual, include_filepath),
     )
-    if max_split_bytes is not None:
-        reader = reader.option("max_split_bytes", str(max_split_bytes))
-    return reader.load()
 
 
 read_sam = read_alignments  # reference alias (miint_extension.cpp)

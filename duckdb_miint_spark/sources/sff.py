@@ -13,15 +13,14 @@ no stdin and no intra-file splits — same as the reference.
 from __future__ import annotations
 
 import glob as globmod
-import json
 import os
 import struct
 from collections.abc import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-from pyspark.sql.types import StructType
 
+from duckdb_miint_spark.sources.arrow_batch import batched, split_scan
 from duckdb_miint_spark.sources.fastx import fastx_schema
 
 SFF_MAGIC = 0x2E736666  # '.sff'
@@ -113,51 +112,14 @@ def parse_sff(path: str, trim: bool = True) -> Iterator[tuple[str, str, list[int
             yield name, bases, quals
 
 
-class SffPartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+def read_sff_split(path: str, trim: bool, include_filepath: bool) -> Iterator[pa.RecordBatch]:
+    """Arrow batches for one SFF file (one split per file)."""
+    def rows():
+        for idx, (name, bases, quals) in enumerate(parse_sff(path, trim), start=1):
+            row = (idx, name, None, bases, None, quals, None)
+            yield row + (path,) if include_filepath else row
 
-
-class SffReader(DataSourceReader):
-    def __init__(self, files: list[str], trim: bool, include_filepath: bool):
-        self.files = files
-        self.trim = trim
-        self.include_filepath = include_filepath
-
-    def partitions(self):
-        return [SffPartition(p) for p in self.files]
-
-    def read(self, partition: SffPartition):
-        from duckdb_miint_spark.sources.arrow_batch import batched
-        from duckdb_miint_spark.sources.fastx import fastx_schema
-
-        def rows():
-            for idx, (name, bases, quals) in enumerate(
-                parse_sff(partition.path, self.trim), start=1
-            ):
-                row = (idx, name, None, bases, None, quals, None)
-                if self.include_filepath:
-                    row = row + (partition.path,)
-                yield row
-
-        # Arrow-batched handoff (buffer per batch, not pickled row tuples)
-        yield from batched(rows(), fastx_schema(self.include_filepath))
-
-
-class SffDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return "sff"
-
-    def schema(self) -> StructType:
-        return fastx_schema(self.options.get("include_filepath", "false") == "true")
-
-    def reader(self, schema: StructType) -> SffReader:
-        return SffReader(
-            json.loads(self.options["files"]),
-            self.options.get("trim", "true") == "true",
-            self.options.get("include_filepath", "false") == "true",
-        )
+    yield from batched(rows(), fastx_schema(include_filepath))
 
 
 def read_sequences_sff(
@@ -182,11 +144,9 @@ def read_sequences_sff(
             head = fh.read(8)
         if len(head) >= 4 and struct.unpack_from(">I", head, 0)[0] != SFF_MAGIC:
             raise SffError(f"Invalid SFF magic number: {p}")
-    spark.dataSource.register(SffDataSource)
-    return (
-        spark.read.format("sff")
-        .option("files", json.dumps(files))
-        .option("trim", "true" if trim else "false")
-        .option("include_filepath", "true" if include_filepath else "false")
-        .load()
+    return split_scan(
+        spark,
+        files,
+        lambda path: read_sff_split(path, trim, include_filepath),
+        fastx_schema(include_filepath),
     )

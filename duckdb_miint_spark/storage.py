@@ -495,7 +495,7 @@ def _stored_prop(spark: SparkSession, table: str, prop: str) -> str | None:
         if val is None or "does not have property" in str(val):
             return None
         return val
-    except Exception:  # noqa: BLE001 — catalog access is best-effort
+    except AnalysisException:  # no such table
         return None
 
 
@@ -504,7 +504,7 @@ def _table_bucket_count(spark: SparkSession, table: str) -> int | None:
         for r in spark.sql(f"DESCRIBE FORMATTED `{table}`").collect():
             if (r["col_name"] or "").strip() == "Num Buckets":
                 return int(r["data_type"].strip())
-    except Exception:  # noqa: BLE001
+    except AnalysisException:  # no such table
         return None
     return None
 
@@ -515,7 +515,7 @@ def _table_location(spark: SparkSession, table: str) -> str | None:
             if (r["col_name"] or "").strip() == "Location":
                 loc = r["data_type"].strip()
                 return loc[len("file:"):] if loc.startswith("file:") else loc
-    except Exception:  # noqa: BLE001
+    except AnalysisException:  # no such table
         return None
     return None
 
@@ -741,7 +741,7 @@ def refresh_graft_layout(
                     _register_source(spark, sf_dir, g.fact)
                 try:
                     grain_rows = spark.table(name).count()  # metadata count
-                except Exception:  # noqa: BLE001
+                except AnalysisException:  # table dropped under us
                     grain_rows = None
                 spark.sql(
                     f"ALTER TABLE `{name}` SET TBLPROPERTIES "
@@ -822,7 +822,7 @@ def write_bucketed(
     # drives the tiny-grain single-partition serving decision
     try:
         props.append(f"'{GRAIN_ROWS_PROP}'='{spark.table(table).count()}'")
-    except Exception:  # noqa: BLE001 — the count is an optimization hint
+    except AnalysisException:  # table dropped under us: no hint
         pass
     if props:
         spark.sql(

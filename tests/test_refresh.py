@@ -349,3 +349,29 @@ def test_non_appendable_graft_rebuilds(graft_session, tmp_path):
         assert actions == {"graft_b_pq_codes": "rebuilt"}, actions
     finally:
         spark.sql("DROP TABLE IF EXISTS graft_b_pq_codes")
+
+
+def test_catalog_error_propagates_out_of_refresh(graft_session, tmp_path, monkeypatch):
+    """Only a missing table (AnalysisException) reads as "no stored
+    property". Any other failure reading one (here a non-Analysis error
+    from spark.sql) must surface out of refresh_graft_layout instead of
+    silently turning the append into a full rebuild."""
+    from duckdb_miint_spark.storage import build_graft_layout, refresh_graft_layout
+
+    spark = graft_session
+    table = ["graft_b_events_hourly"]
+    sf = _make_sf_dir(tmp_path)
+    build_graft_layout(spark, sf, 4, tables=table)
+    _append_events_file(sf)
+    real_sql = spark.sql
+
+    def flaky(query, *args, **kwargs):
+        if query.startswith("SHOW TBLPROPERTIES"):
+            raise RuntimeError("catalog unavailable")
+        return real_sql(query, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", flaky)
+    with pytest.raises(RuntimeError, match="catalog unavailable"):
+        refresh_graft_layout(spark, sf, 4, tables=table)
+    monkeypatch.undo()
+    assert refresh_graft_layout(spark, sf, 4, tables=table) == {table[0]: "appended"}

@@ -325,6 +325,46 @@ def test_copy_bam_distributed_equals_single(spark, tmp_path):
         spark.catalog.dropTempView("lineitem")
 
 
+def _aln_df(spark, refs, n=400):
+    """A hermetic alignments DataFrame over ``refs``, in 4 partitions."""
+    rows = [
+        (f"q{i}", 0 if i % 3 else 16, refs[i % len(refs)], 1 + i * 7, i % 60,
+         f"{20 + i % 30}M", "*", 0, 0)
+        for i in range(n)
+    ]
+    cols = "read_id string, flags int, reference string, position long, mapq int, " \
+        "cigar string, mate_reference string, mate_position long, template_length long"
+    return spark.createDataFrame(rows, cols).repartition(4)
+
+
+def test_copy_bam_distributed_leaves_only_the_bam(spark, tmp_path):
+    """A successful distributed write leaves the BAM and no part files."""
+    from duckdb_miint_spark.sinks import copy_bam
+
+    refs = [("chr1", 100_000), ("chr2", 50_000)]
+    df = _aln_df(spark, ["chr1", "chr2"])
+    out = str(tmp_path / "out.bam")
+    assert copy_bam(df, out, reference_lengths=refs, distributed=True) is True
+    assert os.listdir(tmp_path) == ["out.bam"]
+    back = read_alignments(spark, out).select("read_id", "flags", "reference", "position")
+    assert sorted(map(tuple, back.collect())) == sorted(
+        map(tuple, df.select("read_id", "flags", "reference", "position").collect())
+    )
+
+
+def test_copy_bam_distributed_failure_leaves_nothing(spark, tmp_path):
+    """A partition that raises (a reference missing from REFERENCE_LENGTHS)
+    fails the write and leaves neither the BAM nor the part files."""
+    from duckdb_miint_spark.sinks import copy_bam
+
+    df = _aln_df(spark, ["chr1", "chr2", "chrX"])
+    out = str(tmp_path / "out.bam")
+    with pytest.raises(Exception, match="Reference not in REFERENCE_LENGTHS: chrX"):
+        copy_bam(df, out, reference_lengths=[("chr1", 100_000), ("chr2", 50_000)],
+                 distributed=True)
+    assert os.listdir(tmp_path) == []
+
+
 def test_bam_errors(spark, tmp_path):
     from duckdb_miint_spark.sinks import copy_bam
 

@@ -336,6 +336,55 @@ def test_sff_errors(spark):
         read_sequences_sff(spark, f"{DATA}/fastq/small_a.fq")
 
 
+def _write_sff(path, reads, flow_chars="TACG"):
+    """A minimal SFF file: the common header (no index, key TCAG) and one
+    record per ``(name, bases, quals, (cql, cqr, cal, car))``, with the
+    8-byte padding the format requires after each section."""
+    import struct
+
+    def pad8(b):
+        return b + b"\x00" * (-len(b) % 8)
+
+    flows = len(flow_chars)
+    key = b"TCAG"
+    head = struct.pack(
+        ">IBBBBQIIHHHB", 0x2E736666, 0, 0, 0, 1, 0, 0, len(reads),
+        (31 + flows + len(key) + 7) & ~7, len(key), flows, 1,
+    )
+    out = pad8(head + flow_chars.encode() + key)
+    for name, bases, quals, clips in reads:
+        rh = struct.pack(">HHIHHHH", (16 + len(name) + 7) & ~7, len(name), len(bases), *clips)
+        out += pad8(rh + name.encode())
+        flowgram = struct.pack(f">{flows}H", *range(100, 100 + flows))
+        out += pad8(flowgram + bytes(range(1, len(bases) + 1)) + bases.encode() + bytes(quals))
+    with open(path, "wb") as fh:
+        fh.write(out)
+    return path
+
+
+def test_sff_hermetic_trim_filepath_and_magic(spark, tmp_path):
+    """read_sequences_sff on a file written here: quality and adapter clips
+    trim (or not), filepath, and the bind-time bad-magic error."""
+    path = _write_sff(str(tmp_path / "two.sff"), [
+        ("READ_A", "ACGTACGTAC", list(range(10, 20)), (3, 8, 0, 0)),
+        ("READ_B", "TTTTGGGG", list(range(30, 38)), (0, 0, 2, 6)),
+    ])
+    trimmed = [tuple(r) for r in read_sequences_sff(spark, path).collect()]
+    assert trimmed == [
+        (1, "READ_A", None, "GTACGT", None, list(range(12, 18)), None),
+        (2, "READ_B", None, "TTTGG", None, list(range(31, 36)), None),
+    ]
+    untrimmed = read_sequences_sff(spark, path, include_filepath=True, trim=False)
+    assert [tuple(r) for r in untrimmed.collect()] == [
+        (1, "READ_A", None, "ACGTACGTAC", None, list(range(10, 20)), None, path),
+        (2, "READ_B", None, "TTTTGGGG", None, list(range(30, 38)), None, path),
+    ]
+    bad = tmp_path / "bad.sff"
+    bad.write_bytes(b"\x00\x00\x00\x00" + open(path, "rb").read()[4:])
+    with pytest.raises(SffError, match="Invalid SFF magic"):
+        read_sequences_sff(spark, str(bad))
+
+
 # --- read_gff ----------------------------------------------------------------
 
 

@@ -562,3 +562,82 @@ def test_is_bgzf_extra_subfields(tmp_path):
     p = str(tmp_path / "x.fastq.gz")
     open(p, "wb").write(bytes(blob))
     assert _is_bgzf(p), "BGZF with extra subfields before BC must be detected"
+
+
+def _jobs_in(spark, group, action):
+    """Spark jobs ``action()`` starts, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("bgzf", [False, True], ids=["plain", "bgzf"])
+def test_split_count_paths_agree(spark, tmp_path, monkeypatch, bgzf):
+    """The split-count pass runs on the driver for small inputs and as one
+    Spark job above ``DRIVER_COUNT_BYTES``; both must fix the same
+    sequence_index offsets, so split reads give the same rows in the same
+    order either way."""
+    from duckdb_miint_spark.sources import fastx
+
+    path = _write_fastq(str(tmp_path / "c.fastq"), 3000, seed=5)
+    if bgzf:
+        path = _bgzip(path, str(tmp_path / "c.fastq.gz"))
+    split = 24 * 1024 if bgzf else 48 * 1024
+    driver, driver_jobs = _jobs_in(
+        spark, f"count-driver-{bgzf}", lambda: read_fastx(spark, path, max_split_bytes=split)
+    )
+    monkeypatch.setattr(fastx, "DRIVER_COUNT_BYTES", 0)
+    job, job_jobs = _jobs_in(
+        spark, f"count-job-{bgzf}", lambda: read_fastx(spark, path, max_split_bytes=split)
+    )
+    assert (driver_jobs, job_jobs) == (0, 1)
+    assert driver.rdd.getNumPartitions() == job.rdd.getNumPartitions() > 3
+    rows = driver.collect()
+    assert rows == job.collect()
+    assert [r.sequence_index for r in rows] == list(range(1, 3001))
+
+
+def _broadcast_subtrees(plan: str) -> list[str]:
+    """The plan text under each BroadcastExchange node of a plan string."""
+    lines = plan.splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = []
+    for i, line in enumerate(lines):
+        if "BroadcastExchange" in line:
+            sub = []
+            for nxt in lines[i + 1:]:
+                if depth(nxt) <= depth(line):
+                    break
+                sub.append(nxt)
+            out.append("\n".join(sub))
+    return out
+
+
+def test_reader_output_is_never_auto_broadcast(spark, tmp_path):
+    """A reader's size estimate is unknown, as a file scan's is before
+    statistics: joined to a one-row DataFrame, the whole read must never
+    be planned as the broadcast side."""
+    from duckdb_miint_spark.sources.sam import read_alignments
+
+    fq = _write_fastq(str(tmp_path / "b.fastq"), 200)
+    sam = _write_sam(str(tmp_path / "b.sam"), 200)
+    reads = {
+        "read_fastx": read_fastx(spark, fq, max_split_bytes=8 * 1024),
+        "read_alignments": read_alignments(spark, sam, max_split_bytes=8 * 1024),
+    }
+    one = spark.createDataFrame([("r1", "x")], ["read_id", "tag"])
+    for name, df in reads.items():
+        joined = df.join(one, "read_id")
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan, name
+        assert not any("MapInArrow" in sub for sub in _broadcast_subtrees(plan)), (
+            f"{name} is planned as the broadcast side:\n{plan}"
+        )
+        assert joined.count() == df.filter("read_id = 'r1'").count()
