@@ -64,15 +64,8 @@ Methodology
   reported separately as ``plan_build_sec`` (one full build of the set)
   rather than silently folded into per-query numbers. The DuckDB baseline
   keeps parse+plan inside its timing: at ~1 ms/query it is noise there.
-- Input tables are pinned once during warm-up (repartitioned to the
-  session parallelism + cached; SPARK_GRAFT_PIN_BYTES below): the driver's
-  parquet files are single-row-group, which Spark scans as ONE non-empty
-  task — without the repair, per-row-heavy queries run on 1 of 32 cores.
-  The DuckDB baseline gets the same treatment from the OS page cache +
-  its buffer pool on a warm run (DuckDB parallelizes a single row group
-  internally; Spark's scan granularity is the row group); what this
-  removes on both engines is I/O and scan-parallelism artifacts, leaving
-  plan execution — the thing the benchmark compares.
+- Both engines read their inputs from the parquet files on every pass;
+  neither side keeps a decoded copy of an input table between passes.
 - ENGINE-INTERLEAVED, median-of-3 (round 6): the round-5 artifact lost
   1.2x of ratio purely to ambient load hitting the two engines' separate
   measurement windows differently (the DuckDB loop ran minutes after the
@@ -108,11 +101,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Pin small inputs (repartition + cache) — see read_table in session.py.
-os.environ.setdefault("SPARK_GRAFT_PIN_BYTES", str(4 * 1024**3))
-
 from duckdb_miint_spark.registry import load_all
-from duckdb_miint_spark.session import TABLES, get_spark, read_table
+from duckdb_miint_spark.session import TABLES, get_spark
 
 # Headline set: representative, one entry per operator family.
 BENCH_QUERIES = [
@@ -405,31 +395,22 @@ def main() -> None:
     # back-to-back — inside this box's run noise); at sf10 it lands at ~54,
     # which keeps all 32 cores busy on the multi-second shuffles (a
     # hardwired 8 cost 2-4x on every shuffle-heavy query there — PERF.md
-    # scale validations). The initialPartitionNum AQE coalesces down from
-    # is pinned to the same number; session defaults outside the bench
-    # stay at 4x cores.
+    # scale validations). size_session_for_input sets the
+    # initialPartitionNum AQE coalesces down from to the same number;
+    # session defaults outside the bench stay at 4x cores.
     from duckdb_miint_spark.session import dir_parquet_bytes, size_session_for_input
 
     dir_bytes = dir_parquet_bytes(sf_dir)
-    # Heap sized to the pinned caches + shuffle at the headline scale:
-    # deserialized caches and execution memory contend, and GC pressure
+    # Heap sized to execution memory at the headline scale: GC pressure
     # from an undersized heap is multi-second per-query noise (sf2 at
     # 24g: woltka 9.6 s; at 48g: 2.7 s — same plan). ~1 GB per 10 MB of
     # compressed input, clamped [24g, 64g]; explicit env always wins.
     heap_gb = max(24, min(64, dir_bytes // (10 << 20)))
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{heap_gb}g")
     target_parts = max(cpus, min(4 * cpus, dir_bytes // (32 << 20)))
-    os.environ.setdefault("SPARK_GRAFT_INITIAL_PARTS", str(target_parts))
     spark = get_spark("bench", cpus=cpus, aqe=aqe, shuffle_partitions=target_parts)
     size_session_for_input(spark, dir_bytes)
     reg = load_all()
-
-    # Warm-up: pin every input table (read_table repartitions small inputs
-    # to full parallelism and caches; every query reads the same instance).
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            read_table(spark, sf_dir, name).count()
 
     # PRIMARY LAYOUT = the graft catalog (VERDICT r10 #3). A production
     # 100 TB deployment queries a maintained layout — bucketed facts,

@@ -32,8 +32,6 @@ returns the flat row form, which is what downstream operators
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -57,87 +55,6 @@ def _island_pass(base: DataFrame, part_cols: list[str]) -> DataFrame:
     )
 
 
-def _local_merge_arrow(base: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Phase-1 local island merge with ZERO shuffle: sort each input
-    partition by (*group_cols, __s, __e) — a narrow, spillable JVM sort —
-    then one streaming ``mapInArrow`` pass that merges islands within
-    each Arrow batch, fully vectorized (numpy segmented cummax via the
-    group-offset trick; no per-row Python). Batches arrive in partition
-    order, so rows inside a batch are sorted and group runs are
-    contiguous; islands spanning a batch/partition boundary come out as
-    ≤2 rows and phase 2 re-merges them — batch-local merging is all the
-    reduction phase 1 needs, never a correctness requirement.
-
-    Memory is O(batch) in Python and O(spill) in the JVM sort: no task
-    ever buffers a whole group, so the single-phase killer (one contig
-    bigger than an executor) cannot occur, and unlike the window form
-    there is NO exchange of the fact-sized input at all — at 100 TB the
-    network shuffle this deletes is the dominant cost."""
-    n_groups = len(group_cols)
-
-    def merge(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            # Integral bounds only (ADVICE r9): astype(int64) would
-            # silently TRUNCATE float/decimal interval bounds, diverging
-            # from the window strategy, which handles any orderable type.
-            # Fail loudly instead — callers with fractional bounds must
-            # use SPARK_GRAFT_ISLANDS=window.
-            for fi in (n_groups, n_groups + 1):
-                if not pa.types.is_integer(batch.schema.field(fi).type):
-                    raise TypeError(
-                        "arrow island merge requires integral start/stop, got "
-                        f"{batch.schema.field(fi).type} for {batch.schema.field(fi).name}"
-                    )
-            s = batch.column(n_groups).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            e = batch.column(n_groups + 1).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            # group-run boundaries (null-aware: null == null stays one run)
-            new_grp = np.zeros(n, dtype=bool)
-            new_grp[0] = True
-            for gi in range(n_groups):
-                g = batch.column(gi)
-                a, b = g.slice(1), g.slice(0, n - 1)
-                neq = pc.fill_null(pc.not_equal(a, b), True)
-                both_null = pc.and_(pc.is_null(a), pc.is_null(b))
-                neq = pc.if_else(both_null, pa.scalar(False), neq)
-                new_grp[1:] |= neq.to_numpy(zero_copy_only=False)
-            # segmented (per group-run) cummax of e, vectorized: shift each
-            # run's values into its own disjoint band, one global cummax,
-            # shift back. Falls back to a per-run loop if bands overflow.
-            grp_id = np.cumsum(new_grp) - 1
-            lo = int(e.min())
-            span = int(e.max()) - lo + 1
-            n_runs = int(grp_id[-1]) + 1
-            if span < (1 << 62) // max(n_runs, 1):
-                adj = (e - lo) + grp_id * span
-                cummax_e = np.maximum.accumulate(adj) - grp_id * span + lo
-            else:  # pragma: no cover — needs a ~2^62 value range
-                cummax_e = np.empty(n, dtype=np.int64)
-                bounds = np.flatnonzero(new_grp)
-                for i0, i1 in zip(bounds, np.append(bounds[1:], n)):
-                    cummax_e[i0:i1] = np.maximum.accumulate(e[i0:i1])
-            new_island = new_grp.copy()
-            rest = ~new_grp
-            new_island[rest] = s[rest] > np.roll(cummax_e, 1)[rest]
-            starts = np.flatnonzero(new_island)
-            out_s = s[starts]
-            out_e = np.maximum.reduceat(e, starts)
-            idx = pa.array(starts)
-            cols = [batch.column(gi).take(idx) for gi in range(n_groups)]
-            cols.append(pa.array(out_s, type=batch.schema.field(n_groups).type))
-            cols.append(pa.array(out_e, type=batch.schema.field(n_groups + 1).type))
-            yield pa.RecordBatch.from_arrays(cols, schema=batch.schema)
-
-    sorted_parts = base.sortWithinPartitions(*group_cols, "__s", "__e")
-    return sorted_parts.mapInArrow(merge, base.schema)
-
-
 def compress_intervals_islands(
     df: DataFrame,
     start_col: str = "start",
@@ -147,10 +64,11 @@ def compress_intervals_islands(
     """Merge overlapping/touching intervals per group → one row per island.
 
     Output columns: *group_cols, start, stop (sorted within group by start).
-    Two-phase (see module docstring): local islands per input partition,
-    then a global pass per group over the locally-merged remainder. The
-    phase-1 groupBy rides the window's hash exchange (its keys are a
-    subset of the aggregation keys), so the big data is shuffled once.
+    Phase 0 (see module docstring) reduces the input to one row per
+    (group, start); :func:`islands_from_reduced` then runs the local and
+    global island passes. The phase-1 groupBy rides the window's hash
+    exchange (its keys are a subset of the aggregation keys), so the big
+    data is shuffled once.
     """
     group_cols = list(group_cols)
     s = F.least(F.col(start_col), F.col(stop_col)).alias("__s")
@@ -158,45 +76,24 @@ def compress_intervals_islands(
     base = df.filter(
         F.col(start_col).isNotNull() & F.col(stop_col).isNotNull()
     ).select(*group_cols, s, e)
-    # Phase 0 (both strategies): LOSSLESS pre-reduction — intervals with
-    # the same (group, start) union to their max stop, so a plain
-    # ``groupBy(group, s).max(e)`` collapses them before anything else
-    # touches the data. Real alignment data piles starts (coverage depth);
-    # the synthetic sf10 gate is 12x duplicated per (contig, position).
-    # This is a hash AGGREGATE, not a distinct: it gets map-side partial
-    # combine, and its output makes every later window's ORDER BY (s) a
-    # total order per group (the round-6 tie-instability fix, now free).
-    # Measured sf10 (islands stage only, medians of 3): two-phase window
-    # on raw rows 8.0 s -> dedup + two-phase 5.1 s. In the degenerate
-    # no-duplicates case the aggregate exchanges the same rows the window
-    # form always exchanged — it replaces that shuffle, not adds to it.
+    # Phase 0: LOSSLESS pre-reduction — intervals with the same (group,
+    # start) union to their max stop, so a plain ``groupBy(group, s)
+    # .max(e)`` collapses them before anything else touches the data.
+    # Real alignment data piles starts (coverage depth); the synthetic
+    # sf10 gate is 12x duplicated per (contig, position). This is a hash
+    # AGGREGATE, not a distinct: it gets map-side partial combine, and its
+    # output makes every later window's ORDER BY (s) a total order per
+    # group (the round-6 tie-instability fix, now free). Measured sf10
+    # (islands stage only, medians of 3): two-phase window on raw rows
+    # 8.0 s -> dedup + two-phase 5.1 s. In the degenerate no-duplicates
+    # case the aggregate exchanges the same rows the window form always
+    # exchanged — it replaces that shuffle, not adds to it. Because
+    # (group, s) is unique here, every phase-1 island has a unique
+    # (group, min s), so phase 1 needs no distinct. (A zero-shuffle
+    # mapInArrow local merge was measured slower at sf2 and sf10 and
+    # removed; PERF.md round 9.)
     dedup = base.groupBy(*group_cols, "__s").agg(F.max("__e").alias("__e"))
-    # Phase-1 strategy (SPARK_GRAFT_ISLANDS, default "window"):
-    #   window — islands within (group, partition-id) after the dedup
-    #            exchange, then the tiny global pass. Pure JVM; the
-    #            measured-best local form.
-    #   arrow  — _local_merge_arrow: partition-local JVM sort (narrow, NO
-    #            exchange) + one vectorized mapInArrow merge pass, applied
-    #            to the RAW rows (it replaces the dedup exchange too — the
-    #            fact-sized input is never shuffled at all). Measured
-    #            SLOWER locally at sf2 AND sf10 (4.4 vs 2.6 s sf2 / 21.8
-    #            vs 10.4 s sf10 gate query): the Arrow round trip of the
-    #            fact costs more than the in-process exchange it saves.
-    #            Kept because the trade flips on a real cluster, where the
-    #            exchange is network+disk instead of process-local memory:
-    #            a node-local Arrow pass at ~GB/s/node beats re-shipping
-    #            100 TB through the shuffle service.
-    phase1 = os.environ.get("SPARK_GRAFT_ISLANDS", "window")
-    if phase1 == "arrow":
-        local = _local_merge_arrow(base, group_cols).distinct()
-    else:
-        staged = dedup.select("*", F.spark_partition_id().alias("__pid"))
-        local = _island_pass(staged, group_cols + ["__pid"]).drop("__pid").distinct()
-    return (
-        _island_pass(local, group_cols)
-        .withColumnRenamed("__s", "start")
-        .withColumnRenamed("__e", "stop")
-    )
+    return islands_from_reduced(dedup, group_cols, "__s", "__e")
 
 
 def islands_from_reduced(

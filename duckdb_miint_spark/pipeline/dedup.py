@@ -152,7 +152,7 @@ def xx_band_stream(sh_raw: DataFrame, num_perm: int = DEFAULT_NUM_PERM) -> DataF
     non-crypto hashes returning longs — no 32-hex-char materialization,
     long MIN aggregates, 8-byte shuffle values. Same band structure
     (b=num_perm, r=1) ⇒ identical recall guarantees to the md5 family.
-    Measured r13 (tools/ab_lsh_band_hash.py, sf2x20, noop sink): the
+    Measured r13 (OPTIMIZATION_r13.md, sf2x20, noop sink): the
     signature stage 2.20 → 1.11 s vs minhash_long; shingling is 0.29 s.
 
     NOT for ``incremental_near_dup``: its corpus side is the
@@ -263,7 +263,7 @@ def near_dup_pairs(
     candidate-doc slice (~0.1% of the corpus at 50k docs), never the
     full corpus.
 
-    NO intra-query .cache() (r14, tools/ab_lsh_cache.py at sf2x20):
+    NO intra-query .cache() (r14, OPTIMIZATION_r14.md, sf2x20):
     the multiply-consumed subtrees (the candidate pairs, 3 uses; the
     shingle stream, 2 uses) both end at or feed exchanges whose
     canonical plans are identical across uses, so Spark's ReuseExchange
@@ -340,7 +340,7 @@ def simhash32(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     # 'a'-'f' are exactly the nibbles 8..15 in md5's lowercase hex), so
     # the 32 votes come from bit arithmetic on 4 int chunks of the digest
     # instead of 32 per-row substring allocations + string compares
-    # (r13 A/B, tools/ab_expr_variants.py: 1.236 -> 0.949 s at sf2).
+    # (r13 A/B, OPTIMIZATION_r13.md: 1.236 -> 0.949 s at sf2).
     chunked = tokens.select(
         "id",
         *[
@@ -545,7 +545,7 @@ def incremental_exact(
       (map-side-combined) rows cross the network. One broadcast barrier
       where the r13 shape (semi-probe → matched-slice aggregate →
       broadcast the canonical map back) paid two; measured at sf2x20
-      interleaved (tools/ab_incr_exact.py): single-probe median 1.21 s
+      interleaved (OPTIMIZATION_r14.md): single-probe median 1.21 s
       vs probe 4.05 s under load, and it dominates structurally (same
       probe scan, one fewer broadcast round-trip). The union-with-base
       form rather than RIGHT OUTER JOIN broadcast(batch), which reads

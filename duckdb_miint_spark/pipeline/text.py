@@ -48,7 +48,7 @@ def token_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     materializing the match array. Only n_ws_tokens still builds the
     split array (a maximal-run count has no cheaper exact expression)."""
     t = F.col(text_col)
-    # n_ws_tokens forms A/B'd (r10, tools/ab_nws_tokens.py): the split-array
+    # n_ws_tokens forms A/B'd (r10, PERF.md round 10): the split-array
     # build vs regexp_count('[^ ]+') (JVM) vs RE2 count_substring_regex —
     # medians 3.21/2.95/3.05 s at sf10 and 1.22/1.35/1.22 s at sf2, all
     # within pass noise. The array build is NOT the query's cost; the
@@ -83,7 +83,7 @@ def quality_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     # alpha = total chars minus non-letters; translate() DELETES the 52
     # ASCII letters (same set as the oracle's [^A-Za-z]) with one table
     # lookup per char — no regex engine, no rewritten-string allocation
-    # proportional to the document (r13 A/B, tools/ab_expr_variants.py:
+    # proportional to the document (r13 A/B, OPTIMIZATION_r13.md:
     # 0.254 -> 0.207 s noop-sink at sf2; content-equal asserted there).
     letters = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
     base = df.select(
@@ -139,7 +139,7 @@ def bottomk_fingerprint(
     (~shingle count per doc) — shuffle-bytes cut, guide §2.2. Rows
     surviving the filter are exactly those whose md5 is among the k
     smallest DISTINCT values per doc, so the same collect_set/sort/slice
-    yields the identical fingerprint (r13 A/B, tools/ab_expr_variants.py:
+    yields the identical fingerprint (r13 A/B, OPTIMIZATION_r13.md:
     0.825 -> 0.694 s median at sf2x20, content equal).
 
     The rewrite needs Spark >= 3.5 (InferWindowGroupLimit); on an engine

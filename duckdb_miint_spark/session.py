@@ -19,9 +19,6 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Single source of truth for the driver heap default: get_spark() configures
-# the JVM with it and _pin_total_bytes() derives the pin budget from it, so
-# the two can never drift (they previously disagreed, 8g vs 4g).
 DEFAULT_DRIVER_MEM = "8g"
 
 TABLES = (
@@ -57,23 +54,22 @@ def get_spark(
     if aqe is None:
         aqe = os.environ.get("SPARK_GRAFT_AQE", "1") not in ("0", "false")
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "0")) or max(cpus, 8)
+        shuffle_partitions = max(cpus, 8)
     # AQE decides the real per-stage partition count by coalescing DOWN from
     # initialPartitionNum — so the initial number must be sized for the
     # LARGEST stage, not the average one. 4x cores keeps every core busy on
     # data-heavy stages (sf10 validation: 8 static reduce tasks on 32 cores
     # was a 2-4x tax on every shuffle-heavy query) while small stages
     # coalesce back to a handful of tasks at no cost.
-    initial_partitions = int(os.environ.get("SPARK_GRAFT_INITIAL_PARTS", "0")) or max(
-        shuffle_partitions, 4 * cpus
-    )
+    initial_partitions = max(shuffle_partitions, 4 * cpus)
     # Dimension-table broadcast must survive scale-up: the 10 MB default
     # stops broadcasting a TPC-H customer/supplier dim long before a real
     # cluster would (q5 at sf10 degraded to sort-merge-shuffling the 60M-row
     # fact — 33x vs DuckDB; broadcast restores the canonical star-join
     # plan). 64 MB is conservative for 100 TB clusters with multi-GB
-    # executor heaps; override with SPARK_GRAFT_BROADCAST.
-    broadcast_threshold = os.environ.get("SPARK_GRAFT_BROADCAST", "64MB")
+    # executor heaps; both thresholds are runtime confs if a caller needs
+    # another value.
+    broadcast_threshold = "64MB"
     # Executor Python workers must be able to import this package no matter
     # the caller's cwd: mapInArrow scans and pandas UDFs deserialize by
     # module reference. PYTHONPATH is read by the launched python workers
@@ -117,10 +113,7 @@ def get_spark(
         # it), which is exactly the invariant storage.compact_graft_layout
         # restores. Off by default since Spark 3.0 only because eager
         # file listing at planning can be costly on huge tables.
-        .config(
-            "spark.sql.legacy.bucketedTableScan.outputOrdering",
-            os.environ.get("SPARK_GRAFT_BUCKET_ORDERING", "true"),
-        )
+        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", DEFAULT_DRIVER_MEM))
@@ -190,7 +183,7 @@ def size_session_for_input(spark: SparkSession, input_bytes: int) -> int:
     # + an input-scaled advisoryPartitionSizeInBytes was the candidate
     # fix for dim-sized reduce stages fanning to `cores` tasks (VERDICT
     # r13 #5 — 9 of 24 bench rows ran faster at 8 cores than 32). Three
-    # within-session interleaved A/Bs (tools/ab_aqe.py) killed it: at
+    # within-session interleaved A/Bs (OPTIMIZATION_r14.md) killed it: at
     # sf10 under AQE-on the byte-based coalescing SERIALIZES CPU-dense
     # reduce stages whose shuffled bytes are tiny (minhash 2.49x,
     # dedup_exact_groups 1.66x, geomean 1.127 across the bench set) —
@@ -214,70 +207,23 @@ def size_session_for_input(spark: SparkSession, input_bytes: int) -> int:
     return target
 
 
-# Per-process cache of small repartitioned inputs (keyed by Spark app id so
-# a stopped/recreated session never serves stale DataFrames).
-_SMALL_INPUT_CACHE: dict = {}
-_PINNED_TOTALS: dict = {}
-
-
-def _pin_bytes() -> int:
-    """Per-table size cap for input pinning; 0 (the default) disables it."""
-    return int(os.environ.get("SPARK_GRAFT_PIN_BYTES", "0"))
-
-
-def _pin_total_bytes() -> int:
-    """CUMULATIVE compressed-bytes budget for pinning, per application.
-
-    Caching is only a win while every cached table actually stays in the
-    storage pool; past that point tables evict each other and every pass
-    re-scans AND re-caches (measured at sf10: q1 swung 10-80 s with all
-    1.7 GB of input pinned into a 64 g heap vs a stable 1.9 s unpinned —
-    the working set in columnar cache plus execution memory thrashes).
-    Default: 1/64 of the driver heap in compressed input bytes (a ~6 GB
-    columnar residency at the default 10-20x text/array expansion) —
-    everything pins at the sf2 headline (388 MB), facts stop pinning at
-    sf10+, where the multi-row-group native scans are pin-equivalent
-    anyway (PERF.md round-7). Explicit env always wins."""
-    env = os.environ.get("SPARK_GRAFT_PIN_TOTAL_BYTES")
-    if env is not None:
-        return int(env)
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", DEFAULT_DRIVER_MEM).lower().rstrip("b")
-    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}.get(mem[-1], 1)
-    heap = int(mem[:-1]) * mult if mem[-1] in "kmg" else int(mem)
-    return max(256 << 20, heap // 64)
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet table read with OPT-IN small-input parallelism repair.
+    """Parquet table read, served from the table's graft when one is current.
 
-    A parquet file written as ONE row group scans as one non-empty task no
-    matter how many byte-range splits Spark makes (row groups go to the
-    task holding their midpoint), so heavy per-row expressions downstream
-    run on a single core even on local[32]. With SPARK_GRAFT_PIN_BYTES=N
-    set (bench.py sets it), inputs smaller than N are repartitioned to the
-    session's default parallelism and cached once per process — the Spark
-    analogue of the warm DuckDB buffer pool. Default is OFF: plan-shape
-    tests assert parquet pushdown on the raw scans, and at cluster scale
-    inputs are many-file / many-row-group so the repair is moot.
+    When spark.graft.bucketedLayout=true and the catalog graft
+    graft_b_<name> (a plain copy re-bucketed on the join key, see
+    storage.graft_catalog) is current, serve that instead of the plain
+    parquet file. Joins/aggregations on the bucket key then run with NO
+    Exchange on the bucketed side — the 100×-scale layout recommendation
+    for fact-to-fact joins (orders ⋈ lineitem); see PERF.md
+    "bucketed-layout A/B". Tables with no graft skip the check.
+
+    NEVER cache a bucketed table: .cache() drops parquet filter pushdown
+    (the whole deserialized fact is scanned per query) and discards the
+    per-bucket file sort order (outputOrdering), reinserting per-task
+    Sorts under every SMJ. Measured at sf2: q3 on a cached bucketed
+    lineitem ran 11-17 s vs 0.8-1.5 s on the native bucketed scan.
     """
-    # Opt-in bucketed layout: when spark.graft.bucketedLayout=true and
-    # the catalog graft graft_b_<name> (a plain copy re-bucketed on the
-    # join key, see storage.graft_catalog) is current, serve that instead
-    # of the plain parquet file. Joins/aggregations on the bucket key then
-    # run with NO Exchange on the bucketed side — the 100×-scale layout
-    # recommendation for fact-to-fact joins (orders ⋈ lineitem); see
-    # PERF.md "bucketed-layout A/B". Tables with no graft skip the check.
-    #
-    # NEVER cache a bucketed table. The pin repair exists for
-    # single-row-group files whose scan can't parallelize —
-    # a bucketed table is n_buckets files and never has that
-    # problem — and .cache() actively DESTROYS the layout's
-    # two other advantages: InMemoryRelation drops parquet
-    # filter pushdown (the whole deserialized fact is scanned
-    # per query) and discards the per-bucket file sort order
-    # (outputOrdering), reinserting per-task Sorts under every
-    # SMJ. Measured at sf2: q3 on a cached bucketed lineitem
-    # ran 11-17 s vs 0.8-1.5 s on the native bucketed scan.
     from duckdb_miint_spark import storage
 
     graft = f"graft_b_{name}"
@@ -285,32 +231,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         bucketed = storage.serve(spark, sf_dir, graft)
         if bucketed is not None:
             return bucketed
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    pin = _pin_bytes()
-    if pin <= 0:
-        return df
-    try:
-        size = os.path.getsize(path) if os.path.isfile(path) else sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-    except OSError:
-        return df
-    if size >= pin:
-        return df
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    cached = _SMALL_INPUT_CACHE.get(key)
-    if cached is None:
-        app = spark.sparkContext.applicationId
-        spent = _PINNED_TOTALS.get(app, 0)
-        if spent + size > _pin_total_bytes():
-            return df  # budget exhausted: stay on the native parallel scan
-        _PINNED_TOTALS[app] = spent + size
-        cached = df.repartition(spark.sparkContext.defaultParallelism).cache()
-        _SMALL_INPUT_CACHE[key] = cached
-    return cached
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict:

@@ -216,12 +216,11 @@ def test_compress_intervals_spark(spark):
     assert out[3] == [(10, 25)]
 
 
-def test_compress_intervals_arrow_vs_window_phase1(spark, monkeypatch):
-    """The two phase-1 strategies (vectorized mapInArrow local merge vs
-    the window-over-partition-id form) must produce identical islands on
+def test_compress_intervals_islands_vs_driver_merge(spark):
+    """The island pipeline (phase-0 aggregate, per-partition-id window,
+    per-group window) must reproduce the driver-side reference merge on
     adversarial inputs: duplicate intervals, touching, nested, inverted,
-    NULLs, many groups (exercises the segmented-cummax group offsets),
-    and single-point intervals at batch-boundary-sized counts."""
+    NULLs and many groups spread over several partitions."""
     import random
 
     from duckdb_miint_spark.functions.intervals import (
@@ -231,7 +230,7 @@ def test_compress_intervals_arrow_vs_window_phase1(spark, monkeypatch):
 
     rng = random.Random(9)
     rows = []
-    for g in range(37):  # > groups per batch in one partition
+    for g in range(37):
         for _ in range(rng.randrange(1, 120)):
             a = rng.randrange(0, 500)
             b = a + rng.randrange(-30, 60)
@@ -242,21 +241,15 @@ def test_compress_intervals_arrow_vs_window_phase1(spark, monkeypatch):
             rows.append((f"g{g}", a, b))
     df = spark.createDataFrame(rows, "grp string, start long, stop long").repartition(7)
 
-    def run(mode):
-        monkeypatch.setenv("SPARK_GRAFT_ISLANDS", mode)
-        out = compress_intervals_islands(df, "start", "stop", ["grp"]).collect()
-        return sorted((r["grp"], r["start"], r["stop"]) for r in out)
-
-    arrow, window = run("arrow"), run("window")
-    assert arrow == window
-    # and both match the driver-side reference merge per group
+    out = compress_intervals_islands(df, "start", "stop", ["grp"]).collect()
+    got = sorted((r["grp"], r["start"], r["stop"]) for r in out)
     expected = []
     by_group: dict = {}
     for g, a, b in rows:
         by_group.setdefault(g, []).append((a, b))
     for g, pairs in by_group.items():
         expected += [(g, s, e) for s, e in merge_intervals_py(pairs)]
-    assert arrow == sorted(expected)
+    assert got == sorted(expected)
 
 
 # --- woltka vs real Woltka tool goldens (reference test/sql/woltka.test:27-60) ---

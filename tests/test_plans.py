@@ -139,7 +139,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
 
 
 def test_bucketed_layout_removes_exchanges_domain_queries(spark):
-    """The bucketed-layout treatment (tools/bucketed_ab.py) must remove
+    """The bucketed-layout treatment (PERF.md "bucketed-layout A/B") must remove
     the data-sized exchange from each promoted query — woltka's per-read
     dedup aggregate and both sides of having_big_orders' orderkey join —
     and must not change any answer."""
@@ -326,6 +326,27 @@ def test_islands_dedup_precedes_first_exchange(spark):
     # a Spark version changes the tree print, re-derive it.
     below_first_exec = plan.rsplit("Exchange hashpartitioning", 1)[1]
     assert "partial_max" in below_first_exec, plan[-1500:]
+
+
+def test_islands_three_hash_exchanges_without_aqe(spark):
+    """compress_intervals_islands shuffles three times: the phase-0
+    (group, start) aggregate, the phase-1 window over (group,
+    partition-id) and the phase-2 window over group. Phase 0 makes
+    (group, start) unique, so phase-1 islands need no distinct; the
+    distinct's fourth exchange (on every output column) must stay gone."""
+    from duckdb_miint_spark.functions.intervals import compress_intervals_islands
+
+    df = spark.createDataFrame(
+        [("a", 1, 5), ("a", 4, 9), ("b", 2, 3)], "grp string, start long, stop long"
+    )
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        islands = compress_intervals_islands(df, "start", "stop", ["grp"])
+        plan = islands._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert plan.count("Exchange hashpartitioning") == 3, plan
 
 
 def test_bounded_sort_call_sites_are_bounded(spark):

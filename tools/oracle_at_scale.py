@@ -36,7 +36,6 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-os.environ.setdefault("SPARK_GRAFT_PIN_BYTES", str(4 * 1024**3))
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
 
 import duckdb  # noqa: E402
