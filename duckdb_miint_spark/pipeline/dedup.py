@@ -1,8 +1,9 @@
 """Deduplication operators: exact, MinHash+LSH, SimHash.
 
 Scale design (the part the 60k-row test can't show):
-- ``minhash_signatures`` is explode → 16 parallel MIN aggregates — one
-  shuffle on doc_id, map-side partial aggregation, no Python.
+- ``minhash_signatures`` is one projection of md5 digests → 16 parallel
+  MIN aggregates — one shuffle on doc_id, map-side partial aggregation,
+  no Python.
 - ``lsh_candidate_pairs`` shuffles on (band, minhash-value) bucket keys and
   pairs only within buckets, so work is Σ bucket² instead of n². Bucket
   sizes are capped: a degenerate bucket (e.g. the empty-text shingle) is
@@ -10,13 +11,20 @@ Scale design (the part the 60k-row test can't show):
 - ``near_dup_pairs`` verifies candidates with exact Jaccard via a shingle
   join restricted to candidate docs (semi-join pushdown), never all pairs.
 
-Engine-portable hashing: permutation ``p`` hashes a shingle to 8 hex chars
-sliced out of ``md5('<p//4>:' || shingle)`` at offset ``(p%4)*8`` — one md5
-yields four independent 32-bit hash functions (md5 output bits are
-uniform), so 16 permutations cost 4 md5 calls per shingle instead of 16.
-Fixed-width lowercase hex compares lexicographically = numerically, so MIN
-over strings is MinHash. DuckDB computes the identical md5/substr, which
-is what makes the oracle exact.
+Two hash families, one per contract:
+- Signatures (``minhash_signatures``) are engine-portable: permutation
+  ``p`` hashes a shingle to 8 hex chars sliced out of
+  ``md5('<p//4>:' || shingle)`` at offset ``(p%4)*8`` — one md5 yields
+  four independent 32-bit hash functions (md5 output bits are uniform),
+  so 16 permutations cost 4 md5 calls per shingle instead of 16.
+  Fixed-width lowercase hex compares lexicographically = numerically, so
+  MIN over strings is MinHash. DuckDB computes the identical md5/substr,
+  which is what makes the oracle exact.
+- Candidate bands (``xx_band_stream``) come from xxhash64 everywhere:
+  ``near_dup_pairs``, ``incremental_near_dup`` and the graft_b_lsh_index
+  layout built at ingest. Those contracts pin only the exact-Jaccard
+  verified pairs, so the bands need no DuckDB twin, and an index-served
+  candidate set equals the in-query one by construction.
 """
 
 from __future__ import annotations
@@ -116,36 +124,13 @@ def minhash_signatures(
     return hashed.groupBy("id").agg(*aggs)
 
 
-def minhash_long(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = DEFAULT_NUM_PERM,
-    n: int = DEFAULT_SHINGLE,
-    _shingles: DataFrame | None = None,
-) -> DataFrame:
-    """(id, band, v) — one MinHash row per (doc, permutation).
-
-    Derived by exploding the WIDE signatures: the explode runs on the
-    post-aggregation rows (#docs × num_perm), not on the pre-aggregation
-    shingle stream (#shingles × num_perm) as the earlier formulation did."""
-    sigs = minhash_signatures(df, id_col, text_col, num_perm, n, _shingles)
-    bands = F.array(
-        *[
-            F.struct(F.lit(p).alias("band"), F.col(f"m{p}").alias("v"))
-            for p in range(num_perm)
-        ]
-    )
-    return sigs.select("id", F.explode(bands).alias("b")).select(
-        "id", F.col("b.band").alias("band"), F.col("b.v").alias("v")
-    )
-
-
 def xx_band_stream(sh_raw: DataFrame, num_perm: int = DEFAULT_NUM_PERM) -> DataFrame:
-    """(id, band, v) long-form LSH band stream from xxhash64 — the
-    candidate-generation analogue of :func:`minhash_long` for consumers
-    whose contract pins only the FINAL pair set (near_dup_pairs: the
-    oracle is the exact all-pairs Jaccard), not the hash values.
+    """(id, band, v) long-form LSH band stream from xxhash64 — the one
+    band family every candidate stage uses: the in-query path of
+    :func:`near_dup_pairs`, both sides of :func:`incremental_near_dup`,
+    and the graft_b_lsh_index layout built at ingest. Its consumers'
+    contracts pin only the FINAL pair set (the oracle is the exact
+    Jaccard), not the hash values, so it need not match DuckDB's md5.
 
     Each 64-bit digest yields two independent 32-bit band values
     (top/bottom half), so ``num_perm`` permutations cost ``num_perm/2``
@@ -153,11 +138,8 @@ def xx_band_stream(sh_raw: DataFrame, num_perm: int = DEFAULT_NUM_PERM) -> DataF
     long MIN aggregates, 8-byte shuffle values. Same band structure
     (b=num_perm, r=1) ⇒ identical recall guarantees to the md5 family.
     Measured r13 (OPTIMIZATION_r13.md, sf2x20, noop sink): the
-    signature stage 2.20 → 1.11 s vs minhash_long; shingling is 0.29 s.
-
-    NOT for ``incremental_near_dup``: its corpus side is the
-    graft_b_lsh_index layout materialized at ingest with md5 values —
-    batch and index must hash identically."""
+    signature stage 2.20 → 1.11 s vs the md5 long form; shingling is
+    0.29 s."""
     n_h = (num_perm + 1) // 2
     hashed = sh_raw.select(
         "id",
@@ -277,13 +259,8 @@ def near_dup_pairs(
     stream for the in-query xx_band_stream — the graft_b_lsh_index
     layout maintained at ingest. The caller must guarantee it was built
     over the SAME documents with the same num_perm/shingle params (the
-    graft fingerprint does); band VALUES may differ from xxhash64's
-    (the index pins md5 minima) because the output contract pins only
-    the exact-Jaccard-verified pair set and the (b=num_perm, r=1) band
-    structure — and with it the recall bound — is identical."""
-    # Candidate bands come from xx_band_stream, not minhash_long: the
-    # output contract (exact-Jaccard-verified pair set) pins no hash
-    # values, and the xxhash64 family halves the signature stage.
+    graft fingerprint does); the index is built by xx_band_stream too,
+    so the candidate set is the same as the in-query one."""
     band_src = (
         _bands
         if _bands is not None
@@ -632,11 +609,11 @@ def incremental_near_dup(
     computed bands. Only candidate corpus docs' text is read back for
     the exact-Jaccard verify (semi-join pruned scan)."""
     if corpus_index is None:
-        corpus_index = minhash_long(corpus, id_col, text_col, num_perm, n)
+        corpus_index = xx_band_stream(
+            shingles(corpus, id_col, text_col, n, distinct=False), num_perm
+        )
     batch_sh_raw = shingles(batch, id_col, text_col, n, distinct=False).cache()
-    batch_bands = minhash_long(
-        batch, id_col, text_col, num_perm, n, _shingles=batch_sh_raw
-    )
+    batch_bands = xx_band_stream(batch_sh_raw, num_perm)
     # min band matches at the verify threshold — the free Jaccard
     # estimate prune (see lsh_candidate_pairs_long)
     min_match = max(1, int(num_perm * threshold / 2))

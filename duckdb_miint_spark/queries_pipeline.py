@@ -163,8 +163,9 @@ def q_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     index maintained at ingest (graft_b_lsh_index, bucketed on
     (band, v) — the bucket groupBy runs exchange-free and the corpus is
     never re-signed per query) when current, else from the in-query
-    xxhash64 band stream. Same (b=16, r=1) band structure either way;
-    the exact-Jaccard verify is identical, so the pair set is too."""
+    band stream. The index holds the same xxhash64 bands the in-query
+    path derives, so the candidate set, and with it the pair set, is
+    the same either way."""
     docs = T(spark, sf_dir, "documents")
     out = near_dup_pairs(
         docs, threshold=0.9, _bands=storage.serve(spark, sf_dir, "graft_b_lsh_index")
@@ -872,9 +873,8 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = T(spark, sf_dir, "documents")
     # Candidate bands from the ingest-time graft_b_lsh_index when current
-    # (same legality as lsh_near_dup_pairs: the contract pins only the
-    # exact-Jaccard-verified pair graph, and both band sources are
-    # (b=16, r=1) banded MinHash with the same cutoff).
+    # (as in lsh_near_dup_pairs: the index holds the in-query xxhash64
+    # bands, so the candidate set is the same either way).
     pairs = near_dup_pairs(
         docs, threshold=0.9, _bands=storage.serve(spark, sf_dir, "graft_b_lsh_index")
     ).select("id1", "id2")
@@ -1167,7 +1167,7 @@ def q_training_set_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("doc_id"), "quality_score"
     )
     # Same ingest-time band-index serving as lsh_near_dup_pairs /
-    # dedup_components — the pair-set contract is identical.
+    # dedup_components.
     pairs = near_dup_pairs(
         docs, threshold=0.9, _bands=storage.serve(spark, sf_dir, "graft_b_lsh_index")
     ).select("id1", "id2")
@@ -1875,21 +1875,23 @@ def q_pq_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _INCR_REKEY = 1_000_000
 
-# Banded MinHash index at ingest: the long (id, band, v) signature form,
+# Banded MinHash index at ingest: the long (id, band, v) xxhash64 band
+# stream (pipeline.dedup.xx_band_stream, the one band family),
 # bucketed on (band, v) so incremental near-dup candidate generation's
 # per-bucket groupBy rides the layout exchange-free. Row-wise per doc,
 # so refresh appends just the new docs' signatures (the "banded index
 # the refresh path maintains"). Identity versions the builder.
 LSH_INDEX_IDENTITY = (
-    f"lsh_index:num_perm={DEFAULT_NUM_PERM},shingle={DEFAULT_SHINGLE};minhash_long-v1"
+    f"lsh_index:num_perm={DEFAULT_NUM_PERM},shingle={DEFAULT_SHINGLE};xx_band_stream-v1"
 )
 
 
 def _build_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graft builder: long-form MinHash bands over the documents view."""
-    from duckdb_miint_spark.pipeline.dedup import minhash_long
+    """Graft builder: the same xxhash64 band stream the plain path
+    derives in-query, over the documents view."""
+    from duckdb_miint_spark.pipeline.dedup import shingles, xx_band_stream
 
-    return minhash_long(spark.table("documents"))
+    return xx_band_stream(shingles(spark.table("documents"), distinct=False))
 
 
 def _incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1932,19 +1934,14 @@ def q_dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-derivation fallback. Batch hashes are computed fresh — the
     batch is new data."""
     from duckdb_miint_spark.pipeline.dedup import incremental_exact
-    from duckdb_miint_spark.storage import GRAIN_ROWS_PROP, _stored_prop
 
     pre = storage.serve(spark, sf_dir, "graft_b_doc_hashes")
     corpus_rows = None
     if pre is not None:
         corpus_hashes = pre.filter(F.col("doc_id") % 10 != 7)
         # measured layout size drives the plan choice (grain vs probe)
-        try:
-            corpus_rows = int(
-                _stored_prop(spark, "graft_b_doc_hashes", GRAIN_ROWS_PROP) or 0
-            ) or None
-        except (TypeError, ValueError):
-            corpus_rows = None
+        meta = storage.table_meta(spark, "graft_b_doc_hashes")
+        corpus_rows = meta.grain_rows if meta is not None else None
     else:
         docs = T(spark, sf_dir, "documents")
         corpus_hashes = docs.filter(F.col("doc_id") % 10 != 7).select(

@@ -60,6 +60,10 @@ GRAIN_ROWS_PROP = "graft.grain_rows"
 # the multi-stage dispatch floor it replaces. Grafts whose catalog entry
 # sets ``tiny_serve=False`` are always served parallel.
 TINY_GRAIN_ROWS = 200_000
+# Files per bucket past which refresh_graft_layout compacts a table it
+# just appended to (its ``compact_threshold`` default): each append adds
+# one file per bucket, so this bounds small files at ~8 batches.
+COMPACT_FILES = 8
 
 
 def layout_fingerprint(*parts: object) -> str:
@@ -115,28 +119,74 @@ def graft_fingerprint(sf_dir: str, identity: object, source_tables: list[str] | 
     )
 
 
+class TableMeta:
+    """One catalog read of a table: the ``CatalogTable`` snapshot the JVM
+    session catalog returned. Each accessor is one or two py4j calls on
+    that snapshot, and only the properties asked for cross over —
+    converting the whole property map to a dict costs 20-30 ms."""
+
+    def __init__(self, jtable):
+        self._jtable = jtable
+
+    def prop(self, key: str) -> str | None:
+        """The table property ``key``, or None when it is not set."""
+        v = self._jtable.properties().get(key)
+        return v.get() if v.isDefined() else None
+
+    @property
+    def grain_rows(self) -> int | None:
+        """The stored materialized row count, when set and positive."""
+        rows = self.prop(GRAIN_ROWS_PROP) or ""
+        return int(rows) if rows.isdigit() and int(rows) > 0 else None
+
+    @property
+    def n_buckets(self) -> int | None:
+        spec = self._jtable.bucketSpec()
+        return spec.get().numBuckets() if spec.isDefined() else None
+
+    @property
+    def location(self) -> str:
+        """The table's directory (a plain path for ``file:`` locations)."""
+        uri = self._jtable.location()
+        return uri.getPath() if uri.getScheme() in (None, "file") else uri.toString()
+
+
+def _session_catalog(spark: SparkSession):
+    """The JVM ``SessionCatalog`` — the one place graft metadata is read."""
+    return spark._jsparkSession.sessionState().catalog()
+
+
+def table_meta(spark: SparkSession, table: str) -> TableMeta | None:
+    """The catalog entry of ``table`` from one ``getTableMetadata`` call,
+    or None when the table does not exist (``AnalysisException``
+    [TABLE_OR_VIEW_NOT_FOUND]); any other error propagates. Properties,
+    bucket count and location all come from this one read — a fraction
+    of a millisecond, against 17-32 ms for a SQL metadata statement
+    (properties or formatted description). Needs classic PySpark (a JVM
+    session), like the readers in ``sources``."""
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    try:
+        return TableMeta(
+            _session_catalog(spark).getTableMetadata(parser.parseTableIdentifier(table))
+        )
+    except AnalysisException:
+        return None
+
+
 def serve_bucketed(spark: SparkSession, table: str, fingerprint: str) -> DataFrame | None:
     """The catalog table ``table`` iff the bucketed layout is opted in
     (``spark.graft.bucketedLayout=true``), the table exists, AND its
     stored ``graft.fingerprint`` equals ``fingerprint`` — else None
     (callers fall back to the plain derivation). A table that is missing,
-    or dropped between the existence check and the property read (the
-    drop/rename window of a compaction), is "not served"; any other
-    error propagates."""
+    or dropped between the metadata read and the scan (the drop/rename
+    window of a compaction), is "not served"; any other error
+    propagates."""
     if spark.conf.get("spark.graft.bucketedLayout", "false") != "true":
         return None
+    meta = table_meta(spark, table)
+    if meta is None or meta.prop(FINGERPRINT_PROP) != fingerprint:
+        return None
     try:
-        if not spark.catalog.tableExists(table):
-            return None
-        # one catalog round-trip for ALL properties (fingerprint + grain
-        # count): a second SHOW statement measures ~20 ms — real money
-        # against the sub-100 ms queries this path serves
-        props = {
-            r["key"]: r["value"]
-            for r in spark.sql(f"SHOW TBLPROPERTIES `{table}`").collect()
-        }
-        if props.get(FINGERPRINT_PROP) != fingerprint:
-            return None
         df = spark.table(table)
     except AnalysisException:
         return None
@@ -147,8 +197,8 @@ def serve_bucketed(spark: SparkSession, table: str, fingerprint: str) -> DataFra
     # as the grain grows; the catalog's tiny_serve flag opts a graft out
     # (e.g. the pq_codes mapInPandas scorer).
     g = graft_catalog().get(table)
-    rows = props.get(GRAIN_ROWS_PROP) or ""
-    if (g is None or g.tiny_serve) and rows.isdigit() and 0 < int(rows) <= TINY_GRAIN_ROWS:
+    rows = meta.grain_rows
+    if (g is None or g.tiny_serve) and rows and rows <= TINY_GRAIN_ROWS:
         return df.coalesce(1)
     return df
 
@@ -430,22 +480,22 @@ def _default_buckets(spark: SparkSession) -> int:
     )
 
 
-def _register_source(spark: SparkSession, sf_dir: str, table: str) -> None:
-    spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet")).createOrReplaceTempView(table)
-
-
 @contextmanager
 def _source_views(spark: SparkSession, sf_dir: str, grafts: dict[str, Graft]):
     """Every source table of ``grafts`` registered as a temp view over
     ``sf_dir`` for the duration of the block — what ``Graft.derive``
-    reads."""
-    tables = sorted({t for g in grafts.values() for t in g.sources})
-    for t in tables:
-        _register_source(spark, sf_dir, t)
+    reads. Yields {table: DataFrame}, so a view shadowed for the block
+    can be restored without reading the parquet source again."""
+    views = {
+        t: spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
+        for t in sorted({t for g in grafts.values() for t in g.sources})
+    }
+    for t, df in views.items():
+        df.createOrReplaceTempView(t)
     try:
-        yield
+        yield views
     finally:
-        for t in tables:
+        for t in views:
             spark.catalog.dropTempView(t)
 
 
@@ -488,38 +538,6 @@ def build_graft_layout(
         }
 
 
-def _stored_prop(spark: SparkSession, table: str, prop: str) -> str | None:
-    try:
-        rows = spark.sql(f"SHOW TBLPROPERTIES `{table}` ('{prop}')").collect()
-        val = rows[0]["value"] if rows else None
-        if val is None or "does not have property" in str(val):
-            return None
-        return val
-    except AnalysisException:  # no such table
-        return None
-
-
-def _table_bucket_count(spark: SparkSession, table: str) -> int | None:
-    try:
-        for r in spark.sql(f"DESCRIBE FORMATTED `{table}`").collect():
-            if (r["col_name"] or "").strip() == "Num Buckets":
-                return int(r["data_type"].strip())
-    except AnalysisException:  # no such table
-        return None
-    return None
-
-
-def _table_location(spark: SparkSession, table: str) -> str | None:
-    try:
-        for r in spark.sql(f"DESCRIBE FORMATTED `{table}`").collect():
-            if (r["col_name"] or "").strip() == "Location":
-                loc = r["data_type"].strip()
-                return loc[len("file:"):] if loc.startswith("file:") else loc
-    except AnalysisException:  # no such table
-        return None
-    return None
-
-
 # Bucketed part files are named part-<task>-<uuid>_<bucketId>.c000[.codec]
 # .parquet — the _NNNNN immediately before the extension chain is the
 # bucket id (stable across Spark 3.x/4.x FileFormatWriter).
@@ -532,8 +550,13 @@ def bucket_file_census(spark: SparkSession, table: str) -> dict[int, int]:
     location is missing. This is the compaction trigger metric: a table
     fresh from ``write_bucketed`` has exactly 1 file per bucket; every
     incremental append adds one more."""
-    loc = _table_location(spark, table)
-    if not loc or not os.path.isdir(loc):
+    meta = table_meta(spark, table)
+    return _location_census(meta.location) if meta is not None else {}
+
+
+def _location_census(loc: str) -> dict[int, int]:
+    """{bucket_id: data file count} under a bucketed table's directory."""
+    if not os.path.isdir(loc):
         return {}
     out: dict[int, int] = {}
     for dirpath, _dirs, files in os.walk(loc):
@@ -562,12 +585,9 @@ def _compact_table(spark: SparkSession, table: str, g: Graft) -> str:
     verbatim (consumers re-merge the grain); compaction is a FILE-layout
     operation, not a re-derivation, so it is safe for every graft kind
     including builder grafts whose derivation is not re-runnable here."""
-    n_buckets = _table_bucket_count(spark, table)
-    loc = _table_location(spark, table)
-    if not n_buckets or not loc:
+    meta = table_meta(spark, table)
+    if meta is None or not meta.n_buckets:
         return "current"
-    fp = _stored_prop(spark, table, FINGERPRINT_PROP)
-    sig = _stored_prop(spark, table, SRC_SIG_PROP)
     side = f"{table}__compact"
     # Read the table's FILES as plain parquet, not spark.table(): a scan
     # carrying the bucket metadata already satisfies the repartition the
@@ -577,8 +597,8 @@ def _compact_table(spark: SparkSession, table: str, g: Graft) -> str:
     # keeps write_bucketed's repartition, giving exactly one sorted file
     # per bucket.
     write_bucketed(
-        spark.read.parquet(loc), side, n_buckets, g.bucket_cols, g.sort_cols,
-        fingerprint=fp, src_sig=sig,
+        spark.read.parquet(meta.location), side, meta.n_buckets, g.bucket_cols, g.sort_cols,
+        fingerprint=meta.prop(FINGERPRINT_PROP), src_sig=meta.prop(SRC_SIG_PROP),
     )
     spark.sql(f"DROP TABLE IF EXISTS `{table}`")
     spark.sql(f"ALTER TABLE `{side}` RENAME TO `{table}`")
@@ -606,10 +626,11 @@ def compact_graft_layout(
     ``refresh_graft_layout`` past its own threshold."""
     out: dict[str, str] = {}
     for name, g in _selected(tables).items():
-        if not spark.catalog.tableExists(name):
+        meta = table_meta(spark, name)
+        if meta is None:
             out[name] = "absent"
             continue
-        census = bucket_file_census(spark, name)
+        census = _location_census(meta.location)
         if not census or max(census.values()) <= max_files_per_bucket:
             out[name] = "current"
             continue
@@ -669,7 +690,10 @@ def refresh_graft_layout(
     property every write stores; the fingerprint property is updated to
     the new source set afterwards, so serving stays all-or-nothing.
 
-    ``compact_threshold`` (default SPARK_GRAFT_COMPACT_FILES, else 8):
+    The table's properties, bucket count and location come from one
+    catalog read (:func:`table_meta`) taken before any of its ALTERs.
+
+    ``compact_threshold`` (default :data:`COMPACT_FILES`):
     after an append leaves any bucket holding more than this many files,
     that table is compacted in place (action ``"appended+compacted"``) —
     the LSM-style amortization that keeps file counts bounded and the
@@ -677,20 +701,21 @@ def refresh_graft_layout(
     ingest. 0 disables auto-compaction."""
     grafts = _selected(tables)
     n_buckets = n_buckets if n_buckets is not None else _default_buckets(spark)
-    compact_files = (
-        compact_threshold
-        if compact_threshold is not None
-        else int(os.environ.get("SPARK_GRAFT_COMPACT_FILES", "8"))
-    )
+    compact_files = compact_threshold if compact_threshold is not None else COMPACT_FILES
     out: dict[str, str] = {}
-    with _source_views(spark, sf_dir, grafts):
+    # {(fact, new files): slice DataFrame} — grafts sharing a fact and a
+    # delta read the new slice once
+    slices: dict[tuple[str, tuple[str, ...]], DataFrame] = {}
+    with _source_views(spark, sf_dir, grafts) as views:
         for name, g in grafts.items():
             fp = graft_fingerprint(sf_dir, g.identity, g.sources)
-            if _stored_prop(spark, name, FINGERPRINT_PROP) == fp:
+            meta = table_meta(spark, name)  # the one catalog read per graft
+            pending = meta and meta.prop(PENDING_PROP)
+            if meta and meta.prop(FINGERPRINT_PROP) == fp:
                 # fingerprint only advances AFTER an append commits, so a
                 # pending marker surviving alongside a current fingerprint
                 # is stale (crash between the final two ALTERs) — clear it
-                if _stored_prop(spark, name, PENDING_PROP):
+                if pending:
                     spark.sql(
                         f"ALTER TABLE `{name}` UNSET TBLPROPERTIES IF EXISTS "
                         f"('{PENDING_PROP}')"
@@ -698,26 +723,26 @@ def refresh_graft_layout(
                 out[name] = "current"
                 continue
             cur_sig = source_signature(sf_dir, g.sources)
-            stored_sig = _stored_prop(spark, name, SRC_SIG_PROP)
+            stored_sig = meta and meta.prop(SRC_SIG_PROP)
             # A leftover write-ahead marker means a prior refresh crashed
             # between appending rows and advancing src_sig — the table may
             # already hold part of this delta, so appending again would
             # serve duplicates. Ambiguous provenance → full rebuild.
-            pending = _stored_prop(spark, name, PENDING_PROP)
             new_files = (
                 _append_delta(stored_sig, cur_sig, g.fact)
                 if g.appendable and stored_sig and not pending
-                and spark.catalog.tableExists(name)
                 else None
             )
-            existing_buckets = _table_bucket_count(spark, name)
-            if new_files is not None and existing_buckets:
-                paths = [
-                    os.path.join(sf_dir, f"{g.fact}.parquet", f) for f in new_files
-                ]
+            existing_buckets = meta.n_buckets if new_files is not None else None
+            if existing_buckets:
+                key = (g.fact, tuple(new_files))
+                if key not in slices:
+                    slices[key] = spark.read.parquet(
+                        *(os.path.join(sf_dir, f"{g.fact}.parquet", f) for f in new_files)
+                    )
                 # shadow the fact view with ONLY the new slice: the
                 # derivation over it is exactly the rows to append
-                spark.read.parquet(*paths).createOrReplaceTempView(g.fact)
+                slices[key].createOrReplaceTempView(g.fact)
                 try:
                     # appendable builder grafts (row-wise derivations like
                     # tokenize-at-ingest) run their builder over the
@@ -738,7 +763,7 @@ def refresh_graft_layout(
                         .saveAsTable(name)
                     )
                 finally:
-                    _register_source(spark, sf_dir, g.fact)
+                    views[g.fact].createOrReplaceTempView(g.fact)
                 try:
                     grain_rows = spark.table(name).count()  # metadata count
                 except AnalysisException:  # table dropped under us
@@ -757,7 +782,7 @@ def refresh_graft_layout(
                     f"ALTER TABLE `{name}` UNSET TBLPROPERTIES IF EXISTS "
                     f"('{PENDING_PROP}')"
                 )
-                census = bucket_file_census(spark, name)
+                census = _location_census(meta.location)
                 if (
                     compact_files > 0
                     and census

@@ -245,9 +245,9 @@ def test_stale_pending_marker_cleared_when_current(graft_session, tmp_path):
     spark = graft_session
     from duckdb_miint_spark.storage import (
         PENDING_PROP,
-        _stored_prop,
         build_graft_layout,
         refresh_graft_layout,
+        table_meta,
     )
 
     sf = _make_sf_dir(tmp_path)
@@ -257,7 +257,7 @@ def test_stale_pending_marker_cleared_when_current(graft_session, tmp_path):
     before = _warehouse_files(spark, t0)
     actions = refresh_graft_layout(spark, sf, 4, tables=REFRESH_TABLES)
     assert actions == {t: "current" for t in REFRESH_TABLES}, actions
-    assert _stored_prop(spark, t0, PENDING_PROP) is None
+    assert table_meta(spark, t0).prop(PENDING_PROP) is None
     assert _warehouse_files(spark, t0) == before  # data untouched
     _append_events_file(sf)
     actions = refresh_graft_layout(spark, sf, 4, tables=REFRESH_TABLES)
@@ -320,7 +320,7 @@ def test_ingest_appended_files_are_timestamp_micros(graft_session, tmp_path):
     assert hidden == [], hidden
 
 
-def test_streaming_ingest_triggers_auto_compaction(graft_session, tmp_path):
+def test_streaming_ingest_triggers_auto_compaction(graft_session, tmp_path, monkeypatch):
     """The full 100 TB operating loop in one test: a file-source stream
     lands four micro-batches, each refresh appends the new slice, and
     when files-per-bucket crosses the threshold the refresh itself
@@ -329,6 +329,7 @@ def test_streaming_ingest_triggers_auto_compaction(graft_session, tmp_path):
     import json as _json
 
     spark = graft_session
+    from duckdb_miint_spark import storage
     from duckdb_miint_spark.registry import load_all
     from duckdb_miint_spark.storage import (
         bucket_file_census,
@@ -354,18 +355,15 @@ def test_streaming_ingest_triggers_auto_compaction(graft_session, tmp_path):
 
     stream = read_events_stream(spark, str(staging), max_files=1)
     # compact past 2 files/bucket: batches 1-2 append, batch 3 trips it
-    os.environ["SPARK_GRAFT_COMPACT_FILES"] = "2"
+    monkeypatch.setattr(storage, "COMPACT_FILES", 2)
+    q, actions = stream_ingest_with_refresh(
+        spark, stream, sf, "events", 4,
+        tables=REFRESH_TABLES, checkpoint_dir=str(tmp_path / "ck"),
+    )
     try:
-        q, actions = stream_ingest_with_refresh(
-            spark, stream, sf, "events", 4,
-            tables=REFRESH_TABLES, checkpoint_dir=str(tmp_path / "ck"),
-        )
-        try:
-            assert q.awaitTermination(240), "ingest stream did not finish"
-        finally:
-            q.stop()
+        assert q.awaitTermination(240), "ingest stream did not finish"
     finally:
-        del os.environ["SPARK_GRAFT_COMPACT_FILES"]
+        q.stop()
     assert len(actions) == 4, actions
     seen = [set(a.values()) for a in actions]
     assert all(s <= {"appended", "appended+compacted"} for s in seen), actions

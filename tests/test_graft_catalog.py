@@ -31,11 +31,44 @@ def _copy_sf(tmp_path) -> str:
 
 def test_lsh_index_identity_derived_from_constants():
     """The banded-index identity is built from the dedup defaults its
-    builder uses, and still spells the historical literal, so stored
-    fingerprints do not change."""
+    builder uses and names the band family it is built with
+    (xx_band_stream), so an index built with the older md5 bands is
+    stale and rebuilt, never served."""
     from duckdb_miint_spark.queries_pipeline import LSH_INDEX_IDENTITY
 
-    assert LSH_INDEX_IDENTITY == "lsh_index:num_perm=16,shingle=3;minhash_long-v1"
+    assert LSH_INDEX_IDENTITY == "lsh_index:num_perm=16,shingle=3;xx_band_stream-v1"
+
+
+def test_serve_and_refresh_issue_no_metadata_statements(layout_on, tmp_path, monkeypatch):
+    """Serving a graft, refreshing a current one, and its census and
+    compaction check read table metadata through the catalog API: no
+    SHOW or DESCRIBE statement reaches spark.sql."""
+    from duckdb_miint_spark import storage
+
+    spark = layout_on
+    sf = _copy_sf(tmp_path)
+    storage.build_graft_layout(spark, sf, 2, tables=["graft_b_orders"])
+    seen: list[str] = []
+    real_sql = spark.sql
+
+    def recording(query, *args, **kwargs):
+        seen.append(query)
+        return real_sql(query, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", recording)
+    try:
+        assert storage.serve(spark, sf, "graft_b_orders") is not None
+        actions = storage.refresh_graft_layout(spark, sf, 2, tables=["graft_b_orders"])
+        assert actions == {"graft_b_orders": "current"}, actions
+        assert set(storage.bucket_file_census(spark, "graft_b_orders").values()) == {1}
+        assert storage.compact_graft_layout(spark, ["graft_b_orders"]) == {
+            "graft_b_orders": "current"
+        }
+    finally:
+        monkeypatch.undo()
+        spark.sql("DROP TABLE IF EXISTS graft_b_orders")
+    statements = [q for q in seen if q.lstrip().upper().startswith(("SHOW", "DESCRIBE"))]
+    assert statements == [], statements
 
 
 def test_serve_propagates_unexpected_errors(layout_on, tmp_path, monkeypatch):

@@ -182,10 +182,8 @@ def test_incremental_gates_serve_from_layout(graft_session, tmp_path):
 def test_index_served_components_match_plain(graft_session, tmp_path):
     """dedup_components and training_set_selection serve candidate bands
     from graft_b_lsh_index when current (r14 round 2); the result must
-    be identical to the plain in-query band-stream derivation — the
-    index pins md5 band minima, the plain path xxhash64 halves, and the
-    output contract pins only the exact-Jaccard-verified pair graph, so
-    the band source must never show through."""
+    be identical to the plain in-query band-stream derivation, so the
+    band source never shows through."""
     spark = graft_session
     from duckdb_miint_spark.registry import load_all
     from duckdb_miint_spark.storage import build_graft_layout, serve
@@ -204,3 +202,29 @@ def test_index_served_components_match_plain(graft_session, tmp_path):
     for name, want in plain.items():
         got = sorted(tuple(r) for r in reg[name].spark_fn(spark, sf).collect())
         assert got == want, name
+
+
+def test_index_served_candidates_equal_in_query_bands(graft_session, tmp_path):
+    """graft_b_lsh_index holds the in-query xx_band_stream bands, so
+    lsh_candidate_pairs_long over the served index returns the same
+    candidates (pairs and band-match counts) as over the bands the plain
+    path derives in the query — equal by construction, not only in the
+    exact-Jaccard-verified pairs."""
+    spark = graft_session
+    from duckdb_miint_spark.pipeline.dedup import (
+        lsh_candidate_pairs_long,
+        shingles,
+        xx_band_stream,
+    )
+    from duckdb_miint_spark.storage import build_graft_layout, serve
+
+    sf = _make_docs_sf_dir(tmp_path)
+    build_graft_layout(spark, sf, 4, tables=["graft_b_lsh_index"])
+    idx = serve(spark, sf, "graft_b_lsh_index")
+    assert idx is not None, "index must actually serve"
+    docs = spark.read.parquet(os.path.join(sf, "documents.parquet"))
+    in_query = xx_band_stream(shingles(docs, distinct=False))
+    want = sorted(tuple(r) for r in lsh_candidate_pairs_long(in_query).collect())
+    got = sorted(tuple(r) for r in lsh_candidate_pairs_long(idx).collect())
+    assert want, "the corpus must produce candidates"
+    assert got == want

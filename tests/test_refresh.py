@@ -354,8 +354,10 @@ def test_non_appendable_graft_rebuilds(graft_session, tmp_path):
 def test_catalog_error_propagates_out_of_refresh(graft_session, tmp_path, monkeypatch):
     """Only a missing table (AnalysisException) reads as "no stored
     property". Any other failure reading one (here a non-Analysis error
-    from spark.sql) must surface out of refresh_graft_layout instead of
-    silently turning the append into a full rebuild."""
+    from the session catalog's getTableMetadata) must surface out of
+    refresh_graft_layout instead of silently turning the append into a
+    full rebuild."""
+    from duckdb_miint_spark import storage
     from duckdb_miint_spark.storage import build_graft_layout, refresh_graft_layout
 
     spark = graft_session
@@ -363,14 +365,12 @@ def test_catalog_error_propagates_out_of_refresh(graft_session, tmp_path, monkey
     sf = _make_sf_dir(tmp_path)
     build_graft_layout(spark, sf, 4, tables=table)
     _append_events_file(sf)
-    real_sql = spark.sql
 
-    def flaky(query, *args, **kwargs):
-        if query.startswith("SHOW TBLPROPERTIES"):
+    class Unavailable:
+        def getTableMetadata(self, _ident):
             raise RuntimeError("catalog unavailable")
-        return real_sql(query, *args, **kwargs)
 
-    monkeypatch.setattr(spark, "sql", flaky)
+    monkeypatch.setattr(storage, "_session_catalog", lambda _spark: Unavailable())
     with pytest.raises(RuntimeError, match="catalog unavailable"):
         refresh_graft_layout(spark, sf, 4, tables=table)
     monkeypatch.undo()
