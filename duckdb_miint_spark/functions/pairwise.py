@@ -23,8 +23,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-NEG_INF = float("-inf")
-
 
 class PairwiseError(ValueError):
     pass

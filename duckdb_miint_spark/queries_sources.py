@@ -692,8 +692,9 @@ def q_read_fastx_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-range split scan of one large FASTQ ≡ its known contents.
 
     A ~440 KB deterministic FASTQ (sources/synth.py — adversarial
-    '@'-leading quality lines) is scanned with max_split_bytes=32 KiB,
-    forcing ~14 byte-range partitions through plan_fastx_splits; the
+    '@'-leading quality lines) is scanned with max_split_bytes=32 KiB:
+    plan_fastx_splits aligns ~14 byte ranges to record starts and the
+    shared record grammar reads each one as a plain-range split; the
     aggregate (read count, total bases, total Phred, sequence_index sum)
     must equal constants precomputed from the generator. ``was_split``
     pins >1 input partition, so a regression to whole-file scanning
@@ -726,9 +727,9 @@ def q_read_fastx_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_read_fastx_bgzf_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BGZF-block split scan of one bgzip-compressed FASTQ ≡ its known
     contents — same generator and expected constants as
-    ``read_fastx_split`` but through the compressed-split path
-    (sources/fastx.py BGZF section): block-boundary ranges with the
-    line-cutoff ownership convention. ``was_split`` pins >1 input
+    ``read_fastx_split`` but through the BGZF line source of the same
+    record grammar (sources/fastx.py BGZF section): block-boundary ranges
+    with the line-cutoff ownership convention. ``was_split`` pins >1 input
     partition so a regression to whole-file gzip handling fails loudly.
     Compressed read sets are the 100 TB norm; this gate keeps the
     splittable path honest per-round."""

@@ -123,16 +123,6 @@ def _biom_arrays(path: str):
     return s_idx, indices, data, sample_ids, feature_ids
 
 
-def _read_biom_file(path: str) -> list[tuple[str, str, float]]:
-    """BIOM v2.1 HDF5 → (sample_id, feature_id, value) triples, using the
-    bundled minimal HDF5 reader (sources/hdf5_mini.py) — no h5py needed."""
-    s_idx, f_idx, data, sample_ids, feature_ids = _biom_arrays(path)
-    return [
-        (sample_ids[s], feature_ids[ft], float(v))
-        for s, ft, v in zip(s_idx, f_idx, data)
-    ]
-
-
 _BIOM_BATCH_ROWS = 1 << 20
 
 

@@ -12,13 +12,22 @@ Semantics reproduced exactly:
 - Glob patterns expand and sort alphabetically; explicit lists keep order;
   ``sequence_index`` is 1-based PER FILE (pairs increment once).
 - read_id = name up to first whitespace with a trailing ``/[1-9]`` stripped;
-  comment = text after first whitespace, NULL when absent.
+  comment = text after first whitespace (trailing blanks kept), NULL when
+  absent.
 - Paired mode: R1/R2 streams read in lockstep; base-id mismatch and
   missing-mate are errors with the reference's message text; FASTA cannot
   pair with FASTQ.
 - FASTA sequences strip internal whitespace; quals are NULL.
 - qual_offset ∈ {33, 64}; decoded scores must be 0..93.
 - gzip sniffed from magic bytes, not extension.
+
+One record grammar (:func:`_fastx_records`) reads every scan. It takes
+``(line, owned)`` pairs from one of three line sources: a whole file
+(gzip sniffed, every line owned), a plain byte range (a line is owned
+while it starts before the range end) or a BGZF compressed range (owned
+until the range's cutoff, see the BGZF section). A record starts only on
+an owned line and is finished whatever the ownership of its later lines,
+so the union of a file's ranges is exactly its whole-file scan.
 
 Scale shape: splits are planned on the driver at bind time and read by
 one ``mapInArrow`` scan, one partition per split (``arrow_batch.split_scan``).
@@ -31,8 +40,9 @@ enables byte-range splitting so one multi-GB FASTQ is N parallel tasks,
 not one straggler:
 
 - bind time (driver): probe ~8 lines at each target boundary to align it
-  to a record start (FASTA: next ``>`` line — exact for any FASTA; FASTQ:
-  4-line heuristic validated by seq-len == qual-len).
+  to a record start (:func:`_skip_to_record` — FASTA: next ``>`` line,
+  exact for any FASTA; FASTQ: 4-line heuristic validated by
+  seq-len == qual-len).
 - a cheap COUNT pass (newlines/4 for FASTQ, ``\\n>`` occurrences for
   FASTA — memchr-speed, no parsing) fixes the exact per-file 1-based
   ``sequence_index`` offset of every range, so split output is
@@ -49,10 +59,9 @@ not one straggler:
 from __future__ import annotations
 
 import glob as globmod
-import gzip
-import io
 import os
 from collections.abc import Iterator
+from itertools import chain, islice, zip_longest
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -66,6 +75,14 @@ from pyspark.sql.types import (
 )
 
 from duckdb_miint_spark.sources.arrow_batch import batched, split_scan
+from duckdb_miint_spark.sources.sam import (
+    _bgzf_block_size,
+    _BgzfStream,
+    find_bgzf_block,
+    is_gzip,
+    open_maybe_gzip,
+    plan_even_splits,
+)
 
 FASTX_FIELDS = [
     StructField("sequence_index", LongType()),
@@ -99,64 +116,84 @@ def base_read_id(name: str) -> str:
     return name
 
 
-def _open_text(path: str):
-    """Open possibly-gzipped text, sniffing the magic bytes like kseq."""
-    raw = open(path, "rb")
-    magic = raw.read(2)
-    raw.seek(0)
-    if magic == b"\x1f\x8b":
-        return io.TextIOWrapper(gzip.GzipFile(fileobj=raw), encoding="ascii")
-    return io.TextIOWrapper(raw, encoding="ascii")
+_EOF = (b"", False)
 
 
-def parse_fastx(path: str) -> Iterator[tuple[str, str, str, str | None]]:
-    """Yield (name, comment, sequence, qual_string|None) records.
+def _fastx_records(
+    lines: Iterator[tuple[bytes, bool]], strict_fourline: bool
+) -> Iterator[tuple[str, str, str, str | None]]:
+    """(name, comment, sequence, qual|None) for every record whose header
+    line is owned; stops at the first header line that is not.
 
     kseq-compatible: FASTA sequences concatenate lines with whitespace
     removed; FASTQ quality spans lines until len(qual) == len(seq).
-    """
-    with _open_text(path) as f:
-        line = f.readline()
-        saw_any = False
-        while line:
-            line = line.rstrip("\r\n")
-            if not line:
-                line = f.readline()
-                continue
-            if line[0] not in ">@":
-                raise FastxError(f"Malformed FASTX record near: {line[:50]}")
-            is_fastq = line[0] == "@"
-            header = line[1:]
-            parts = header.split(None, 1)
-            name = parts[0] if parts else ""
-            comment = parts[1] if len(parts) > 1 else ""
-            seq_parts: list[str] = []
-            line = f.readline()
-            while line and line[0] not in (">@+" if is_fastq else ">@"):
-                seq_parts.append("".join(line.split()))
-                line = f.readline()
-            seq = "".join(seq_parts)
-            qual: str | None = None
-            if is_fastq:
-                if not line or line[0] != "+":
-                    raise FastxError(f"FASTQ record missing '+' separator: {name}")
-                qual_parts: list[str] = []
-                qlen = 0
-                line = f.readline()
-                while line and qlen < len(seq):
-                    q = line.rstrip("\r\n")
-                    qual_parts.append(q)
-                    qlen += len(q)
-                    line = f.readline()
-                qual = "".join(qual_parts)
-                if len(qual) != len(seq):
-                    raise FastxError(
-                        f"FASTQ quality length {len(qual)} != sequence length {len(seq)} for {name}"
-                    )
-            saw_any = True
-            yield name, comment, seq, qual
-        if not saw_any:
-            raise FastxError("Empty file")
+    ``strict_fourline`` (split scans) rejects blank lines and multi-line
+    FASTQ records, which the boundary probe and the count pass both
+    assume away."""
+    line, owned = next(lines, _EOF)
+    while line:
+        s = line.rstrip(b"\r\n")
+        if not s:
+            if strict_fourline:
+                raise FastxError(
+                    "blank line in FASTQ: split mode requires strict "
+                    "4-line records — pass max_split_bytes=None"
+                )
+            line, owned = next(lines, _EOF)
+            continue
+        if not owned:
+            return
+        first = s[:1]
+        if first != b">" and first != b"@":
+            raise FastxError(
+                f"Malformed FASTX record near: {s[:50].decode('ascii', 'replace')}"
+            )
+        is_fastq = first == b"@"
+        parts = s[1:].decode("ascii").split(None, 1)
+        name = parts[0] if parts else ""
+        comment = parts[1] if len(parts) > 1 else ""
+        stops = (b">", b"@", b"+") if is_fastq else (b">", b"@")
+        seq_parts: list[bytes] = []
+        line, owned = next(lines, _EOF)
+        while line and line[:1] not in stops:
+            seq_parts.append(b"".join(line.split()))
+            line, owned = next(lines, _EOF)
+        seq = b"".join(seq_parts).decode("ascii")
+        qual: str | None = None
+        if is_fastq:
+            if line[:1] != b"+":
+                raise FastxError(f"FASTQ record missing '+' separator: {name}")
+            qual_parts: list[bytes] = []
+            qlen = 0
+            line, owned = next(lines, _EOF)
+            # a 4-line record has a quality line even when its sequence is empty
+            while line and (qlen < len(seq) or (strict_fourline and not qual_parts)):
+                q = line.rstrip(b"\r\n")
+                qual_parts.append(q)
+                qlen += len(q)
+                line, owned = next(lines, _EOF)
+            qual = b"".join(qual_parts).decode("ascii")
+            if len(qual) != len(seq):
+                raise FastxError(
+                    f"FASTQ quality length {len(qual)} != sequence length {len(seq)} for {name}"
+                )
+            if strict_fourline and (len(seq_parts) != 1 or len(qual_parts) != 1):
+                raise FastxError(
+                    f"multi-line FASTQ record {name}: split mode requires "
+                    "strict 4-line records — pass max_split_bytes=None"
+                )
+        yield name, comment, seq, qual
+
+
+def _file_records(path: str) -> Iterator[tuple[str, str, str, str | None]]:
+    """Records of a whole file (gzip or BGZF sniffed, every line owned)."""
+    n = 0
+    with open_maybe_gzip(path) as f:
+        for rec in _fastx_records(((line, True) for line in f), strict_fourline=False):
+            n += 1
+            yield rec
+    if not n:
+        raise FastxError("Empty file")
 
 
 def decode_qual(qual: str | None, qual_offset: int) -> list[int] | None:
@@ -179,22 +216,20 @@ def decode_qual(qual: str | None, qual_offset: int) -> list[int] | None:
     return out
 
 
-def read_fastx_file_pair(
-    path1: str,
-    path2: str | None,
+def fastx_rows(
+    path: str,
+    records1: Iterator[tuple],
+    records2: Iterator[tuple] | None,
+    index_offset: int,
     qual_offset: int,
     include_filepath: bool,
 ) -> Iterator[tuple]:
-    """Rows for one file (pair), sequence_index 1-based per file."""
-    it1 = parse_fastx(path1)
-    it2 = parse_fastx(path2) if path2 is not None else None
-    idx = 0
-    while True:
-        r1 = next(it1, None)
-        r2 = next(it2, None) if it2 is not None else None
-        if r1 is None and (it2 is None or r2 is None):
-            break
-        if it2 is not None:
+    """Rows of one scan input: ``records1`` and, for a pair, the R2
+    records read in lockstep. sequence_index continues at index_offset+1."""
+    tail = (path,) if include_filepath else ()
+    idx = index_offset
+    for r1, r2 in zip_longest(records1, () if records2 is None else records2):
+        if records2 is not None:
             if r1 is None:
                 raise FastxError(f"Mismatched number of records: missing mate for {r2[0]}")
             if r2 is None:
@@ -205,26 +240,18 @@ def read_fastx_file_pair(
                 raise FastxError(f"Mismatched read IDs: {r1[0]} vs {r2[0]}")
         idx += 1
         name, comment, seq1, q1 = r1
-        row = (
+        yield (
             idx,
             base_read_id(name),
             comment or None,
             seq1,
-            r2[2] if r2 is not None else None,
+            None if r2 is None else r2[2],
             decode_qual(q1, qual_offset),
-            decode_qual(r2[3], qual_offset) if r2 is not None else None,
-        )
-        if include_filepath:
-            row = row + (path1,)
-        yield row
+            None if r2 is None else decode_qual(r2[3], qual_offset),
+        ) + tail
 
 
-# --- byte-range splitting (large uncompressed files) -------------------------
-
-
-def _is_gzip(path: str) -> bool:
-    with open(path, "rb") as f:
-        return f.read(2) == b"\x1f\x8b"
+# --- byte-range splitting ----------------------------------------------------
 
 
 def _is_bgzf(path: str) -> bool:
@@ -235,8 +262,6 @@ def _is_bgzf(path: str) -> bool:
     prefix: a valid BGZF extra field may carry additional subfields
     before/after BC (xlen > 6), and an under-read would misclassify such
     files as unsplittable plain gzip (silent loss of scan parallelism)."""
-    from duckdb_miint_spark.sources.sam import _bgzf_block_size
-
     with open(path, "rb") as f:
         head = f.read(65536)
     return len(head) >= 18 and _bgzf_block_size(head, 0) is not None
@@ -244,11 +269,8 @@ def _is_bgzf(path: str) -> bool:
 
 def _sniff_fastq(path: str) -> bool:
     """True if the first record marker is '@' (FASTQ), False for '>'."""
-    with open(path, "rb") as f:
-        while True:
-            line = f.readline()
-            if not line:
-                raise FastxError("Empty file")
+    with open_maybe_gzip(path) as f:
+        for line in f:
             s = line.strip()
             if s:
                 if s[:1] == b"@":
@@ -256,17 +278,43 @@ def _sniff_fastq(path: str) -> bool:
                 if s[:1] == b">":
                     return False
                 raise FastxError(f"Malformed FASTX record near: {s[:50]!r}")
+    raise FastxError("Empty file")
+
+
+def _skip_to_record(lines: Iterator[tuple], is_fastq: bool) -> Iterator[tuple]:
+    """``lines`` (tuples led by a line) from the first record start on,
+    empty when there is none.
+
+    FASTA: the next line starting with ``>`` (unambiguous — sequence lines
+    cannot start with '>'). FASTQ: within the next 8 lines, one starting
+    with '@' whose line+2 starts with '+' and whose line+1/line+3 lengths
+    match (a quality line starting with '@' fails the '+'-at-+2 check
+    because the following line is sequence)."""
+    if not is_fastq:
+        for item in lines:
+            if item[0][:1] == b">":
+                return chain([item], lines)
+        return iter(())
+    window = list(islice(lines, 8))
+    for i in range(len(window) - 3):
+        head, seq, plus, qual = (item[0] for item in window[i : i + 4])
+        if head[:1] == b"@" and plus[:1] == b"+" and len(seq.strip()) == len(qual.strip()):
+            return chain(window[i:], lines)
+    return iter(())
+
+
+def _offset_lines(f) -> Iterator[tuple[bytes, int]]:
+    """(line, byte offset of its start) from the current position of ``f``."""
+    pos = f.tell()
+    for line in f:
+        yield line, pos
+        pos += len(line)
 
 
 def _next_record_start(path: str, offset: int, is_fastq: bool, filesize: int) -> int:
-    """Smallest record-start byte offset >= ``offset``.
-
-    FASTA: the next line starting with ``>`` (unambiguous — sequence lines
-    cannot start with '>'). FASTQ: the 4-line heuristic — a line starting
-    with '@' whose line+2 starts with '+' and whose line+1/line+3 lengths
-    match (a quality line starting with '@' fails the '+'-at-+2 check
-    because the following line is sequence). Returns ``filesize`` when the
-    offset is inside the final record."""
+    """Smallest record-start byte offset >= ``offset`` (see
+    :func:`_skip_to_record`). Returns ``filesize`` when the offset is
+    inside the final record."""
     if offset <= 0:
         return 0
     if offset >= filesize:
@@ -275,38 +323,12 @@ def _next_record_start(path: str, offset: int, is_fastq: bool, filesize: int) ->
         f.seek(offset - 1)
         if f.read(1) != b"\n":
             f.readline()  # discard the partial line
-        pos = f.tell()
-        if not is_fastq:
-            while True:
-                line = f.readline()
-                if not line:
-                    return filesize
-                if line[:1] == b">":
-                    return pos
-                pos += len(line)
-        starts: list[int] = []
-        lines: list[bytes] = []
-        for _ in range(8):
-            line = f.readline()
-            if not line:
-                break
-            starts.append(pos)
-            lines.append(line)
-            pos += len(line)
-        for i in range(len(lines) - 3):
-            if (
-                lines[i][:1] == b"@"
-                and lines[i + 2][:1] == b"+"
-                and len(lines[i + 1].strip()) == len(lines[i + 3].strip())
-            ):
-                return starts[i]
-        return filesize
+        first = next(_skip_to_record(_offset_lines(f), is_fastq), None)
+    return filesize if first is None else first[1]
 
 
 def plan_fastx_splits(path: str, target_bytes: int) -> list[tuple[int, int]]:
     """[(start, end), ...] byte ranges aligned to record starts."""
-    if target_bytes <= 0:
-        raise FastxError(f"max_split_bytes must be positive, got {target_bytes}")
     size = os.path.getsize(path)
     n_chunks = max(1, size // target_bytes)
     if n_chunks == 1:
@@ -324,12 +346,19 @@ def plan_fastx_splits(path: str, target_bytes: int) -> list[tuple[int, int]]:
 _COUNT_CHUNK = 1 << 22
 
 
-def count_fastx_range(path: str, start: int, end: int, filesize: int) -> int:
-    """Record count in an aligned range — byte scan, no parsing.
+def count_fastx_range(
+    path: str, start: int, end: int, filesize: int, bgzf: bool = False
+) -> int:
+    """Record count in a split range.
 
-    FASTQ: newlines/4 (strict 4-line records enforced — %4 != 0 means
-    multi-line/blank-line FASTQ, which cannot be split). FASTA: count of
-    '>' line-starts — exact for any FASTA."""
+    Plain files: a byte scan, no parsing. FASTQ: newlines/4 (strict 4-line
+    records enforced — %4 != 0 means multi-line/blank-line FASTQ, which
+    cannot be split). FASTA: count of '>' line-starts — exact for any
+    FASTA. BGZF has no in-phase byte shortcut (cutoffs are line- not
+    record-aligned), so a BGZF range is parsed; the cost is one extra
+    decompression pass, paid in parallel."""
+    if bgzf:
+        return sum(1 for _ in iter_fastx_range(path, start, end, bgzf=True))
     is_fastq = _sniff_fastq(path)
     newlines = 0
     recs = 0
@@ -362,358 +391,74 @@ def count_fastx_range(path: str, start: int, end: int, filesize: int) -> int:
     return newlines // 4
 
 
-def iter_fastx_range(
-    path: str, start: int, end: int, strict_fourline: bool = False
-) -> Iterator[tuple[str, str, str, str | None]]:
-    """parse_fastx over records whose START byte lies in [start, end).
-
-    Binary-mode twin of :func:`parse_fastx` (same record grammar, same
-    error text shapes) that tracks byte offsets so a mid-file partition
-    stops exactly at its boundary. ``strict_fourline`` rejects multi-line
-    FASTQ records — required in split mode, where the boundary prober and
-    the count pass both assume 4-line records."""
-    with open(path, "rb") as f:
-        f.seek(start)
-        pos = start
-        line = f.readline()
-        while line:
-            rec_start = pos
-            stripped = line.strip()
-            if not stripped:
-                if strict_fourline:
-                    raise FastxError(
-                        "blank line in FASTQ: split mode requires strict "
-                        "4-line records — pass max_split_bytes=None"
-                    )
-                pos += len(line)
-                line = f.readline()
-                continue
-            if rec_start >= end:
-                break
-            first = stripped[:1]
-            if first not in (b">", b"@"):
-                raise FastxError(
-                    f"Malformed FASTX record near: {stripped[:50].decode('ascii', 'replace')}"
-                )
-            is_fastq = first == b"@"
-            pos += len(line)
-            header = stripped[1:].decode("ascii")
-            parts = header.split(None, 1)
-            name = parts[0] if parts else ""
-            comment = parts[1] if len(parts) > 1 else ""
-            seq_parts: list[bytes] = []
-            seq_lines = 0
-            stops = (b">", b"@", b"+") if is_fastq else (b">", b"@")
-            line = f.readline()
-            while line and line[:1] not in stops:
-                seq_parts.append(b"".join(line.split()))
-                seq_lines += 1
-                pos += len(line)
-                line = f.readline()
-            seq = b"".join(seq_parts).decode("ascii")
-            qual: str | None = None
-            if is_fastq:
-                if not line or line[:1] != b"+":
-                    raise FastxError(f"FASTQ record missing '+' separator: {name}")
-                pos += len(line)
-                qual_parts: list[bytes] = []
-                qlen = 0
-                qual_lines = 0
-                line = f.readline()
-                while line and qlen < len(seq):
-                    q = line.rstrip(b"\r\n")
-                    qual_parts.append(q)
-                    qlen += len(q)
-                    qual_lines += 1
-                    pos += len(line)
-                    line = f.readline()
-                qual = b"".join(qual_parts).decode("ascii")
-                if len(qual) != len(seq):
-                    raise FastxError(
-                        f"FASTQ quality length {len(qual)} != sequence length {len(seq)} for {name}"
-                    )
-                if strict_fourline and (seq_lines != 1 or qual_lines != 1):
-                    raise FastxError(
-                        f"multi-line FASTQ record {name}: split mode requires "
-                        "strict 4-line records — pass max_split_bytes=None"
-                    )
-            yield name, comment, seq, qual
-
-
-def read_fastx_range_rows(
-    path: str,
-    start: int,
-    end: int,
-    index_offset: int,
-    qual_offset: int,
-    include_filepath: bool,
-) -> Iterator[tuple]:
-    """Rows for one byte range; sequence_index continues at index_offset+1."""
-    idx = index_offset
-    for name, comment, seq, qual in iter_fastx_range(
-        path, start, end, strict_fourline=True
-    ):
-        idx += 1
-        row = (
-            idx,
-            base_read_id(name),
-            comment or None,
-            seq,
-            None,
-            decode_qual(qual, qual_offset),
-            None,
-        )
-        if include_filepath:
-            row = row + (path,)
-        yield row
-
-
 # --- BGZF (bgzip) byte-range splitting ---------------------------------------
 #
 # BGZF-compressed FASTX (the 100 TB norm for read sets — bgzip output) is
 # splittable on its block boundaries with the machinery BAM already uses
-# (sources/sam.py:385-525): ranges are COMPRESSED offset intervals
-# [cb_start, cb_end); ownership of boundary-straddling records follows the
-# Hadoop LineRecordReader convention lifted to the decompressed stream:
+# (sources/sam.py, BAM byte-range section): ranges are COMPRESSED offset
+# intervals [cb_start, cb_end) from plan_even_splits; ownership of
+# boundary-straddling records follows the Hadoop LineRecordReader
+# convention lifted to the decompressed stream:
 #
 #   cutoff(cb) = start of the line FOLLOWING the first newline whose byte
 #                lies in a BGZF block with compressed offset >= cb
 #
-# A reader for [cb_start, cb_end) emits records from the first heuristic
-# record start at-or-after cutoff(cb_start) (range 0 starts at decompressed
-# byte 0) and stops before the first record start at-or-after
-# cutoff(cb_end), decompressing past cb_end as needed to finish its last
+# _bgzf_lines marks lines at-or-after cutoff(cb_end) as not owned. A range
+# other than the first discards the lines before cutoff(cb_start) and then
+# aligns to the next record start with the same probe the plain splitter
+# uses (_skip_to_record); the record grammar stops at the first header it
+# does not own, decompressing past cb_end as needed to finish its last
 # record. Both sides of every boundary compute the same cutoff from the
 # same bytes, so the union over ranges is exactly the whole file. FASTQ
 # requires strict 4-line records (same contract as the uncompressed
 # splitter); FASTA is fully general.
 
 
-class _BgzfLineReader:
-    """Line-at-a-time reader over a BGZF stream, tagging each line with
-    the compressed offset of the blocks holding its first and last byte."""
-
-    def __init__(self, path: str, start_block: int):
-        from duckdb_miint_spark.sources.sam import _BgzfStream
-
-        self.s = _BgzfStream(path, start_block)
-
-    def close(self) -> None:
-        self.s.close()
-
-    def readline(self):
-        """(line_incl_newline, first_byte_block, last_byte_block); start
-        block is None at EOF."""
-        s = self.s
-        start_blk = s.next_byte_block()
-        if start_blk is None:
-            return b"", None, None
+def _bgzf_lines(s: _BgzfStream, cb_end: int) -> Iterator[tuple[bytes, bool]]:
+    """(line, owned) from a BGZF stream: a line is owned until an earlier
+    line's newline lay in a block with compressed offset >= ``cb_end``."""
+    owned = True
+    while s._ensure():
         chunks: list[bytes] = []
         while True:
-            buf, pos = s.buf, s.buf_pos
-            nl = buf.find(b"\n", pos)
-            if nl >= 0:
-                chunks.append(buf[pos : nl + 1])
-                s.buf_pos = nl + 1
-                return b"".join(chunks), start_blk, s.cur_block_off
-            chunks.append(buf[pos:])
-            s.buf_pos = len(buf)
-            if not s._ensure():  # final line without trailing newline
-                return b"".join(chunks), start_blk, s.cur_block_off
+            nl = s.buf.find(b"\n", s.buf_pos)
+            stop = len(s.buf) if nl < 0 else nl + 1
+            chunks.append(s.buf[s.buf_pos : stop])
+            s.buf_pos = stop
+            if nl >= 0 or not s._ensure():  # else: final line, no newline
+                break
+        yield b"".join(chunks), owned
+        if s.cur_block_off >= cb_end:
+            owned = False
 
 
-def _sniff_bgzf_fastq(path: str) -> bool:
-    """True if the first decompressed record marker is '@' (FASTQ)."""
-    from duckdb_miint_spark.sources.sam import _BgzfStream
+def iter_fastx_range(
+    path: str, start: int, end: int, bgzf: bool = False
+) -> Iterator[tuple[str, str, str, str | None]]:
+    """Records of one split range, read with strict 4-line FASTQ.
 
-    s = _BgzfStream(path, 0)
+    Plain files: records whose START byte lies in [start, end), which is
+    aligned to record starts by :func:`plan_fastx_splits`. BGZF files:
+    records owned by compressed range [start, end) — see the section
+    comment for the boundary convention."""
+    if not bgzf:
+        with open(path, "rb") as f:
+            f.seek(start)
+            lines = ((line, pos < end) for line, pos in _offset_lines(f))
+            yield from _fastx_records(lines, strict_fourline=True)
+        return
+    b0 = find_bgzf_block(path, start) if start > 0 else 0
+    if b0 is None or b0 >= end:
+        return
+    s = _BgzfStream(path, b0)
     try:
-        while True:
-            ch = s.read(1)
-            if not ch:
-                raise FastxError("Empty file")
-            if ch in (b" ", b"\t", b"\r", b"\n"):
-                continue
-            if ch == b"@":
-                return True
-            if ch == b">":
-                return False
-            raise FastxError(f"Malformed FASTX record near: {ch!r}")
+        lines = _bgzf_lines(s, end)
+        if start > 0:
+            next(lines, None)  # discard up to cutoff(start)
+            lines = _skip_to_record(lines, _sniff_fastq(path))
+        yield from _fastx_records(lines, strict_fourline=True)
     finally:
         s.close()
-
-
-def iter_bgzf_fastx_range(
-    path: str, cb_start: int, cb_end: int
-) -> Iterator[tuple[str, str, str, str | None]]:
-    """Records owned by compressed range [cb_start, cb_end) — see the
-    section comment for the boundary convention."""
-    from itertools import chain
-
-    from duckdb_miint_spark.sources.sam import find_bgzf_block
-
-    is_fastq = _sniff_bgzf_fastq(path)
-    if cb_start == 0:
-        lr = _BgzfLineReader(path, 0)
-    else:
-        b0 = find_bgzf_block(path, cb_start)
-        if b0 is None or b0 >= cb_end:
-            return
-        lr = _BgzfLineReader(path, b0)
-    try:
-        def lines():
-            # yields (line, beyond): beyond=True once an EARLIER line's
-            # terminating newline sat in a block >= cb_end — i.e. this
-            # line is at-or-after cutoff(cb_end)
-            past = False
-            while True:
-                line, sb, eb = lr.readline()
-                if sb is None:
-                    return
-                yield line, past
-                if eb is not None and eb >= cb_end:
-                    past = True
-
-        it = lines()
-        if cb_start > 0:
-            if next(it, None) is None:  # discard up to cutoff(cb_start)
-                return
-            window: list[tuple[bytes, bool]] = []
-            for _ in range(8):
-                nxt = next(it, None)
-                if nxt is None:
-                    break
-                window.append(nxt)
-            start_i = None
-            if is_fastq:
-                for i in range(max(0, len(window) - 3)):
-                    if (
-                        window[i][0][:1] == b"@"
-                        and window[i + 2][0][:1] == b"+"
-                        and len(window[i + 1][0].strip()) == len(window[i + 3][0].strip())
-                    ):
-                        start_i = i
-                        break
-            else:
-                for i, (l, _) in enumerate(window):
-                    if l[:1] == b">":
-                        start_i = i
-                        break
-                if start_i is None:  # long FASTA record: keep scanning
-                    while True:
-                        nxt = next(it, None)
-                        if nxt is None:
-                            return
-                        if nxt[1]:  # first '>' at-or-after cutoff belongs to the next range
-                            return
-                        if nxt[0][:1] == b">":
-                            window, start_i = [nxt], 0
-                            break
-            if start_i is None:
-                return
-            stream = chain(window[start_i:], it)
-        else:
-            stream = it
-
-        item = next(stream, None)
-        while item is not None:
-            line, beyond = item
-            s = line.strip()
-            if not s:
-                if is_fastq:
-                    raise FastxError(
-                        "blank line in FASTQ: split mode requires strict "
-                        "4-line records — pass max_split_bytes=None"
-                    )
-                item = next(stream, None)
-                continue
-            if beyond:
-                return  # owned by the next range
-            if is_fastq:
-                if s[:1] != b"@":
-                    raise FastxError(
-                        f"Malformed FASTX record near: {s[:50].decode('ascii', 'replace')}"
-                    )
-                header = s[1:].decode("ascii")
-                parts = header.split(None, 1)
-                name = parts[0] if parts else ""
-                comment = parts[1] if len(parts) > 1 else ""
-                l2, l3, l4 = (next(stream, None) for _ in range(3))
-                if l2 is None or l3 is None or l4 is None:
-                    raise FastxError(f"Truncated FASTQ record: {name}")
-                seq = l2[0].strip().decode("ascii")
-                if l3[0][:1] != b"+":
-                    raise FastxError(f"FASTQ record missing '+' separator: {name}")
-                qual = l4[0].strip().decode("ascii")
-                if len(qual) != len(seq):
-                    raise FastxError(
-                        f"FASTQ quality length {len(qual)} != sequence length "
-                        f"{len(seq)} for {name} (multi-line records cannot be "
-                        "split — pass max_split_bytes=None)"
-                    )
-                yield name, comment, seq, qual
-                item = next(stream, None)
-            else:
-                if s[:1] != b">":
-                    raise FastxError(
-                        f"Malformed FASTX record near: {s[:50].decode('ascii', 'replace')}"
-                    )
-                header = s[1:].decode("ascii")
-                parts = header.split(None, 1)
-                name = parts[0] if parts else ""
-                comment = parts[1] if len(parts) > 1 else ""
-                seq_parts: list[bytes] = []
-                item = next(stream, None)
-                while item is not None and item[0][:1] != b">":
-                    seq_parts.append(b"".join(item[0].split()))
-                    item = next(stream, None)
-                yield name, comment, b"".join(seq_parts).decode("ascii"), None
-    finally:
-        lr.close()
-
-
-def plan_bgzf_splits(path: str, target_bytes: int) -> list[tuple[int, int]]:
-    """[(start, end)] raw compressed ranges — block/record alignment
-    happens executor-side (same shape as plan_bam_splits)."""
-    if target_bytes <= 0:
-        raise FastxError(f"max_split_bytes must be positive, got {target_bytes}")
-    size = os.path.getsize(path)
-    n_chunks = max(1, size // target_bytes)
-    bounds = [k * size // n_chunks for k in range(n_chunks)] + [size]
-    return [(a, b) for a, b in zip(bounds, bounds[1:]) if a < b]
-
-
-def count_bgzf_fastx_range(path: str, start: int, end: int) -> int:
-    """Record count in a compressed range. BGZF has no in-phase byte
-    shortcut (cutoffs are line- not record-aligned), so this parses;
-    the cost is one extra decompression pass, paid in parallel."""
-    return sum(1 for _ in iter_bgzf_fastx_range(path, start, end))
-
-
-def read_bgzf_fastx_range_rows(
-    path: str,
-    start: int,
-    end: int,
-    index_offset: int,
-    qual_offset: int,
-    include_filepath: bool,
-) -> Iterator[tuple]:
-    """Rows for one BGZF range; sequence_index continues at index_offset+1."""
-    idx = index_offset
-    for name, comment, seq, qual in iter_bgzf_fastx_range(path, start, end):
-        idx += 1
-        row = (
-            idx,
-            base_read_id(name),
-            comment or None,
-            seq,
-            None,
-            decode_qual(qual, qual_offset),
-            None,
-        )
-        if include_filepath:
-            row = row + (path,)
-        yield row
 
 
 # --- file-list resolution (bind-time) ----------------------------------------
@@ -749,18 +494,20 @@ def read_fastx_split(
 ) -> Iterator[pa.RecordBatch]:
     """Arrow batches for one split planned by :func:`read_fastx`: a whole
     file (pair), a byte range or a BGZF compressed range."""
-    if split["kind"] == "bgzf":
-        rows = read_bgzf_fastx_range_rows(
-            split["path"], split["start"], split["end"], split["offset"],
-            qual_offset, include_filepath,
-        )
-    elif split["kind"] == "range":
-        rows = read_fastx_range_rows(
-            split["path"], split["start"], split["end"], split["offset"],
+    if split["kind"] == "pair":
+        p1, p2 = split["p1"], split["p2"]
+        rows = fastx_rows(
+            p1, _file_records(p1), None if p2 is None else _file_records(p2), 0,
             qual_offset, include_filepath,
         )
     else:
-        rows = read_fastx_file_pair(split["p1"], split["p2"], qual_offset, include_filepath)
+        path = split["path"]
+        records = iter_fastx_range(
+            path, split["start"], split["end"], bgzf=split["kind"] == "bgzf"
+        )
+        rows = fastx_rows(
+            path, records, None, split["offset"], qual_offset, include_filepath
+        )
     yield from batched(rows, fastx_schema(include_filepath))
 
 
@@ -791,12 +538,6 @@ def plan_file_pairs(
 DRIVER_COUNT_BYTES = 8 << 20
 
 
-def _count_range(kind: str, path: str, s: int, e: int, size: int) -> int:
-    if kind == "bgzf":
-        return count_bgzf_fastx_range(path, s, e)
-    return count_fastx_range(path, s, e, size)
-
-
 def plan_split_partitions(
     spark: SparkSession,
     pairs: list[tuple[str, str | None]],
@@ -816,43 +557,43 @@ def plan_split_partitions(
     output is identical to the unsplit scan. It runs on the driver when
     the ranges total under ``DRIVER_COUNT_BYTES``, else as one Spark job
     over all ranges."""
+    if max_split_bytes <= 0:
+        raise FastxError(f"max_split_bytes must be positive, got {max_split_bytes}")
     out: list[dict] = []
-    # (slot, kind, path, s, e, size)
-    to_count: list[tuple[int, str, str, int, int, int]] = []
     for p1, p2 in pairs:
-        size = os.path.getsize(p1)
-        if p2 is not None or size <= max_split_bytes:
+        kind = "pair"
+        if p2 is None and os.path.getsize(p1) > max_split_bytes:
+            if not is_gzip(p1):
+                kind, ranges = "range", plan_fastx_splits(p1, max_split_bytes)
+            elif _is_bgzf(p1):
+                kind, ranges = "bgzf", plan_even_splits(p1, max_split_bytes)
+        if kind == "pair":
             out.append({"kind": "pair", "p1": p1, "p2": p2})
-            continue
-        if _is_gzip(p1):
-            if not _is_bgzf(p1):
-                out.append({"kind": "pair", "p1": p1, "p2": p2})
-                continue
-            for s, e in plan_bgzf_splits(p1, max_split_bytes):
-                to_count.append((len(out), "bgzf", p1, s, e, size))
-                out.append(
-                    {"kind": "bgzf", "path": p1, "start": s, "end": e, "offset": 0}
-                )
-            continue
-        for s, e in plan_fastx_splits(p1, max_split_bytes):
-            to_count.append((len(out), "range", p1, s, e, size))
-            out.append({"kind": "range", "path": p1, "start": s, "end": e, "offset": 0})
-
-    def _count(t):
-        slot, kind, path, s, e, size = t
-        return (slot, _count_range(kind, path, s, e, size))
-
-    if to_count:
-        if sum(e - s for _slot, _kind, _path, s, e, _size in to_count) < DRIVER_COUNT_BYTES:
-            counts = dict(map(_count, to_count))
         else:
-            counts = dict(
+            out += [
+                {"kind": kind, "path": p1, "start": s, "end": e, "offset": 0}
+                for s, e in ranges
+            ]
+
+    def _count(split: dict) -> int:
+        path = split["path"]
+        return count_fastx_range(
+            path, split["start"], split["end"], os.path.getsize(path),
+            bgzf=split["kind"] == "bgzf",
+        )
+
+    to_count = [split for split in out if split["kind"] != "pair"]
+    if to_count:
+        if sum(split["end"] - split["start"] for split in to_count) < DRIVER_COUNT_BYTES:
+            counts = list(map(_count, to_count))
+        else:
+            counts = (
                 spark.sparkContext.parallelize(to_count, len(to_count)).map(_count).collect()
             )
         running: dict[str, int] = {}
-        for slot, _kind, path, _s, _e, _size in to_count:
-            out[slot]["offset"] = running.get(path, 0)
-            running[path] = out[slot]["offset"] + counts[slot]
+        for split, n in zip(to_count, counts):
+            split["offset"] = running.get(split["path"], 0)
+            running[split["path"]] = split["offset"] + n
     return out
 
 

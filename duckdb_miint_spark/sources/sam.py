@@ -29,18 +29,24 @@ N byte-range partitions: SAM text splits on line boundaries (exact — one
 record per line, '@' lines are always headers); BAM splits on BGZF block
 boundaries with htsjdk-style record-start guessing (see the BAM
 byte-range section below). Plain-gzip SAM stays whole-file (gzip is not
-block-addressable).
+block-addressable). A whole-file scan is the full range ``[0, math.inf)``
+of the same reader, so each format has one parser (``read_sam_text``,
+``read_bam_range``).
 """
 
 from __future__ import annotations
 
+import bisect
 import glob as globmod
 import gzip
 import io
+import math
 import os
 import struct
 import warnings
+import zlib
 from collections.abc import Iterator
+from contextlib import closing
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -145,20 +151,20 @@ def _finish_row(
 # --- SAM text ----------------------------------------------------------------
 
 
-def _open_maybe_gzip(path: str):
-    raw = open(path, "rb")
-    magic = raw.read(2)
-    raw.seek(0)
-    if magic == b"\x1f\x8b":
-        return gzip.GzipFile(fileobj=raw)
-    return raw
+def is_gzip(path: str) -> bool:
+    """gzip (BGZF included) sniffed from the magic bytes, like kseq/htslib."""
+    with open(path, "rb") as f:
+        return f.read(2) == b"\x1f\x8b"
+
+
+def open_maybe_gzip(path: str):
+    """Binary stream of a file's content, gunzipped when :func:`is_gzip`."""
+    return gzip.open(path, "rb") if is_gzip(path) else open(path, "rb")
 
 
 def is_bam(path: str) -> bool:
     """BAM = BGZF-compressed 'BAM\\1' magic."""
-    with open(path, "rb") as f:
-        magic = f.read(2)
-    if magic != b"\x1f\x8b":
+    if not is_gzip(path):
         return False
     with gzip.open(path, "rb") as g:
         return g.read(4) == b"BAM\x01"
@@ -168,7 +174,7 @@ def sam_header_refs(path: str) -> tuple[list[tuple[str, int]], bool]:
     """(reference (name, length) list, has_any_header_line) from SAM text."""
     refs: list[tuple[str, int]] = []
     has_header = False
-    with _open_maybe_gzip(path) as f:
+    with open_maybe_gzip(path) as f:
         t = io.TextIOWrapper(f, encoding="utf-8")
         for line in t:
             if not line.startswith("@"):
@@ -239,43 +245,27 @@ def _sam_line_to_row(
 
 def read_sam_text(
     path: str,
-    known_refs: set[str],
-    include_seq_qual: bool,
-    filepath: str | None,
-) -> Iterator[tuple]:
-    with _open_maybe_gzip(path) as f:
-        t = io.TextIOWrapper(f, encoding="utf-8")
-        for line in t:
-            if line.startswith("@"):
-                continue
-            line = line.rstrip("\n")
-            if not line:
-                continue
-            yield _sam_line_to_row(line, known_refs, include_seq_qual, filepath)
-
-
-def read_sam_text_range(
-    path: str,
     start: int,
-    end: int,
+    end: int | float,
     known_refs: set[str],
     include_seq_qual: bool,
     filepath: str | None,
 ) -> Iterator[tuple]:
-    """Records whose line START byte lies in [start, end) — uncompressed
-    SAM text only. Every SAM record is exactly one line and a line
-    beginning with '@' is always a header (QNAME's grammar
-    ``[!-?A-~]`` excludes '@' — SAMv1 spec §1.4), so line boundaries are
-    record boundaries and ranges need no record-structure probing."""
-    with open(path, "rb") as f:
+    """Records whose line START byte lies in [start, end) of the (gzip
+    sniffed) text; a whole-file read is ``[0, math.inf)``. Only plain
+    files are split, so only they are seeked. Every SAM record is exactly
+    one line and a line beginning with '@' is always a header (QNAME's
+    grammar ``[!-?A-~]`` excludes '@' — SAMv1 spec §1.4), so line
+    boundaries are record boundaries and ranges need no record-structure
+    probing."""
+    with open_maybe_gzip(path) as f:
         if start > 0:
             f.seek(start - 1)
             if f.read(1) != b"\n":
                 f.readline()  # discard partial line
         pos = f.tell()
-        while pos < end:
-            line = f.readline()
-            if not line:
+        for line in f:
+            if pos >= end:
                 break
             pos += len(line)
             s = line.rstrip(b"\r\n")
@@ -286,12 +276,10 @@ def read_sam_text_range(
             )
 
 
-def plan_sam_splits(path: str, target_bytes: int) -> list[tuple[int, int]]:
-    """[(start, end)] line-aligned byte ranges. Alignment happens lazily
-    in the range reader (skip-to-next-newline), so planning is just
-    arithmetic — ranges here are raw byte offsets."""
-    if target_bytes <= 0:
-        raise SamError(f"max_split_bytes must be positive, got {target_bytes}")
+def plan_even_splits(path: str, target_bytes: int) -> list[tuple[int, int]]:
+    """[(start, end)] raw byte ranges of about ``target_bytes`` each. The
+    range readers align them (SAM text to lines, BGZF to blocks and then
+    to records), so planning is pure arithmetic."""
     size = os.path.getsize(path)
     n_chunks = max(1, size // target_bytes)
     bounds = [k * size // n_chunks for k in range(n_chunks)] + [size]
@@ -301,26 +289,6 @@ def plan_sam_splits(path: str, target_bytes: int) -> list[tuple[int, int]]:
 # --- BAM binary --------------------------------------------------------------
 
 _SEQ_NT16 = "=ACMGRSVTWYHKDBN"
-
-
-def _bam_stream(path: str):
-    """BGZF = concatenated gzip members; gzip.open handles multi-member."""
-    return gzip.open(path, "rb")
-
-
-def _read_bam_header(g) -> list[str]:
-    if g.read(4) != b"BAM\x01":
-        raise SamError("Not a BAM file")
-    (l_text,) = struct.unpack("<i", g.read(4))
-    g.read(l_text)  # header text (refs come from the binary list)
-    (n_ref,) = struct.unpack("<i", g.read(4))
-    names = []
-    for _ in range(n_ref):
-        (l_name,) = struct.unpack("<i", g.read(4))
-        name = g.read(l_name)[:-1].decode()
-        g.read(4)  # l_ref
-        names.append(name)
-    return names
 
 
 def _parse_bam_tags(data: bytes) -> dict:
@@ -369,18 +337,6 @@ def _parse_bam_tags(data: bytes) -> dict:
 _CIGAR_OPS = "MIDNSHP=X"
 
 
-def read_bam(path: str, include_seq_qual: bool, filepath: str | None) -> Iterator[tuple]:
-    with _bam_stream(path) as g:
-        ref_names = _read_bam_header(g)
-        while True:
-            head = g.read(4)
-            if len(head) < 4:
-                break
-            (block_size,) = struct.unpack("<i", head)
-            rec = g.read(block_size)
-            yield _decode_bam_record(rec, ref_names, include_seq_qual, filepath)
-
-
 # --- BAM byte-range splitting ------------------------------------------------
 #
 # BGZF is a sequence of independent gzip members (<= 64 KiB decompressed)
@@ -393,9 +349,8 @@ def read_bam(path: str, include_seq_qual: bool, filepath: str | None) -> Iterato
 # size-consistency checks) — the approach htsjdk/Hadoop-BAM use for
 # splittable BAM. A record belongs to the partition owning the block its
 # FIRST byte lives in (virtual-offset semantics), so ranges are exact:
-# no duplicate and no lost records at boundaries.
-
-import zlib
+# no duplicate and no lost records at boundaries. A whole-file scan is the
+# range [0, math.inf) of the same reader (read_bam_range).
 
 _BGZF_MAGIC = b"\x1f\x8b\x08\x04"
 
@@ -588,9 +543,20 @@ def _guess_first_record(buf: bytes, n_ref: int, first_block_len: int) -> int | N
     return None
 
 
-def _bam_ref_names(path: str) -> list[str]:
-    with _bam_stream(path) as g:
-        return _read_bam_header(g)
+def _bam_header_refs(stream: _BgzfStream) -> list[str]:
+    """Reference names of the BAM header at the start of ``stream``,
+    which is left at the first record."""
+    if stream.read(4) != b"BAM\x01":
+        raise SamError("Not a BAM file")
+    (l_text,) = struct.unpack("<i", stream.read(4))
+    stream.skip(l_text)  # header text (refs come from the binary list)
+    (n_ref,) = struct.unpack("<i", stream.read(4))
+    names = []
+    for _ in range(n_ref):
+        (l_name,) = struct.unpack("<i", stream.read(4))
+        names.append(stream.read(l_name)[:-1].decode())
+        stream.skip(4)  # l_ref
+    return names
 
 
 # --- BAI/CSI index-guided splits ---------------------------------------------
@@ -776,118 +742,69 @@ def _decode_bam_record(
     )
 
 
+def _range_entry(path: str, start: int, end: int, n_ref: int) -> int | None:
+    """Virtual offset at which a reader of range [start, end) enters: the
+    largest index record start before the range's first block (the reader
+    walks on from it), else the guessed first record start in the first
+    block at or after ``start``. None when no block starts in the range."""
+    voffs = _bam_index_voffsets(path)
+    if voffs is not None:
+        i = bisect.bisect_left(voffs, start << 16)
+        return voffs[i - 1] if i > 0 else voffs[0]
+    b0 = find_bgzf_block(path, start)
+    if b0 is None or b0 >= end:
+        return None
+    # validation window: first block + following blocks up to ~1 MiB
+    with closing(_BgzfStream(path, b0)) as win:
+        if not win._ensure():
+            return None
+        first_block_len = len(win.buf)
+        window = win.read(1 << 20)
+    guess = _guess_first_record(window, n_ref, first_block_len)
+    return None if guess is None else (b0 << 16) | guess
+
+
+def _record_size(stream: _BgzfStream) -> int:
+    """block_size of the record at the stream position (not at EOF)."""
+    head = stream.read(4)
+    if len(head) < 4:
+        raise SamError("Truncated BAM record")
+    return struct.unpack("<i", head)[0]
+
+
 def read_bam_range(
     path: str,
     start: int,
-    end: int,
+    end: int | float,
     include_seq_qual: bool,
     filepath: str | None,
 ) -> Iterator[tuple]:
     """Records whose START byte lives in a BGZF block with compressed
-    offset in [start, end). Range 0 parses the header positionally (no
-    guessing); later ranges align to the next block boundary and guess
-    the first record start (see module section comment)."""
-    ref_names = _bam_ref_names(path)
-    n_ref = len(ref_names)
-    if start == 0:
-        stream = _BgzfStream(path, 0)
-        try:
-            # walk the header structurally to land on the first record
-            if stream.read(4) != b"BAM\x01":
-                raise SamError("Not a BAM file")
-            (l_text,) = struct.unpack("<i", stream.read(4))
-            stream.skip(l_text)
-            (nr,) = struct.unpack("<i", stream.read(4))
-            for _ in range(nr):
-                (l_name,) = struct.unpack("<i", stream.read(4))
-                stream.skip(l_name + 4)
-            yield from _emit_bam_records(
-                stream, end, ref_names, include_seq_qual, filepath
-            )
-        finally:
+    offset in [start, end); a whole-file read is ``[0, math.inf)``.
+    Range 0 reads on from the header (no guessing); later ranges enter
+    through :func:`_range_entry` (see the section comments)."""
+    stream = _BgzfStream(path, 0)
+    try:
+        ref_names = _bam_header_refs(stream)
+        if start > 0:
             stream.close()
-        return
-    voffs = _bam_index_voffsets(path)
-    if voffs is not None:
-        # index-guided: enter at the largest known record start strictly
-        # before this range's first block, then length-prefix-skip
-        # (no decoding) up to the first record starting at block >= start
-        import bisect
-
-        i = bisect.bisect_left(voffs, start << 16)
-        entry = voffs[i - 1] if i > 0 else voffs[0]
-        stream = _BgzfStream(path, entry >> 16)
-        try:
+            entry = _range_entry(path, start, end, len(ref_names))
+            if entry is None:
+                return
+            stream = _BgzfStream(path, entry >> 16)
             stream.skip(entry & 0xFFFF)
-            while True:
-                blk = stream.next_byte_block()
-                if blk is None:
-                    return
-                if blk >= start:
-                    break
-                head = stream.read(4)
-                if len(head) < 4:
-                    return
-                stream.skip(struct.unpack("<i", head)[0])
-            yield from _emit_bam_records(
-                stream, end, ref_names, include_seq_qual, filepath
-            )
-        finally:
-            stream.close()
-        return
-    b0 = find_bgzf_block(path, start)
-    if b0 is None or b0 >= end:
-        return
-    # validation window: first block + following blocks up to ~1 MiB
-    win_stream = _BgzfStream(path, b0)
-    try:
-        if not win_stream._ensure():
-            return
-        first_block_len = len(win_stream.buf)
-        window = win_stream.read(1 << 20)
-    finally:
-        win_stream.close()
-    guess = _guess_first_record(window, n_ref, first_block_len)
-    if guess is None:
-        return
-    stream = _BgzfStream(path, b0)
-    try:
-        stream.skip(guess)
-        yield from _emit_bam_records(stream, end, ref_names, include_seq_qual, filepath)
+        # an index entry may lie before the range: length-prefix-skip (no
+        # decoding) up to the first record starting at block >= start
+        while (blk := stream.next_byte_block()) is not None and blk < start:
+            stream.skip(_record_size(stream))
+        while (blk := stream.next_byte_block()) is not None and blk < end:
+            size = _record_size(stream)
+            rec = stream.read(size)
+            if len(rec) < size:
+                raise SamError("Truncated BAM record")
+            yield _decode_bam_record(rec, ref_names, include_seq_qual, filepath)
     finally:
         stream.close()
-
-
-def _emit_bam_records(
-    stream: _BgzfStream,
-    end: int,
-    ref_names: list[str],
-    include_seq_qual: bool,
-    filepath: str | None,
-) -> Iterator[tuple]:
-    while True:
-        blk = stream.next_byte_block()
-        if blk is None or blk >= end:
-            break
-        head = stream.read(4)
-        if len(head) < 4:
-            break
-        (block_size,) = struct.unpack("<i", head)
-        rec = stream.read(block_size)
-        if len(rec) < block_size:
-            raise SamError("Truncated BAM record")
-        yield _decode_bam_record(rec, ref_names, include_seq_qual, filepath)
-
-
-def plan_bam_splits(path: str, target_bytes: int) -> list[tuple[int, int]]:
-    """[(start, end)] raw compressed byte ranges — block/record alignment
-    happens executor-side, so planning is pure arithmetic."""
-    if target_bytes <= 0:
-        raise SamError(f"max_split_bytes must be positive, got {target_bytes}")
-    size = os.path.getsize(path)
-    n_chunks = max(1, size // target_bytes)
-    bounds = [k * size // n_chunks for k in range(n_chunks)] + [size]
-    return [(a, b) for a, b in zip(bounds, bounds[1:]) if a < b]
 
 
 # --- scan planning (driver) ---------------------------------------------------
@@ -943,52 +860,40 @@ def plan_sam_scan(
     return plans
 
 
-def _is_gzip_file(path: str) -> bool:
-    with open(path, "rb") as f:
-        return f.read(2) == b"\x1f\x8b"
-
-
 def plan_alignment_splits(
     plans: list[tuple[str, bool, list[str]]], max_split_bytes: int | None
-) -> list[tuple[str, bool, list[str], int, int | None]]:
+) -> list[tuple[str, bool, list[str], int, int | float]]:
     """(path, is_bam, known_refs, start, end) per split: one whole-file
-    split (``end`` None) per file, or byte ranges for files larger than
-    ``max_split_bytes`` (BAM and plain SAM split; plain-gzip SAM can't)."""
+    split (``[0, math.inf)``) per file, or byte ranges for files larger
+    than ``max_split_bytes`` (BAM and plain SAM split; plain-gzip SAM
+    can't)."""
+    if max_split_bytes is not None and max_split_bytes <= 0:
+        raise SamError(f"max_split_bytes must be positive, got {max_split_bytes}")
     splits = []
     for p, b, k in plans:
-        splittable = b or not _is_gzip_file(p)
         if (
             max_split_bytes is not None
-            and splittable
+            and (b or not is_gzip(p))
             and os.path.getsize(p) > max_split_bytes
         ):
-            ranges = (
-                plan_bam_splits(p, max_split_bytes)
-                if b
-                else plan_sam_splits(p, max_split_bytes)
-            )
-            splits += [(p, b, k, s, e) for s, e in ranges]
+            splits += [(p, b, k, s, e) for s, e in plan_even_splits(p, max_split_bytes)]
         else:
-            splits.append((p, b, k, 0, None))
+            splits.append((p, b, k, 0, math.inf))
     return splits
 
 
 def read_sam_split(
-    split: tuple[str, bool, list[str], int, int | None],
+    split: tuple[str, bool, list[str], int, int | float],
     include_seq_qual: bool,
     include_filepath: bool,
 ) -> Iterator[pa.RecordBatch]:
     """Arrow batches for one split planned by :func:`plan_alignment_splits`."""
     path, bam, known_refs, start, end = split
     fp = path if include_filepath else None
-    if bam and end is not None:
+    if bam:
         rows = read_bam_range(path, start, end, include_seq_qual, fp)
-    elif bam:
-        rows = read_bam(path, include_seq_qual, fp)
-    elif end is not None:
-        rows = read_sam_text_range(path, start, end, set(known_refs), include_seq_qual, fp)
     else:
-        rows = read_sam_text(path, set(known_refs), include_seq_qual, fp)
+        rows = read_sam_text(path, start, end, set(known_refs), include_seq_qual, fp)
     yield from batched(rows, alignments_schema(include_seq_qual, include_filepath))
 
 

@@ -29,8 +29,8 @@ def fastq_records(n: int = 3000) -> list[tuple[str, str, str]]:
         ln = 20 + ((i * 37) % 101)
         seq = "".join(_BASES[(i + 3 * j) % 4] for j in range(ln))
         # First qual char is '@' (Phred 31) on every 5th read: a quality
-        # line that looks like a header start is the split prober's
-        # adversarial case (see plan_fastx_splits).
+        # line that looks like a header start is the record-start probe's
+        # adversarial case (see fastx._skip_to_record).
         qual = "".join(
             "@" if (j == 0 and i % 5 == 0) else chr(33 + ((i + j) % 42))
             for j in range(ln)

@@ -176,14 +176,14 @@ def test_sam_text_split_identical_to_whole(spark, tmp_path):
 
 def test_sam_split_range_header_skip(spark, tmp_path):
     """Header lines only ever live in range 0 and are skipped there."""
-    from duckdb_miint_spark.sources.sam import read_sam_text_range
+    from duckdb_miint_spark.sources.sam import read_sam_text
     import os
 
     path = _write_sam(str(tmp_path / "h.sam"), 300)
     size = os.path.getsize(path)
     mid = size // 2
-    first = list(read_sam_text_range(path, 0, mid, {"chr1", "chr2"}, False, None))
-    second = list(read_sam_text_range(path, mid, size, {"chr1", "chr2"}, False, None))
+    first = list(read_sam_text(path, 0, mid, {"chr1", "chr2"}, False, None))
+    second = list(read_sam_text(path, mid, size, {"chr1", "chr2"}, False, None))
     assert len(first) + len(second) == 300
     ids = {r[0] for r in first} | {r[0] for r in second}
     assert len(ids) == 300  # no dup, no loss at the boundary
@@ -354,28 +354,25 @@ def test_bgzf_fasta_split_identical_to_whole(spark, tmp_path):
 def test_bgzf_range_union_covers_exactly_once(tmp_path):
     """Every record appears in exactly one compressed range, whatever the
     boundary placement (sweep several target sizes)."""
-    from duckdb_miint_spark.sources.fastx import (
-        count_bgzf_fastx_range,
-        iter_bgzf_fastx_range,
-        plan_bgzf_splits,
-    )
+    from duckdb_miint_spark.sources.fastx import iter_fastx_range
+    from duckdb_miint_spark.sources.sam import plan_even_splits
 
     plain = _write_fastq(str(tmp_path / "u.fastq"), 700, seed=23)
     bgz = _bgzip(plain, str(tmp_path / "u.fastq.gz"))
     import os
 
     size = os.path.getsize(bgz)
-    whole = list(iter_bgzf_fastx_range(bgz, 0, size))
+    whole = list(iter_fastx_range(bgz, 0, size, bgzf=True))
     assert len(whole) == 700
     for target in (7 * 1024, 11 * 1024, 23 * 1024):
-        ranges = plan_bgzf_splits(bgz, target)
+        ranges = plan_even_splits(bgz, target)
         if len(ranges) < 2:
             continue
         got = []
         for s, e in ranges:
-            got.extend(iter_bgzf_fastx_range(bgz, s, e))
+            got.extend(iter_fastx_range(bgz, s, e, bgzf=True))
         assert got == whole, f"target={target}: split union != whole"
-        assert sum(count_bgzf_fastx_range(bgz, s, e) for s, e in ranges) == 700
+        assert sum(count_fastx_range(bgz, s, e, size, bgzf=True) for s, e in ranges) == 700
 
 
 def test_plain_gzip_still_never_splits(spark, tmp_path):
@@ -446,7 +443,7 @@ def test_bam_split_uses_bai_exact_offsets(spark, tmp_path, monkeypatch):
     the output is identical to the guess-based and whole-file scans."""
     import duckdb_miint_spark.sources.sam as sam_mod
     from duckdb_miint_spark.sinks.bam_sink import copy_bam
-    from duckdb_miint_spark.sources.sam import plan_bam_splits, read_alignments
+    from duckdb_miint_spark.sources.sam import plan_even_splits, read_alignments
 
     sam = _write_sam(str(tmp_path / "src.sam"), 9000)
     bam = str(tmp_path / "indexed.bam")
@@ -466,7 +463,7 @@ def test_bam_split_uses_bai_exact_offsets(spark, tmp_path, monkeypatch):
         raise AssertionError("guesser invoked despite .bai")
 
     monkeypatch.setattr(sam_mod, "_guess_first_record", _no_guess)
-    ranges = plan_bam_splits(bam, 24 * 1024)
+    ranges = plan_even_splits(bam, 24 * 1024)
     assert len(ranges) > 3
     got = []
     for s, e in ranges:
@@ -641,3 +638,212 @@ def test_reader_output_is_never_auto_broadcast(spark, tmp_path):
             f"{name} is planned as the broadcast side:\n{plan}"
         )
         assert joined.count() == df.filter("read_id = 'r1'").count()
+
+
+def test_fastx_header_comment_same_in_split_and_whole(spark, tmp_path):
+    """A header's comment keeps its trailing blanks and inner tabs in
+    every scan: the plain split, the BGZF split and the whole-file scan
+    give equal rows (records with an empty sequence included)."""
+    rng = random.Random(29)
+    headers = ["@h{} some comment  ", "@h{}\tkey=v\tx ", "@h{}/1 c\t", "@h{}"]
+    plain = str(tmp_path / "ws.fastq")
+    with open(plain, "w") as f:
+        for i in range(2000):
+            ln = rng.randint(20, 80) if i % 7 else 0
+            seq = "".join(rng.choice("ACGT") for _ in range(ln))
+            qual = "".join(rng.choice(QUAL_CHARS) for _ in range(ln))
+            f.write(f"{headers[i % 4].format(i)}\n{seq}\n+\n{qual}\n")
+    bgz = _bgzip(plain, str(tmp_path / "ws.fastq.gz"))
+    whole = read_fastx(spark, plain).collect()
+    assert {r.comment for r in whole[:4]} == {"some comment  ", "key=v\tx ", "c\t", None}
+    plain_split = read_fastx(spark, plain, max_split_bytes=16 * 1024)
+    bgzf_split = read_fastx(spark, bgz, max_split_bytes=8 * 1024)
+    assert plain_split.rdd.getNumPartitions() > 3
+    assert bgzf_split.rdd.getNumPartitions() > 3
+    assert plain_split.collect() == whole
+    assert bgzf_split.collect() == whole
+    assert read_fastx(spark, bgz).collect() == whole
+
+
+def test_truncated_bam_raises_in_whole_and_split_scans(tmp_path):
+    """A BAM cut at a BGZF block boundary (mid-record) raises SamError
+    from the whole-file scan and from the split scan alike."""
+    import struct
+
+    from duckdb_miint_spark.sinks.bam_sink import BgzfWriter
+    from duckdb_miint_spark.sources.sam import (
+        SamError,
+        _BgzfStream,
+        plan_alignment_splits,
+        plan_sam_scan,
+        read_sam_split,
+    )
+
+    payload = bytearray(b"BAM\x01" + struct.pack("<i", 0) + struct.pack("<i", 1))
+    payload += struct.pack("<i", 5) + b"chr1\x00" + struct.pack("<i", 100000)
+    for i in range(3000):
+        name = f"t{i}".encode() + b"\x00"
+        body = struct.pack(
+            "<iiBBHHHiiii", 0, i, len(name), 60, 0, 1, 0, 0, -1, -1, 0
+        ) + name + struct.pack("<I", (50 << 4) | 0)
+        payload += struct.pack("<i", len(body)) + body
+    full = str(tmp_path / "full.bam")
+    with open(full, "wb") as fh:
+        w = BgzfWriter(fh, level=1, block_size=7001)  # block ends fall mid-record
+        w.write(bytes(payload))
+        w.close()
+    blocks = []
+    s = _BgzfStream(full, 0)
+    while s._load_next_block():
+        blocks.append(s.cur_block_off)
+    s.close()
+    assert len(blocks) > 4
+    cut = str(tmp_path / "cut.bam")
+    with open(full, "rb") as fin, open(cut, "wb") as fout:
+        fout.write(fin.read(blocks[-2]))
+
+    def scan(max_split_bytes):
+        for split in plan_alignment_splits(plan_sam_scan([cut], None), max_split_bytes):
+            for _ in read_sam_split(split, False, False):
+                pass
+
+    assert len(plan_alignment_splits(plan_sam_scan([cut], None), 2 * 1024)) > 2
+    with pytest.raises(SamError, match="Truncated BAM record"):
+        scan(None)
+    with pytest.raises(SamError, match="Truncated BAM record"):
+        scan(2 * 1024)
+
+
+# --- whole-file goldens -------------------------------------------------------
+#
+# Exact rows of whole-file scans against records written here, so the
+# check does not depend on the reader code (the split tests above compare
+# the reader with itself).
+
+_FASTQ_GOLDEN = [
+    # (header line, sequence, quality) -> (read_id, comment)
+    ("@r1", "ACGT", "IIII", "r1", None),
+    ("@r2/1 some comment  ", "GGCCA", "@#+5I", "r2", "some comment  "),
+    ("@r3/2\tkey=v", "N", "!", "r3", "key=v"),
+    ("@r4/x", "TTTTTT", "~~~~~~", "r4/x", None),
+]
+
+
+def _fastq_golden_rows():
+    return [
+        (i + 1, rid, comment, seq, None, [ord(c) - 33 for c in qual], None)
+        for i, (_h, seq, qual, rid, comment) in enumerate(_FASTQ_GOLDEN)
+    ]
+
+
+@pytest.mark.parametrize("codec", ["plain", "gzip", "bgzf"])
+def test_whole_file_fastq_golden(spark, tmp_path, codec):
+    text = "".join(f"{h}\n{s}\n+\n{q}\n" for h, s, q, _r, _c in _FASTQ_GOLDEN).encode()
+    path = str(tmp_path / f"g.{codec}.fq")
+    if codec == "plain":
+        open(path, "wb").write(text)
+    elif codec == "gzip":
+        open(path, "wb").write(gzip.compress(text))
+    else:
+        from duckdb_miint_spark.sinks.bam_sink import BgzfWriter
+
+        with open(path, "wb") as fh:
+            w = BgzfWriter(fh, level=1, block_size=20)  # records span blocks
+            w.write(text)
+            w.close()
+    rows = [tuple(r) for r in read_fastx(spark, path).collect()]
+    assert rows == _fastq_golden_rows()
+
+
+def test_whole_file_multiline_fasta_golden(spark, tmp_path):
+    path = str(tmp_path / "g.fa")
+    with open(path, "w") as f:
+        f.write(">c1 desc one\nACGT\nAC\n>c2\nGG GG\nTT\n\n>c3\tx\nA\n")
+    rows = [tuple(r) for r in read_fastx(spark, path).collect()]
+    assert rows == [
+        (1, "c1", "desc one", "ACGTAC", None, None, None),
+        (2, "c2", None, "GGGGTT", None, None, None),
+        (3, "c3", "x", "A", None, None, None),
+    ]
+
+
+def _tags(**kw):
+    """The 8 int tags then the 3 string tags of the alignments schema."""
+    order = ("AS", "XS", "YS", "XN", "XM", "XO", "XG", "NM", "YT", "MD", "SA")
+    return tuple(kw.get(t) for t in order)
+
+
+_SAM_GOLDEN_TEXT = (
+    "@HD\tVN:1.6\n@SQ\tSN:chr1\tLN:1000\n@SQ\tSN:chr2\tLN:500\n"
+    "r1\t0\tchr1\t10\t60\t5M\t*\t0\t0\tACGTA\tIIIII\tAS:i:-3\tNM:i:1\tMD:Z:4A0\n"
+    "r2\t16\tchr2\t20\t30\t2M1I2M\t=\t40\t25\tACGTT\t#####\tXS:i:7\tYT:Z:CP\n"
+    "r3\t4\t*\t0\t0\t*\t*\t0\t0\tGGGG\t!!!!\n"
+    "r4\t256\tchr1\t100\t0\t3S4M2D1M\tchr2\t7\t-5\t*\t*\tSA:Z:chr2,7,+,4M,0,0;\n"
+)
+_SAM_GOLDEN_ROWS = [
+    ("r1", 0, "chr1", 10, 15, 60, "5M", "*", 0, 0)
+    + _tags(AS=-3, NM=1, MD="4A0") + ("ACGTA", [40] * 5),
+    ("r2", 16, "chr2", 20, 24, 30, "2M1I2M", "=", 40, 25)
+    + _tags(XS=7, YT="CP") + ("ACGTT", [2] * 5),
+    ("r3", 4, "*", 0, 0, 0, "*", "*", 0, 0) + _tags() + ("GGGG", [0] * 4),
+    ("r4", 256, "chr1", 100, 107, 0, "3S4M2D1M", "chr2", 7, -5)
+    + _tags(SA="chr2,7,+,4M,0,0;") + ("", []),
+]
+
+
+@pytest.mark.parametrize("codec", ["plain", "gzip"])
+def test_whole_file_sam_golden(spark, tmp_path, codec):
+    from duckdb_miint_spark.sources.sam import read_alignments
+
+    path = str(tmp_path / f"g.{codec}.sam")
+    data = _SAM_GOLDEN_TEXT.encode()
+    open(path, "wb").write(data if codec == "plain" else gzip.compress(data))
+    rows = [tuple(r) for r in read_alignments(spark, path, include_seq_qual=True).collect()]
+    assert rows == _SAM_GOLDEN_ROWS
+
+
+def test_whole_file_bam_golden(spark, tmp_path):
+    """A hand-packed BAM (two references, SEQ/QUAL, typed tags) across
+    several BGZF blocks."""
+    import struct
+
+    from duckdb_miint_spark.sinks.bam_sink import BgzfWriter
+    from duckdb_miint_spark.sources.sam import read_alignments
+
+    nt16 = {c: i for i, c in enumerate("=ACMGRSVTWYHKDBN")}
+
+    def record(name, ref, pos, mapq, cigar, flag, seq, qual, nref, npos, tlen, tags):
+        packed = bytes(
+            (nt16[seq[j]] << 4) | (nt16[seq[j + 1]] if j + 1 < len(seq) else 0)
+            for j in range(0, len(seq), 2)
+        )
+        rname = name.encode() + b"\x00"
+        body = struct.pack(
+            "<iiBBHHHiiii", ref, pos, len(rname), mapq, 0, len(cigar), flag,
+            len(seq), nref, npos, tlen,
+        )
+        body += rname + struct.pack(f"<{len(cigar)}I", *cigar) + packed + qual + tags
+        return struct.pack("<i", len(body)) + body
+
+    text = b"@SQ\tSN:chr1\tLN:1000\n@SQ\tSN:chr2\tLN:500\n"
+    payload = b"BAM\x01" + struct.pack("<i", len(text)) + text + struct.pack("<i", 2)
+    payload += struct.pack("<i", 5) + b"chr1\x00" + struct.pack("<i", 1000)
+    payload += struct.pack("<i", 5) + b"chr2\x00" + struct.pack("<i", 500)
+    payload += record("b1", 0, 9, 60, [5 << 4], 0, "ACGTA", bytes([30, 31, 32, 33, 34]),
+                      -1, -1, 0, b"ASc" + struct.pack("<b", -3) + b"MDZ5\x00")
+    payload += record("b2", 1, 19, 30, [2 << 4, (1 << 4) | 1, 2 << 4], 16, "ACGTT",
+                      b"\xff" * 5, 1, 39, 25, b"NMC\x02YTZCP\x00")
+    payload += record("b3", -1, -1, 0, [], 4, "GGG", bytes(3), -1, -1, 0, b"")
+    path = str(tmp_path / "g.bam")
+    with open(path, "wb") as fh:
+        w = BgzfWriter(fh, level=1, block_size=50)  # header and records span blocks
+        w.write(payload)
+        w.close()
+    rows = [tuple(r) for r in read_alignments(spark, path, include_seq_qual=True).collect()]
+    assert rows == [
+        ("b1", 0, "chr1", 10, 15, 60, "5M", "*", 0, 0)
+        + _tags(AS=-3, MD="5") + ("ACGTA", [30, 31, 32, 33, 34]),
+        ("b2", 16, "chr2", 20, 24, 30, "2M1I2M", "=", 40, 25)
+        + _tags(NM=2, YT="CP") + ("ACGTT", []),
+        ("b3", 4, "*", 0, 0, 0, "*", "*", 0, 0) + _tags() + ("GGG", [0, 0, 0]),
+    ]
