@@ -129,12 +129,13 @@ def _fastx_records(
     removed; FASTQ quality spans lines until len(qual) == len(seq).
     ``strict_fourline`` (split scans) rejects blank lines and multi-line
     FASTQ records, which the boundary probe and the count pass both
-    assume away."""
+    assume away; blank lines before the first header are skipped."""
+    is_fastq = False
     line, owned = next(lines, _EOF)
     while line:
         s = line.rstrip(b"\r\n")
         if not s:
-            if strict_fourline:
+            if strict_fourline and is_fastq:
                 raise FastxError(
                     "blank line in FASTQ: split mode requires strict "
                     "4-line records — pass max_split_bytes=None"

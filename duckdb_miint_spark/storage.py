@@ -34,16 +34,11 @@ from pyspark.sql import DataFrame, SparkSession
 # Table property carrying the layout identity of a bucketed graft table.
 FINGERPRINT_PROP = "graft.fingerprint"
 # Table property carrying the per-file source signature the table was
-# built from — the manifest incremental refresh diffs against.
+# built from — the manifest incremental refresh diffs against, and the
+# write-ahead marker of an append: unset before any row lands, set again
+# only by the commit, so a table without it (a failed append may have
+# landed part of its delta) is rebuilt, never appended to.
 SRC_SIG_PROP = "graft.src_sig"
-# Write-ahead marker for an in-flight incremental append (ADVICE r12):
-# set to the target source signature BEFORE rows are appended, cleared
-# only after the append committed AND fingerprint/src_sig advanced. A
-# refresh that finds this marker still set cannot know whether the prior
-# append landed zero, some, or all of its rows (saveAsTable append is
-# not atomic across part files), so it dispositions the table to a full
-# rebuild instead of re-deriving the same delta and serving duplicates.
-PENDING_PROP = "graft.pending_append"
 # Table property recording the materialized row count at write time (a
 # parquet metadata count — free at any scale). Serving uses it to plan
 # TINY grains as a single partition: the dim-sized rollup re-merges
@@ -61,8 +56,8 @@ GRAIN_ROWS_PROP = "graft.grain_rows"
 # sets ``tiny_serve=False`` are always served parallel.
 TINY_GRAIN_ROWS = 200_000
 # Files per bucket past which refresh_graft_layout compacts a table it
-# just appended to (its ``compact_threshold`` default): each append adds
-# one file per bucket, so this bounds small files at ~8 batches.
+# just appended to: each append adds one file per bucket, so this bounds
+# small files at ~8 batches.
 COMPACT_FILES = 8
 
 
@@ -570,6 +565,13 @@ def _location_census(loc: str) -> dict[int, int]:
     return out
 
 
+def _over_files(loc: str, max_files: int) -> bool:
+    """Whether any bucket under ``loc`` holds more than ``max_files``
+    data files — the one compaction trigger."""
+    census = _location_census(loc)
+    return bool(census) and max(census.values()) > max_files
+
+
 def _compact_table(spark: SparkSession, table: str, g: Graft) -> str:
     """Rewrite one graft table's buckets back to a single sorted file
     each, preserving content, bucket spec, and the fingerprint/manifest
@@ -608,7 +610,6 @@ def _compact_table(spark: SparkSession, table: str, g: Graft) -> str:
 def compact_graft_layout(
     spark: SparkSession,
     tables: list[str] | None = None,
-    max_files_per_bucket: int = 1,
 ) -> dict[str, str]:
     """Threshold-triggered per-table compaction — the piece that closes
     the append-refresh lifecycle at 100 TB (VERDICT r12 #1). Incremental
@@ -618,31 +619,29 @@ def compact_graft_layout(
     scan only reports its sort order to the planner when every bucket is
     one file, so multi-file buckets re-insert per-task Sorts under every
     order-consuming window/SMJ). This is the LSM compaction analogue:
-    amortized, per-table, triggered when ``bucket_file_census`` exceeds
-    ``max_files_per_bucket``.
+    amortized, per-table, triggered when any bucket holds more than one
+    file.
 
     Returns {table: "compacted" | "current" | "absent"}. Callable
-    standalone (maintenance window) and invoked automatically by
-    ``refresh_graft_layout`` past its own threshold."""
+    standalone (maintenance window); ``refresh_graft_layout`` runs the
+    same trigger at :data:`COMPACT_FILES` files per bucket."""
     out: dict[str, str] = {}
     for name, g in _selected(tables).items():
         meta = table_meta(spark, name)
         if meta is None:
             out[name] = "absent"
-            continue
-        census = _location_census(meta.location)
-        if not census or max(census.values()) <= max_files_per_bucket:
+        elif _over_files(meta.location, 1):
+            out[name] = _compact_table(spark, name, g)
+        else:
             out[name] = "current"
-            continue
-        out[name] = _compact_table(spark, name, g)
     return out
 
 
-def _append_delta(stored_sig: str, current_sig: str, fact: str) -> list[str] | None:
+def _append_delta(stored_sig: str | None, current_sig: str, fact: str) -> list[str] | None:
     """Filenames newly appended under ``{fact}.parquet/`` between the two
-    signatures, or None when the change is not a pure fact append (an
-    existing file mutated/removed, a non-fact source changed, or the
-    fact is single-file — all force a rebuild)."""
+    signatures, or None when the change is not a pure fact append (no
+    stored manifest, an existing file mutated/removed, a non-fact source
+    changed, or the fact is single-file — all force a rebuild)."""
     stored = set(stored_sig.split(";")) if stored_sig else set()
     current = set(current_sig.split(";")) if current_sig else set()
     if not stored or not stored <= current:
@@ -665,7 +664,6 @@ def refresh_graft_layout(
     sf_dir: str,
     n_buckets: int | None = None,
     tables: list[str] | None = None,
-    compact_threshold: int | None = None,
 ) -> dict[str, str]:
     """Incrementally maintain the graft layout after source changes —
     the 100 TB operating mode (VERDICT r11 #3): a production deployment
@@ -682,26 +680,23 @@ def refresh_graft_layout(
       files are NOT rewritten). Buckets gain a second file, which drops
       the sorted-single-file scan fast path until a compaction rebuild —
       plans stay exchange-free, Spark adds a local sort where needed.
+    - ``"appended+compacted"`` — appended, then compacted in place
+      because some bucket held more than :data:`COMPACT_FILES` files
+      (LSM-style: file counts stay bounded under continuous ingest).
     - ``"rebuilt"``  — any other drift (mutated/removed files, non-fact
-      source change, non-appendable derivation): full rewrite, exactly
-      ``build_graft_layout``.
+      source change, non-appendable derivation, a table without its
+      manifest): full rewrite, exactly ``build_graft_layout``.
 
     The per-file manifest diffed against is the ``graft.src_sig`` table
-    property every write stores; the fingerprint property is updated to
-    the new source set afterwards, so serving stays all-or-nothing.
+    property every write stores. An append unsets it and the fingerprint
+    (one ALTER), writes the rows, then commits both and the grain (one
+    ALTER): a failure in between leaves a table that is not served and
+    is rebuilt by the next refresh, never a partial delta served twice.
 
     The table's properties, bucket count and location come from one
-    catalog read (:func:`table_meta`) taken before any of its ALTERs.
-
-    ``compact_threshold`` (default :data:`COMPACT_FILES`):
-    after an append leaves any bucket holding more than this many files,
-    that table is compacted in place (action ``"appended+compacted"``) —
-    the LSM-style amortization that keeps file counts bounded and the
-    sorted-single-file scan fast path recoverable under continuous
-    ingest. 0 disables auto-compaction."""
+    catalog read (:func:`table_meta`) taken before any of its ALTERs."""
     grafts = _selected(tables)
     n_buckets = n_buckets if n_buckets is not None else _default_buckets(spark)
-    compact_files = compact_threshold if compact_threshold is not None else COMPACT_FILES
     out: dict[str, str] = {}
     # {(fact, new files): slice DataFrame} — grafts sharing a fact and a
     # delta read the new slice once
@@ -710,92 +705,80 @@ def refresh_graft_layout(
         for name, g in grafts.items():
             fp = graft_fingerprint(sf_dir, g.identity, g.sources)
             meta = table_meta(spark, name)  # the one catalog read per graft
-            pending = meta and meta.prop(PENDING_PROP)
             if meta and meta.prop(FINGERPRINT_PROP) == fp:
-                # fingerprint only advances AFTER an append commits, so a
-                # pending marker surviving alongside a current fingerprint
-                # is stale (crash between the final two ALTERs) — clear it
-                if pending:
-                    spark.sql(
-                        f"ALTER TABLE `{name}` UNSET TBLPROPERTIES IF EXISTS "
-                        f"('{PENDING_PROP}')"
-                    )
                 out[name] = "current"
                 continue
             cur_sig = source_signature(sf_dir, g.sources)
             stored_sig = meta and meta.prop(SRC_SIG_PROP)
-            # A leftover write-ahead marker means a prior refresh crashed
-            # between appending rows and advancing src_sig — the table may
-            # already hold part of this delta, so appending again would
-            # serve duplicates. Ambiguous provenance → full rebuild.
-            new_files = (
-                _append_delta(stored_sig, cur_sig, g.fact)
-                if g.appendable and stored_sig and not pending
-                else None
-            )
+            new_files = _append_delta(stored_sig, cur_sig, g.fact) if g.appendable else None
             existing_buckets = meta.n_buckets if new_files is not None else None
-            if existing_buckets:
-                key = (g.fact, tuple(new_files))
-                if key not in slices:
-                    slices[key] = spark.read.parquet(
-                        *(os.path.join(sf_dir, f"{g.fact}.parquet", f) for f in new_files)
-                    )
-                # shadow the fact view with ONLY the new slice: the
-                # derivation over it is exactly the rows to append
-                slices[key].createOrReplaceTempView(g.fact)
-                try:
-                    # appendable builder grafts (row-wise derivations like
-                    # tokenize-at-ingest) run their builder over the
-                    # shadowed new-slice view, same as the SQL grafts
-                    df = g.derive(spark, sf_dir)
-                    # write-ahead: mark the delta as in-flight BEFORE any
-                    # row lands, so a crash anywhere below is detected
-                    spark.sql(
-                        f"ALTER TABLE `{name}` SET TBLPROPERTIES "
-                        f"('{PENDING_PROP}'='{cur_sig}')"
-                    )
-                    (
-                        df.repartition(existing_buckets, *g.bucket_cols)
-                        .write.mode("append")
-                        .format("parquet")
-                        .bucketBy(existing_buckets, *g.bucket_cols)
-                        .sortBy(*(g.sort_cols or g.bucket_cols))
-                        .saveAsTable(name)
-                    )
-                finally:
-                    views[g.fact].createOrReplaceTempView(g.fact)
-                try:
-                    grain_rows = spark.table(name).count()  # metadata count
-                except AnalysisException:  # table dropped under us
-                    grain_rows = None
-                spark.sql(
-                    f"ALTER TABLE `{name}` SET TBLPROPERTIES "
-                    f"('{FINGERPRINT_PROP}'='{fp}', '{SRC_SIG_PROP}'='{cur_sig}'"
-                    + (
-                        f", '{GRAIN_ROWS_PROP}'='{grain_rows}'"
-                        if grain_rows is not None
-                        else ""
-                    )
-                    + ")"
+            if not existing_buckets:
+                _rebuild(spark, sf_dir, name, g, n_buckets)
+                out[name] = "rebuilt"
+                continue
+            key = (g.fact, tuple(new_files))
+            if key not in slices:
+                slices[key] = spark.read.parquet(
+                    *(os.path.join(sf_dir, f"{g.fact}.parquet", f) for f in new_files)
                 )
+            # shadow the fact view with ONLY the new slice: the
+            # derivation over it is exactly the rows to append
+            slices[key].createOrReplaceTempView(g.fact)
+            try:
+                # appendable builder grafts (row-wise derivations like
+                # tokenize-at-ingest) run their builder over the
+                # shadowed new-slice view, same as the SQL grafts
+                df = g.derive(spark, sf_dir)
+                # write-ahead: drop the manifest (and stop serving) before
+                # any row lands; only the commit below sets it again
                 spark.sql(
                     f"ALTER TABLE `{name}` UNSET TBLPROPERTIES IF EXISTS "
-                    f"('{PENDING_PROP}')"
+                    f"('{SRC_SIG_PROP}', '{FINGERPRINT_PROP}')"
                 )
-                census = _location_census(meta.location)
-                if (
-                    compact_files > 0
-                    and census
-                    and max(census.values()) > compact_files
-                ):
-                    _compact_table(spark, name, g)
-                    out[name] = "appended+compacted"
-                else:
-                    out[name] = "appended"
-                continue
-            _rebuild(spark, sf_dir, name, g, n_buckets)
-            out[name] = "rebuilt"
+                _save_bucketed(df, name, existing_buckets, g.bucket_cols, g.sort_cols, "append")
+            finally:
+                views[g.fact].createOrReplaceTempView(g.fact)
+            _commit(spark, name, fp, cur_sig)
+            if _over_files(meta.location, COMPACT_FILES):
+                _compact_table(spark, name, g)
+                out[name] = "appended+compacted"
+            else:
+                out[name] = "appended"
     return out
+
+
+def _save_bucketed(
+    df: DataFrame, table: str, n_buckets: int, bucket_cols, sort_cols, mode: str
+) -> None:
+    """The one bucketed write: ``df`` hash-partitioned into ``n_buckets``
+    on ``bucket_cols`` and saved to ``table`` as one sorted file per
+    (task, bucket), in save ``mode`` (``overwrite`` builds, ``append``
+    adds a batch to the existing buckets)."""
+    (
+        df.repartition(n_buckets, *bucket_cols)
+        .write.mode(mode)
+        .format("parquet")
+        .bucketBy(n_buckets, *bucket_cols)
+        .sortBy(*(sort_cols or bucket_cols))
+        .saveAsTable(table)
+    )
+
+
+def _commit(
+    spark: SparkSession, table: str, fingerprint: str | None, src_sig: str | None
+) -> None:
+    """Stamp a written table in one ALTER: its fingerprint and source
+    manifest (when given) and its materialized row count, a parquet
+    metadata count (no data scan) that drives the tiny-grain
+    single-partition serving decision."""
+    props = {FINGERPRINT_PROP: fingerprint, SRC_SIG_PROP: src_sig}
+    try:
+        props[GRAIN_ROWS_PROP] = spark.table(table).count()
+    except AnalysisException:  # table dropped under us: no hint
+        pass
+    stamped = ", ".join(f"'{k}'='{v}'" for k, v in props.items() if v is not None)
+    if stamped:
+        spark.sql(f"ALTER TABLE `{table}` SET TBLPROPERTIES ({stamped})")
 
 
 def write_bucketed(
@@ -817,39 +800,8 @@ def write_bucketed(
     survive, and saveAsTable refuses to reuse the location)."""
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS `{table}`")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-    wh_path = None
-    if warehouse.startswith("file:"):
-        wh_path = warehouse[len("file:"):]
-    elif "://" not in warehouse:
-        wh_path = warehouse
-    if wh_path:
-        stale = os.path.join(wh_path, table.lower())
-        if os.path.exists(stale):
-            shutil.rmtree(stale, ignore_errors=True)
-
-    bucket_cols = list(bucket_cols)
-    sort_cols = list(sort_cols) if sort_cols else bucket_cols
-    writer = (
-        df.repartition(n_buckets, *bucket_cols)
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*sort_cols)
-    )
-    writer.saveAsTable(table)
-    props = []
-    if fingerprint is not None:
-        props.append(f"'{FINGERPRINT_PROP}'='{fingerprint}'")
-    if src_sig is not None:
-        props.append(f"'{SRC_SIG_PROP}'='{src_sig}'")
-    # materialized row count (parquet metadata count — no data scan):
-    # drives the tiny-grain single-partition serving decision
-    try:
-        props.append(f"'{GRAIN_ROWS_PROP}'='{spark.table(table).count()}'")
-    except AnalysisException:  # table dropped under us: no hint
-        pass
-    if props:
-        spark.sql(
-            f"ALTER TABLE `{table}` SET TBLPROPERTIES ({', '.join(props)})"
-        )
+    warehouse = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
+    if warehouse and "://" not in warehouse:
+        shutil.rmtree(os.path.join(warehouse, table.lower()), ignore_errors=True)
+    _save_bucketed(df, table, n_buckets, bucket_cols, sort_cols, "overwrite")
+    _commit(spark, table, fingerprint, src_sig)

@@ -9,8 +9,9 @@ file-layout rewrite preserving content + fingerprint/manifest. These
 tests drive the full loop: K appends → compaction fires once → bucket
 file count back to 1 → plans regain the no-sort fast path
 (plan-asserted) → all gates still green and a further refresh is a
-no-op. The crash tests prove a half-finished append can never serve
-duplicated rows: the write-ahead marker dispositions it to a rebuild.
+no-op. The crash test proves a half-finished append can never serve
+duplicated rows: the append drops the table's source manifest before
+any row lands, so a failed append is rebuilt.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from tests.test_refresh import (
     _append_events_file,
     _events_hourly_plain,
     _make_sf_dir,
+    _record_sql,
     _warehouse_files,
 )
 
@@ -82,9 +84,8 @@ def test_compaction_lifecycle(graft_session, tmp_path):
 
     for i in range(3):
         _append_batch(sf, i, n=100 + i)
-        actions = refresh_graft_layout(
-            spark, sf, 4, tables=REFRESH_TABLES, compact_threshold=0
-        )
+        # 4 files per bucket at most: under COMPACT_FILES, no auto-compaction
+        actions = refresh_graft_layout(spark, sf, 4, tables=REFRESH_TABLES)
         assert actions == {t: "appended" for t in REFRESH_TABLES}, actions
 
     for t in REFRESH_TABLES:
@@ -111,10 +112,11 @@ def test_compaction_lifecycle(graft_session, tmp_path):
     }
 
 
-def test_refresh_auto_compaction(graft_session, tmp_path):
+def test_refresh_auto_compaction(graft_session, tmp_path, monkeypatch):
     """refresh_graft_layout fires compaction itself past the threshold
     (the continuous-ingest loop needs no external maintenance call)."""
     spark = graft_session
+    from duckdb_miint_spark import storage
     from duckdb_miint_spark.storage import (
         bucket_file_census,
         build_graft_layout,
@@ -124,11 +126,10 @@ def test_refresh_auto_compaction(graft_session, tmp_path):
     sf = _make_sf_dir(tmp_path)
     build_graft_layout(spark, sf, 4, tables=REFRESH_TABLES)
     seen_compact = False
+    monkeypatch.setattr(storage, "COMPACT_FILES", 2)
     for i in range(3):
         _append_batch(sf, i, n=100 + i)
-        actions = refresh_graft_layout(
-            spark, sf, 4, tables=REFRESH_TABLES, compact_threshold=2
-        )
+        actions = refresh_graft_layout(spark, sf, 4, tables=REFRESH_TABLES)
         assert set(actions.values()) <= {"appended", "appended+compacted"}, actions
         seen_compact = seen_compact or "appended+compacted" in actions.values()
     assert seen_compact
@@ -204,61 +205,67 @@ def test_compaction_restores_sort_free_plan(spark):
         spark.sql("DROP TABLE IF EXISTS cmp_right")
 
 
-def test_pending_append_marker_forces_rebuild(graft_session, tmp_path):
-    """ADVICE r12 (medium): a refresh that crashed between appending
-    rows and advancing src_sig leaves the write-ahead marker set; the
-    next refresh must NOT re-append the same delta (duplicate rows) —
-    ambiguous provenance dispositions to a full rebuild, after which the
-    served gate equals the plain derivation."""
+def test_failed_append_forces_rebuild(graft_session, tmp_path, monkeypatch):
+    """An append that fails after its rows landed (saveAsTable append is
+    not atomic across part files) leaves the table without its source
+    manifest and fingerprint: the graft is not served, not even once
+    the sources are back to what it was built from, and the next
+    refresh rebuilds it instead of appending the same delta twice."""
     spark = graft_session
+    from pyspark.sql import DataFrameWriter
+
     from duckdb_miint_spark.registry import load_all
-    from duckdb_miint_spark.storage import (
-        PENDING_PROP,
-        build_graft_layout,
-        refresh_graft_layout,
-    )
+    from duckdb_miint_spark.storage import build_graft_layout, refresh_graft_layout, serve
 
     sf = _make_sf_dir(tmp_path)
     build_graft_layout(spark, sf, 4, tables=REFRESH_TABLES)
-    _append_events_file(sf)
-    # simulate the crash window: marker set (as the append branch does
-    # before any row lands), delta not yet absorbed into src_sig
+    built = {t: spark.table(t).count() for t in REFRESH_TABLES}
+    new_file = _append_events_file(sf)
+    real_save = DataFrameWriter.saveAsTable
+
+    def lands_then_fails(self, name, *args, **kwargs):
+        real_save(self, name, *args, **kwargs)
+        raise RuntimeError(f"executor lost after writing {name}")
+
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", lands_then_fails)
     for t in REFRESH_TABLES:
-        spark.sql(
-            f"ALTER TABLE `{t}` SET TBLPROPERTIES ('{PENDING_PROP}'='crashed')"
-        )
+        with pytest.raises(RuntimeError, match=f"after writing {t}"):
+            refresh_graft_layout(spark, sf, 4, tables=[t])
+        assert spark.table(t).count() > built[t]  # part of the delta landed
+        assert serve(spark, sf, t) is None
+    monkeypatch.undo()
+    # sources back to the built state: the partial delta is still not served
+    moved = str(tmp_path / "moved.parquet")
+    os.rename(new_file, moved)
+    assert [t for t in REFRESH_TABLES if serve(spark, sf, t) is not None] == []
+    os.rename(moved, new_file)
+
     actions = refresh_graft_layout(spark, sf, 4, tables=REFRESH_TABLES)
     assert actions == {t: "rebuilt" for t in REFRESH_TABLES}, actions
     reg = load_all()
     got = sorted(tuple(r) for r in reg["events_hourly"].spark_fn(spark, sf).collect())
     assert got == _events_hourly_plain(spark, sf)
-    # the rebuild cleared the marker: the next delta appends normally
+    # the rebuild restored the manifest: the next delta appends normally
     _append_batch(sf, 1, n=150)
     actions = refresh_graft_layout(spark, sf, 4, tables=REFRESH_TABLES)
     assert actions == {t: "appended" for t in REFRESH_TABLES}, actions
 
 
-def test_stale_pending_marker_cleared_when_current(graft_session, tmp_path):
-    """A marker surviving next to a CURRENT fingerprint (crash between
-    the final two ALTERs) is stale — refresh clears it without touching
-    data, and later appends proceed normally."""
+def test_refresh_of_current_graft_writes_nothing(graft_session, tmp_path, monkeypatch):
+    """A refresh of a current graft writes no file and issues no ALTER,
+    and later appends proceed normally."""
     spark = graft_session
-    from duckdb_miint_spark.storage import (
-        PENDING_PROP,
-        build_graft_layout,
-        refresh_graft_layout,
-        table_meta,
-    )
+    from duckdb_miint_spark.storage import build_graft_layout, refresh_graft_layout
 
     sf = _make_sf_dir(tmp_path)
     build_graft_layout(spark, sf, 4, tables=REFRESH_TABLES)
-    t0 = REFRESH_TABLES[0]
-    spark.sql(f"ALTER TABLE `{t0}` SET TBLPROPERTIES ('{PENDING_PROP}'='stale')")
-    before = _warehouse_files(spark, t0)
+    before = {t: _warehouse_files(spark, t) for t in REFRESH_TABLES}
+    seen = _record_sql(spark, monkeypatch)
     actions = refresh_graft_layout(spark, sf, 4, tables=REFRESH_TABLES)
+    monkeypatch.undo()
     assert actions == {t: "current" for t in REFRESH_TABLES}, actions
-    assert table_meta(spark, t0).prop(PENDING_PROP) is None
-    assert _warehouse_files(spark, t0) == before  # data untouched
+    assert [q for q in seen if q.lstrip().upper().startswith("ALTER")] == []
+    assert {t: _warehouse_files(spark, t) for t in REFRESH_TABLES} == before
     _append_events_file(sf)
     actions = refresh_graft_layout(spark, sf, 4, tables=REFRESH_TABLES)
     assert actions == {t: "appended" for t in REFRESH_TABLES}, actions

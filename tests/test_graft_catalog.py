@@ -44,18 +44,12 @@ def test_serve_and_refresh_issue_no_metadata_statements(layout_on, tmp_path, mon
     compaction check read table metadata through the catalog API: no
     SHOW or DESCRIBE statement reaches spark.sql."""
     from duckdb_miint_spark import storage
+    from tests.test_refresh import _record_sql
 
     spark = layout_on
     sf = _copy_sf(tmp_path)
     storage.build_graft_layout(spark, sf, 2, tables=["graft_b_orders"])
-    seen: list[str] = []
-    real_sql = spark.sql
-
-    def recording(query, *args, **kwargs):
-        seen.append(query)
-        return real_sql(query, *args, **kwargs)
-
-    monkeypatch.setattr(spark, "sql", recording)
+    seen = _record_sql(spark, monkeypatch)
     try:
         assert storage.serve(spark, sf, "graft_b_orders") is not None
         actions = storage.refresh_graft_layout(spark, sf, 2, tables=["graft_b_orders"])
@@ -69,6 +63,40 @@ def test_serve_and_refresh_issue_no_metadata_statements(layout_on, tmp_path, mon
         spark.sql("DROP TABLE IF EXISTS graft_b_orders")
     statements = [q for q in seen if q.lstrip().upper().startswith(("SHOW", "DESCRIBE"))]
     assert statements == [], statements
+
+
+def test_append_issues_two_alters_per_graft(layout_on, tmp_path, monkeypatch):
+    """One appended batch costs each graft two ALTER statements: the
+    write-ahead UNSET of its source manifest and the one commit of
+    fingerprint, manifest and grain. No third property is involved."""
+    from duckdb_miint_spark import storage
+    from tests.test_refresh import (
+        REFRESH_TABLES,
+        _append_events_file,
+        _make_sf_dir,
+        _record_sql,
+    )
+
+    spark = layout_on
+    sf = _make_sf_dir(tmp_path)
+    storage.build_graft_layout(spark, sf, 2, tables=REFRESH_TABLES)
+    _append_events_file(sf)
+    seen = _record_sql(spark, monkeypatch)
+    try:
+        actions = storage.refresh_graft_layout(spark, sf, 2, tables=REFRESH_TABLES)
+        assert actions == {t: "appended" for t in REFRESH_TABLES}, actions
+    finally:
+        monkeypatch.undo()
+        for t in REFRESH_TABLES:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    alters = [q for q in seen if q.lstrip().upper().startswith("ALTER")]
+    for t in REFRESH_TABLES:
+        mine = [q for q in alters if f"`{t}`" in q]
+        assert len(mine) == 2, mine
+        assert "UNSET" in mine[0] and storage.SRC_SIG_PROP in mine[0], mine
+        assert "SET TBLPROPERTIES" in mine[1] and storage.FINGERPRINT_PROP in mine[1], mine
+    assert len(alters) == 2 * len(REFRESH_TABLES), alters
+    assert not [q for q in seen if "pending_append" in q], seen
 
 
 def test_serve_propagates_unexpected_errors(layout_on, tmp_path, monkeypatch):

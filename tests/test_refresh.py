@@ -77,6 +77,20 @@ def _warehouse_files(spark, table: str) -> dict[str, tuple[int, int]]:
     return out
 
 
+def _record_sql(spark, monkeypatch) -> list[str]:
+    """Every statement passed to ``spark.sql`` until the monkeypatch is
+    undone."""
+    seen: list[str] = []
+    real_sql = spark.sql
+
+    def recording(query, *args, **kwargs):
+        seen.append(query)
+        return real_sql(query, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", recording)
+    return seen
+
+
 def _events_hourly_plain(spark, sf_dir: str):
     """The gate's plain derivation, computed directly (no graft)."""
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))

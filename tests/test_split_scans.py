@@ -847,3 +847,76 @@ def test_whole_file_bam_golden(spark, tmp_path):
         + _tags(NM=2, YT="CP") + ("ACGTT", []),
         ("b3", 4, "*", 0, 0, 0, "*", "*", 0, 0) + _tags() + ("GGG", [0, 0, 0]),
     ]
+
+
+def test_fasta_behind_leading_blank_line_splits(spark, tmp_path):
+    """A FASTA file whose first line is blank splits like any FASTA: the
+    plain and the BGZF split scans give the whole-file rows."""
+    body = str(tmp_path / "body.fasta")
+    _write_fasta(body, 1500)
+    plain = str(tmp_path / "lead.fasta")
+    with open(body) as fin, open(plain, "w") as fout:
+        fout.write("\n" + fin.read())
+    bgz = _bgzip(plain, str(tmp_path / "lead.fasta.gz"))
+    whole = _rows(read_fastx(spark, plain))
+    assert len(whole) == 1500
+    plain_split = read_fastx(spark, plain, max_split_bytes=48 * 1024)
+    bgzf_split = read_fastx(spark, bgz, max_split_bytes=32 * 1024)
+    assert plain_split.rdd.getNumPartitions() > 3
+    assert bgzf_split.rdd.getNumPartitions() > 3
+    assert _rows(plain_split) == whole
+    assert _rows(bgzf_split) == whole
+
+
+def _write_loose_fastq(path, n, blank_after=None, multiline=False, seed=31):
+    """FASTQ that only the whole-file grammar accepts: a blank line after
+    record ``blank_after``, or every record wrapped onto two sequence and
+    two quality lines."""
+    rng = random.Random(seed)
+    with open(path, "w") as f:
+        for i in range(n):
+            ln = rng.randint(60, 120)
+            seq = "".join(rng.choice("ACGT") for _ in range(ln))
+            qual = "".join(rng.choice(QUAL_CHARS) for _ in range(ln))
+            if multiline:
+                h = ln // 2
+                f.write(f"@r{i}\n{seq[:h]}\n{seq[h:]}\n+\n{qual[:h]}\n{qual[h:]}\n")
+            else:
+                f.write(f"@r{i}\n{seq}\n+\n{qual}\n")
+            if i == blank_after:
+                f.write("\n")
+    return path
+
+
+@pytest.mark.parametrize(
+    "shape,message",
+    [("blank", "blank line in FASTQ"), ("multiline", "multi-line FASTQ record")],
+)
+def test_loose_fastq_rejects_split_but_reads_whole(spark, tmp_path, shape, message):
+    """The split grammar requires strict 4-line FASTQ records: a blank line
+    between records or a multi-line record raises FastxError on the plain
+    and the BGZF split paths, while the whole-file scan reads the file."""
+    import os
+
+    from duckdb_miint_spark.sources.fastx import iter_fastx_range
+    from duckdb_miint_spark.sources.sam import plan_even_splits
+
+    n = 2000
+    plain = _write_loose_fastq(
+        str(tmp_path / f"{shape}.fastq"), n,
+        blank_after=n // 2 if shape == "blank" else None,
+        multiline=shape == "multiline",
+    )
+    bgz = _bgzip(plain, str(tmp_path / f"{shape}.fastq.gz"))
+    for path, bgzf, ranges in (
+        (plain, False, plan_fastx_splits(plain, 32 * 1024)),
+        (bgz, True, plan_even_splits(bgz, 16 * 1024)),
+    ):
+        if bgzf:
+            assert len(ranges) > 3, ranges
+        with pytest.raises(FastxError, match=message):
+            for s, e in ranges:
+                list(iter_fastx_range(path, s, e, bgzf=bgzf))
+    assert os.path.getsize(bgz) > 16 * 1024
+    assert read_fastx(spark, plain).count() == n
+    assert read_fastx(spark, bgz).count() == n
