@@ -13,8 +13,12 @@ same plan survives a 1000-executor cluster at ~100 TB:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -135,6 +139,20 @@ def get_spark(
         .config("spark.python.daemon.module", "duckdb_miint_spark.worker_daemon")
         .config("spark.ui.enabled", "false")
     )
+    if SparkContext._active_spark_context is None:
+        # Python workers, local-data transfers and accumulator updates talk
+        # to the JVM over Unix domain sockets. On loopback TCP a worker's
+        # first Arrow read waited ~40 ms per task on Nagle's algorithm and
+        # a delayed ACK. Socket files live in a directory this session owns
+        # under /tmp, never under TMPDIR or java.io.tmpdir: a socket path
+        # (sun_path) holds at most 107 bytes, the daemon's socket name is
+        # 42, and a temp dir inside a deep checkout leaves too few (Spark
+        # then fails with "Unix domain path too long").
+        sock_dir = tempfile.mkdtemp(prefix="miint-", dir="/tmp")
+        atexit.register(shutil.rmtree, sock_dir, ignore_errors=True)
+        builder = builder.config("spark.python.unix.domain.socket.enabled", "true").config(
+            "spark.python.unix.domain.socket.dir", sock_dir
+        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -4,12 +4,18 @@ The Spark-free tests drive ``ZipAwareInvalidate`` directly: an unchanged
 zip keeps its parsed directory, while directory finders and rewritten zips
 are still reset. The Spark tests check that a ``get_spark`` session's
 workers run the wrapper and that ``addPyFile`` still reaches warm workers.
+The subprocess tests start a fresh ``get_spark`` session each: its workers
+fork with their imports frozen and reach the JVM over Unix domain sockets,
+whose directory stays short and is removed when the session's process
+exits, however long the temp directory is.
 """
 
 from __future__ import annotations
 
 import importlib
+import json
 import os
+import subprocess
 import sys
 import uuid
 import zipfile
@@ -142,3 +148,95 @@ def test_add_py_file_reaches_warm_workers(spark, tmp_path):
 
     rows = spark.range(0, parts, 1, parts).mapInArrow(load, "value long").collect()
     assert [r.value for r in rows] == [42] * parts
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _run_session(body: str, env: dict[str, str] | None = None) -> dict:
+    """Run ``body`` in a child with ``spark = get_spark(...)`` bound and
+    return the JSON object it prints last."""
+    script = (
+        "import json\n"
+        "from duckdb_miint_spark.session import get_spark\n"
+        "spark = get_spark('test_worker_daemon', cpus=2)\n" + body
+    )
+    child_env = {**os.environ, "PYTHONPATH": REPO, **(env or {})}
+    proc = subprocess.run(
+        [sys.executable, "-c", script], env=child_env, cwd=REPO,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def test_socket_dir_is_short_and_removed_with_a_long_temp_dir(tmp_path):
+    long_tmp = tmp_path / ("deep-" + "t" * 40) / ("checkout-" + "w" * 40) / "tmp"
+    long_tmp.mkdir(parents=True)
+    assert len(str(long_tmp)) > 80
+    out = _run_session(
+        """
+def ident(batches):
+    yield from batches
+
+mapped = spark.range(0, 2, 1, 2).mapInArrow(ident, "id long").toArrow()
+collected = spark.range(0, 3).toArrow()
+print(json.dumps({
+    "sock_dir": spark.conf.get("spark.python.unix.domain.socket.dir"),
+    "mapped": mapped.column("id").to_pylist(),
+    "collected": collected.num_rows,
+}))
+""",
+        env={
+            "TMPDIR": str(long_tmp),
+            "PYSPARK_SUBMIT_ARGS": (
+                f"--driver-java-options '-Djava.io.tmpdir={long_tmp}' pyspark-shell"
+            ),
+        },
+    )
+    assert sorted(out["mapped"]) == [0, 1]
+    assert out["collected"] == 3
+    sock_dir = out["sock_dir"]
+    assert os.path.dirname(sock_dir) == "/tmp"
+    assert os.path.basename(sock_dir).startswith("miint-")
+    assert not os.path.exists(sock_dir)
+
+
+def test_workers_fork_frozen_on_unix_sockets(tmp_path):
+    fq = tmp_path / "reads.fastq"
+    with open(fq, "w") as fh:
+        for i in range(400):
+            fh.write(f"@r{i}\n{'ACGT' * 15}\n+\n{'I' * 60}\n")
+    out = _run_session(
+        f"""
+from duckdb_miint_spark import sources
+
+reads = sources.read_fastx(spark, {str(fq)!r}, max_split_bytes=4096)
+n_splits = reads.rdd.getNumPartitions()
+n_reads = reads.count()
+
+def probe(batches):
+    import gc
+    import os
+
+    import pyarrow as pa
+
+    for _ in batches:
+        yield pa.RecordBatch.from_pylist([{{
+            "frozen": gc.get_freeze_count(),
+            "tracked": len(gc.get_objects()),
+            "uds": os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", ""),
+        }}])
+
+rows = spark.range(0, 2, 1, 2).mapInArrow(
+    probe, "frozen long, tracked long, uds string"
+).collect()
+print(json.dumps({{"splits": n_splits, "reads": n_reads,
+                  "workers": [r.asDict() for r in rows]}}))
+"""
+    )
+    assert out["splits"] > 2 and out["reads"] == 400
+    for worker in out["workers"]:
+        assert worker["frozen"] > 0, worker
+        assert worker["uds"].lower() == "true", worker
+        assert worker["tracked"] < 10_000, worker
