@@ -4,9 +4,10 @@ Each writer formats records as Catalyst string expressions (JVM-side char
 encoding for quality arrays — no Python in the row path) and writes with
 Spark's text sink. Two output modes:
 
-- ``single_file=True`` (default): reference parity — one named file, built
-  by streaming partitions through the driver (fine for export-sized data,
-  documented scale limit; the reference's COPY is likewise one file).
+- ``single_file=True`` (default): reference parity — one named file. One
+  Spark job writes a part file per partition next to it, and the driver
+  joins them in partition order behind the format's head bytes
+  (``fastx_sink.write_joined``; BAM is written the same way).
 - ``single_file=False``: ``path`` becomes a directory of part files,
   written fully distributed with optional gzip codec — the 100 TB shape.
 """

@@ -10,39 +10,27 @@ BGZF is concatenated gzip members whose FEXTRA carries the block size
 all writable with zlib, no htslib needed. Our BAM reader (sources/sam.py)
 and any htslib tool can read the output.
 
-Two write modes (``distributed=`` on :func:`copy_bam`):
-
-- single-writer (default): rows stream through the driver into one BGZF
-  stream — the reference's shape (copy_sam.cpp:285-301).
-- distributed: BGZF members are CONCATENABLE by construction, so in one
-  Spark job each task encodes+compresses its partition's member run (the
-  CPU cost — DEFLATE dominates BAM writing) into a part file in a
-  temporary directory next to ``path``, named by partition and task
-  attempt, and returns ``(partition, file)``. The driver then writes
-  header run + the reported part files in partition order + the EOF
-  member (pure sequential I/O, never holding the file in memory) and
-  removes the temporary directory, whether the write succeeded or not.
-  Only the files of successful attempts are read, so a retried or
-  speculative attempt's leftovers are never concatenated. Record order is
-  partition order then row order — identical to what the single writer
-  sees — so read-back equality holds row-for-row even though block
-  boundaries differ. Part files need a ``path`` directory that every
-  executor can write, as the FASTQ sink's part files do.
+BGZF blocks are concatenable, so the BAM is written like every
+single-file COPY (``fastx_sink.write_joined``): in one Spark job each task
+encodes and compresses its partition's records (the CPU cost — DEFLATE
+dominates BAM writing) into a part file next to ``path``, named by
+partition and task attempt, and returns ``(partition, file)``. The driver
+joins the header run, the reported part files in partition order and the
+EOF block. Only the files of successful attempts are read, so a retried or
+speculative attempt's leftovers are never joined. Part files need a
+``path`` directory that every executor can write.
 """
 
 from __future__ import annotations
 
-import contextlib
 import os
-import shutil
 import struct
-import tempfile
 import zlib
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 
-from duckdb_miint_spark.sinks.fastx_sink import CopyError
+from duckdb_miint_spark.sinks.fastx_sink import CopyError, write_joined
 from duckdb_miint_spark.sinks.sam_sink import MANDATORY
 from duckdb_miint_spark.sources.sam import INT_TAGS, STR_TAGS
 
@@ -71,32 +59,17 @@ def bgzf_compress_block(data: bytes, level: int = 6) -> bytes:
     return header + comp + struct.pack("<II", zlib.crc32(data) & 0xFFFFFFFF, len(data))
 
 
-class BgzfWriter:
-    def __init__(self, fh, level: int = 6, block_size: int = 60000):
-        self.fh = fh
-        self.level = level
-        self.block_size = block_size
-        self.buf = bytearray()
-
-    def write(self, data: bytes) -> None:
-        self.buf.extend(data)
-        while len(self.buf) >= self.block_size:
-            chunk = bytes(self.buf[: self.block_size])
-            del self.buf[: self.block_size]
-            self.fh.write(bgzf_compress_block(chunk, self.level))
-
-    def flush(self) -> None:
-        """Flush the remaining buffer as a final member of THIS run, no
-        EOF —
-        used to close the header run ahead of concatenated partition
-        runs in the distributed writer."""
-        if self.buf:
-            self.fh.write(bgzf_compress_block(bytes(self.buf), self.level))
-            self.buf.clear()
-
-    def close(self) -> None:
-        self.flush()
-        self.fh.write(BGZF_EOF)
+def bgzf_blocks(chunks, level: int = 6, block_size: int = 60000):
+    """BGZF blocks of the concatenated ``chunks``, each holding
+    ``block_size`` uncompressed bytes but the last; no EOF block."""
+    buf = bytearray()
+    for data in chunks:
+        buf += data
+        while len(buf) >= block_size:
+            yield bgzf_compress_block(bytes(buf[:block_size]), level)
+            del buf[:block_size]
+    if buf:
+        yield bgzf_compress_block(bytes(buf), level)
 
 
 def _encode_cigar(cigar: str) -> list[int]:
@@ -164,12 +137,11 @@ def copy_bam(
     reference_lengths: DataFrame | list[tuple[str, int]],
     compression_level: int = 6,
     distributed: bool = False,
-) -> bool:
+) -> None:
     """COPY (df) TO path (FORMAT BAM, COMPRESSION_LEVEL n).
 
-    ``distributed=True`` compresses per partition and concatenates the
-    BGZF member runs on the driver (module docstring); returns whether
-    the distributed path ran (the gate's was_distributed pin)."""
+    ``distributed`` is accepted for existing callers and selects nothing:
+    every BAM is compressed per partition and joined (module docstring)."""
     for c in MANDATORY:
         if c not in df.columns:
             raise CopyError(f"COPY FORMAT BAM requires '{c}' column")
@@ -193,55 +165,17 @@ def copy_bam(
         nb = name.encode() + b"\x00"
         payload += struct.pack("<i", len(nb)) + nb + struct.pack("<i", length)
 
-    if not distributed:
-        with open(path, "wb") as fh:
-            w = BgzfWriter(fh, level=compression_level)
-            w.write(bytes(payload))
-            for row in df.toLocalIterator():
-                w.write(_encode_record(row.asDict(), ref_ids))
-            w.close()
-        return False
+    def write_parts(parts_dir: str) -> list[str]:
+        def write_partition(part, rows):
+            name = os.path.join(parts_dir, f"part-{part:05d}-{TaskContext.get().taskAttemptId()}")
+            records = (_encode_record(r.asDict(), ref_ids) for r in rows)
+            with open(name, "wb") as fh:
+                fh.writelines(bgzf_blocks(records, compression_level))
+            yield part, name
 
-    level = compression_level
-    block_size = 60000  # same uncompressed block target as BgzfWriter
-    parts_dir = tempfile.mkdtemp(
-        prefix=f".{os.path.basename(path)}.parts-",
-        dir=os.path.dirname(os.path.abspath(path)),
-    )
+        # df.rdd runs df's own physical plan, so the record sequence is the
+        # one a collect of df would return, partition by partition
+        written = df.rdd.mapPartitionsWithIndex(write_partition).collect()
+        return [name for _part, name in sorted(written)]
 
-    def _write_partition(part, rows):
-        ctx = TaskContext.get()
-        fname = os.path.join(parts_dir, f"part-{part:05d}-{ctx.taskAttemptId()}")
-        buf = bytearray()
-        with open(fname, "wb") as fh:
-            for row in rows:
-                buf += _encode_record(row.asDict(), ref_ids)
-                while len(buf) >= block_size:
-                    fh.write(bgzf_compress_block(bytes(buf[:block_size]), level))
-                    del buf[:block_size]
-            if buf:
-                fh.write(bgzf_compress_block(bytes(buf), level))
-        yield part, fname
-
-    try:
-        # df.rdd runs df's own physical plan — the one toLocalIterator
-        # runs for the single writer — so both writers see one record
-        # sequence even where a plan is not deterministic across
-        # re-planning (a range repartition samples its bounds per plan)
-        written = dict(df.rdd.mapPartitionsWithIndex(_write_partition).collect())
-        try:
-            with open(path, "wb") as fh:
-                w = BgzfWriter(fh, level=compression_level)
-                w.write(bytes(payload))
-                w.flush()  # header member run closed; partition runs follow
-                for part in sorted(written):
-                    with open(written[part], "rb") as src:
-                        shutil.copyfileobj(src, fh, 1 << 20)
-                fh.write(BGZF_EOF)
-        except BaseException:
-            with contextlib.suppress(OSError):
-                os.remove(path)
-            raise
-    finally:
-        shutil.rmtree(parts_dir, ignore_errors=True)
-    return True
+    write_joined(path, write_parts, b"".join(bgzf_blocks([payload], compression_level)), BGZF_EOF)

@@ -14,8 +14,11 @@ Options (reference names):
 
 from __future__ import annotations
 
+import contextlib
 import gzip
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -61,21 +64,61 @@ def _header_col(idc: Column, df: DataFrame, include_comment: bool, sigil: str) -
     return F.concat(F.lit(sigil), idc)
 
 
-def _write_text(records: DataFrame, path: str, compression: str, single_file: bool) -> None:
-    """records has one string column 'record' (may contain newlines)."""
+def write_joined(path: str, write_parts, head: bytes = b"", tail: bytes = b"") -> None:
+    """Write one named file as ``head`` + part files + ``tail``.
+
+    ``write_parts(parts_dir)`` runs one Spark job that writes a part file
+    per partition into ``parts_dir``, a temporary directory next to
+    ``path``, and returns the files in partition order. The driver only
+    concatenates them (gzip members and BGZF blocks are concatenable), and
+    the temporary directory is removed whether the write succeeds or not.
+    A missing parent directory of ``path`` is created."""
+    out_dir = os.path.dirname(os.path.abspath(path))
+    os.makedirs(out_dir, exist_ok=True)
+    parts_dir = tempfile.mkdtemp(prefix=f".{os.path.basename(path)}.parts-", dir=out_dir)
+    try:
+        parts = write_parts(parts_dir)
+        try:
+            with open(path, "wb") as fh:
+                fh.write(head)
+                for part in parts:
+                    with open(part, "rb") as src:
+                        shutil.copyfileobj(src, fh, 1 << 20)
+                fh.write(tail)
+        except BaseException:
+            with contextlib.suppress(OSError):
+                os.remove(path)
+            raise
+    finally:
+        shutil.rmtree(parts_dir, ignore_errors=True)
+
+
+def _write_text(
+    records: DataFrame, path: str, compression: str, single_file: bool, head: bytes = b""
+) -> None:
+    """records has one string column 'record' (may contain newlines).
+
+    ``single_file=False`` leaves Spark's part files in the directory
+    ``path``; otherwise they are joined into the one file ``path`` behind
+    ``head`` (compressed as its own gzip member when the output is gzip)."""
+    w = records.write.mode("overwrite")
+    if compression == "gzip":
+        w = w.option("compression", "gzip")
     if not single_file:
-        w = records.write.mode("overwrite")
-        if compression == "gzip":
-            w = w.option("compression", "gzip")
         w.text(path)
         return
-    # reference parity: one named file; stream partitions through the driver
-    opener = gzip.open if compression == "gzip" else open
-    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-    with opener(path, "wt") as f:
-        for row in records.toLocalIterator():
-            f.write(row["record"])
-            f.write("\n")
+
+    def write_parts(parts_dir: str) -> list[str]:
+        w.text(parts_dir)
+        # part-<partition>-<job uuid>-c<file>; only partitions with rows
+        # (or partition 0 of an empty input) have one
+        names = [n for n in os.listdir(parts_dir) if n.startswith("part-")]
+        names.sort(key=lambda n: (int(n.split("-")[1]), n))
+        return [os.path.join(parts_dir, n) for n in names]
+
+    if head and compression == "gzip":
+        head = gzip.compress(head, mtime=0)
+    write_joined(path, write_parts, head)
 
 
 def _resolve_compression(path: str, compression: str | None) -> str:

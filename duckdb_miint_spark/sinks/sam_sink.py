@@ -6,9 +6,8 @@ header = ``@SQ`` lines from a REFERENCE_LENGTHS relation (required when
 INCLUDE_HEADER, copy_sam.cpp:292-301); int tags emitted as ``XX:i:``,
 string tags as ``XX:Z:`` when non-NULL.
 
-BAM output needs a BGZF writer + binary records behind a single header —
-a true single-writer format; exposed here as SAM + gzip compression (the
-text path), with BAM noted as a driver-side extension point.
+A single-file SAM is Spark's text part files joined behind the header
+(``fastx_sink.write_joined``); BAM is ``bam_sink.copy_bam``.
 """
 
 from __future__ import annotations
@@ -86,20 +85,17 @@ def copy_sam(
         record = F.concat(record, *tag_cols)
     recs = df.select(record.alias("record"))
 
+    head = b""
     if include_header:
-        if isinstance(reference_lengths, DataFrame):
-            refs = [(r[0], int(r[1])) for r in reference_lengths.collect()]
-        else:
-            refs = list(reference_lengths)
-        header_rows = [(f"@SQ\tSN:{name}\tLN:{length}",) for name, length in refs]
         if not single_file:
             raise CopyError(
                 "INCLUDE_HEADER requires single_file output (a header cannot "
                 "prefix a distributed part-file set); write headerless parts "
                 "or use single_file=True"
             )
-        spark = df.sparkSession
-        header_df = spark.createDataFrame(header_rows, ["record"])
-        # header first, then records: union keeps the driver-side stream order
-        recs = header_df.unionByName(recs)
-    _write_text(recs, path, compression, single_file)
+        if isinstance(reference_lengths, DataFrame):
+            refs = [(r[0], int(r[1])) for r in reference_lengths.collect()]
+        else:
+            refs = list(reference_lengths)
+        head = "".join(f"@SQ\tSN:{name}\tLN:{length}\n" for name, length in refs).encode()
+    _write_text(recs, path, compression, single_file, head)

@@ -114,12 +114,11 @@ def materialize_bgzf(text: str, suffix: str) -> str:
     os.makedirs(d, exist_ok=True)
     path = os.path.join(d, f"synth_{digest}{suffix}.gz")
     if not os.path.exists(path):
-        from duckdb_miint_spark.sinks.bam_sink import BgzfWriter
+        from duckdb_miint_spark.sinks.bam_sink import BGZF_EOF, bgzf_blocks
 
         tmp = f"{path}.tmp.{os.getpid()}"
         with open(tmp, "wb") as fh:
-            w = BgzfWriter(fh, level=4)
-            w.write(text.encode("ascii"))
-            w.close()
+            fh.writelines(bgzf_blocks([text.encode("ascii")], level=4))
+            fh.write(BGZF_EOF)
         os.replace(tmp, path)
     return path

@@ -22,7 +22,7 @@ from duckdb_miint_spark.operators.rype import (
     ry_kmer_hashes,
     strand_minimizers,
 )
-from duckdb_miint_spark.sinks.bam_sink import BGZF_EOF, BgzfWriter
+from duckdb_miint_spark.sinks.bam_sink import BGZF_EOF, bgzf_blocks
 from duckdb_miint_spark.sources.newick import parse_newick
 
 cigar_ops = st.lists(
@@ -113,9 +113,8 @@ def test_bgzf_roundtrip(payload):
     """BGZF output must decompress to the input through plain gzip
     (multi-member) regardless of block boundaries."""
     bio = io.BytesIO()
-    w = BgzfWriter(bio, level=4, block_size=7_000)
-    w.write(payload)
-    w.close()
+    bio.writelines(bgzf_blocks([payload], level=4, block_size=7_000))
+    bio.write(BGZF_EOF)
     blob = bio.getvalue()
     assert blob.endswith(BGZF_EOF)
     assert gzip.decompress(blob) == payload

@@ -214,7 +214,7 @@ def test_bam_split_with_sequences(spark, tmp_path):
     (hand-packed — the repo's BAM sink omits SEQ by reference parity)."""
     import struct
     from duckdb_miint_spark.sources.sam import read_alignments
-    from duckdb_miint_spark.sinks.bam_sink import BgzfWriter
+    from duckdb_miint_spark.sinks.bam_sink import BGZF_EOF, bgzf_blocks
 
     NT16 = {c: i for i, c in enumerate("=ACMGRSVTWYHKDBN")}
     rng = random.Random(17)
@@ -242,9 +242,8 @@ def test_bam_split_with_sequences(spark, tmp_path):
         ) + name + cigar + bytes(packed) + qual
         payload += struct.pack("<i", len(body)) + body
     with open(path, "wb") as fh:
-        w = BgzfWriter(fh, level=1)
-        w.write(bytes(payload))
-        w.close()
+        fh.writelines(bgzf_blocks([bytes(payload)], level=1))
+        fh.write(BGZF_EOF)
 
     whole = read_alignments(spark, path, include_seq_qual=True)
     split = read_alignments(
@@ -261,16 +260,15 @@ def test_bgzf_block_finder(tmp_path):
     from duckdb_miint_spark.sources.sam import (
         find_bgzf_block, _BgzfStream, read_alignments,
     )
-    from duckdb_miint_spark.sinks.bam_sink import BgzfWriter
+    from duckdb_miint_spark.sinks.bam_sink import BGZF_EOF, bgzf_blocks
 
     path = str(tmp_path / "blocks.bam.gz")
     import random as _r
     rng = _r.Random(9)
     payload = bytes(rng.randrange(256) for _ in range(300_000))
     with open(path, "wb") as fh:
-        w = BgzfWriter(fh, level=1)
-        w.write(payload)
-        w.close()
+        fh.writelines(bgzf_blocks([payload], level=1))
+        fh.write(BGZF_EOF)
     size = os.path.getsize(path)
     # offset 0 is a block start
     assert find_bgzf_block(path, 0) == 0
@@ -315,12 +313,11 @@ def test_split_with_filepath_and_glob(spark, tmp_path):
 
 
 def _bgzip(src_path, dst_path, level=1):
-    from duckdb_miint_spark.sinks.bam_sink import BgzfWriter
+    from duckdb_miint_spark.sinks.bam_sink import BGZF_EOF, bgzf_blocks
 
     with open(src_path, "rb") as fin, open(dst_path, "wb") as fout:
-        w = BgzfWriter(fout, level=level)
-        w.write(fin.read())
-        w.close()
+        fout.writelines(bgzf_blocks([fin.read()], level=level))
+        fout.write(BGZF_EOF)
     return dst_path
 
 
@@ -670,7 +667,7 @@ def test_truncated_bam_raises_in_whole_and_split_scans(tmp_path):
     from the whole-file scan and from the split scan alike."""
     import struct
 
-    from duckdb_miint_spark.sinks.bam_sink import BgzfWriter
+    from duckdb_miint_spark.sinks.bam_sink import BGZF_EOF, bgzf_blocks
     from duckdb_miint_spark.sources.sam import (
         SamError,
         _BgzfStream,
@@ -689,9 +686,9 @@ def test_truncated_bam_raises_in_whole_and_split_scans(tmp_path):
         payload += struct.pack("<i", len(body)) + body
     full = str(tmp_path / "full.bam")
     with open(full, "wb") as fh:
-        w = BgzfWriter(fh, level=1, block_size=7001)  # block ends fall mid-record
-        w.write(bytes(payload))
-        w.close()
+        # block ends fall mid-record
+        fh.writelines(bgzf_blocks([bytes(payload)], level=1, block_size=7001))
+        fh.write(BGZF_EOF)
     blocks = []
     s = _BgzfStream(full, 0)
     while s._load_next_block():
@@ -745,12 +742,11 @@ def test_whole_file_fastq_golden(spark, tmp_path, codec):
     elif codec == "gzip":
         open(path, "wb").write(gzip.compress(text))
     else:
-        from duckdb_miint_spark.sinks.bam_sink import BgzfWriter
+        from duckdb_miint_spark.sinks.bam_sink import BGZF_EOF, bgzf_blocks
 
         with open(path, "wb") as fh:
-            w = BgzfWriter(fh, level=1, block_size=20)  # records span blocks
-            w.write(text)
-            w.close()
+            fh.writelines(bgzf_blocks([text], level=1, block_size=20))  # records span blocks
+            fh.write(BGZF_EOF)
     rows = [tuple(r) for r in read_fastx(spark, path).collect()]
     assert rows == _fastq_golden_rows()
 
@@ -807,7 +803,7 @@ def test_whole_file_bam_golden(spark, tmp_path):
     several BGZF blocks."""
     import struct
 
-    from duckdb_miint_spark.sinks.bam_sink import BgzfWriter
+    from duckdb_miint_spark.sinks.bam_sink import BGZF_EOF, bgzf_blocks
     from duckdb_miint_spark.sources.sam import read_alignments
 
     nt16 = {c: i for i, c in enumerate("=ACMGRSVTWYHKDBN")}
@@ -836,9 +832,9 @@ def test_whole_file_bam_golden(spark, tmp_path):
     payload += record("b3", -1, -1, 0, [], 4, "GGG", bytes(3), -1, -1, 0, b"")
     path = str(tmp_path / "g.bam")
     with open(path, "wb") as fh:
-        w = BgzfWriter(fh, level=1, block_size=50)  # header and records span blocks
-        w.write(payload)
-        w.close()
+        # header and records span blocks
+        fh.writelines(bgzf_blocks([payload], level=1, block_size=50))
+        fh.write(BGZF_EOF)
     rows = [tuple(r) for r in read_alignments(spark, path, include_seq_qual=True).collect()]
     assert rows == [
         ("b1", 0, "chr1", 10, 15, 60, "5M", "*", 0, 0)
